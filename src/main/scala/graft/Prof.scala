@@ -51,6 +51,23 @@ object Prof {
     def t(name: String): DataFrame =
       graft.sources.EventTime.nanos(spark.read.parquet(s"$sfDir/$name.parquet"))
 
+    // fused-cascade candidate scan alone (stagedump, knnphase)
+    def fusedCands(testSel: DataFrame, trainSel: DataFrame,
+        fk: Int, coarsen: Int): DataFrame = {
+      import graft.functions.SeriesFunctions
+      val spreadTest = graft.operators.Partitioning.spread(testSel)
+      val testSk = spreadTest.withColumn("sk", SeriesFunctions.barrier(
+        SeriesFunctions.paa(col("test_series"), coarsen)))
+      val trainArr = trainSel
+        .withColumn("tsk", SeriesFunctions.paa(col("train_series"), coarsen))
+        .select(col("train_id"), col("tsk"))
+        .agg(collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
+      testSk.crossJoin(broadcast(trainArr))
+        .select(col("test_id"), col("test_series"),
+          SeriesFunctions.barrier(SeriesFunctions.topkScan(
+            col("sk"), col("tarr"), fk)).as("cand_ids"))
+    }
+
     val which = sys.env.getOrElse("PROF", "q37")
 
     if (which.contains("plans")) {
@@ -366,8 +383,6 @@ object Prof {
 
     if (which.contains("stagedump")) {
       // per-stage wall/CPU/task-count dump for one fused-cascade run
-      import graft.functions.SeriesFunctions
-      import graft.operators.Partitioning
       val (train, testAll, _) = SparkEntry.harWorkload(spark, sfDir)
       val testSel = testAll.select(col("test_id"), col("test_series"))
       val trainSel = train.select(col("train_id"), col("train_series"), col("label"))
@@ -383,23 +398,10 @@ object Prof {
         }
       }
       spark.sparkContext.addSparkListener(lsn)
-      def fusedCands(fk: Int, coarsen: Int): DataFrame = {
-        val spreadTest = Partitioning.spread(testSel)
-        val testSk = spreadTest.withColumn("sk", SeriesFunctions.barrier(
-          SeriesFunctions.paa(col("test_series"), coarsen)))
-        val trainArr = trainSel
-          .withColumn("tsk", SeriesFunctions.paa(col("train_series"), coarsen))
-          .select(col("train_id"), col("tsk"))
-          .agg(collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
-        testSk.crossJoin(broadcast(trainArr))
-          .select(col("test_id"), col("test_series"),
-            SeriesFunctions.barrier(SeriesFunctions.topkScan(
-              col("sk"), col("tarr"), fk, "manhattan", -1)).as("cand_ids"))
-      }
       // warm run, then measured run with stage dump
-      noop(fusedCands(40, 8))
+      noop(fusedCands(testSel, trainSel, 40, 8))
       stages.clear()
-      time("q25.cands.measured", 1)(noop(fusedCands(40, 8)))
+      time("q25.cands.measured", 1)(noop(fusedCands(testSel, trainSel, 40, 8)))
       import scala.jdk.CollectionConverters._
       stages.asScala.foreach(s => System.err.println(s"[prof] $s"))
     }
@@ -408,33 +410,19 @@ object Prof {
       // fused-cascade phase attribution (r22): candidate scan alone, +
       // exact phase, + full query
       import graft.functions.SeriesFunctions
-      import graft.operators.Partitioning
       val (train, testAll, _) = SparkEntry.harWorkload(spark, sfDir)
       val testSel = testAll.select(col("test_id"), col("test_series"))
       val trainSel = train.select(col("train_id"), col("train_series"), col("label"))
-      def fusedCands(fk: Int, coarsen: Int): DataFrame = {
-        val spreadTest = Partitioning.spread(testSel)
-        val testSk = spreadTest.withColumn("sk", SeriesFunctions.barrier(
-          SeriesFunctions.paa(col("test_series"), coarsen)))
-        val trainArr = trainSel
-          .withColumn("tsk", SeriesFunctions.paa(col("train_series"), coarsen))
-          .select(col("train_id"), col("tsk"))
-          .agg(collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
-        testSk.crossJoin(broadcast(trainArr))
-          .select(col("test_id"), col("test_series"),
-            SeriesFunctions.barrier(SeriesFunctions.topkScan(
-              col("sk"), col("tarr"), fk, "manhattan", -1)).as("cand_ids"))
-      }
       def exact(c: DataFrame, band: Int): DataFrame = c
         .select(col("test_id"), col("test_series"),
           explode(col("cand_ids")).as("train_id"))
         .join(broadcast(trainSel), "train_id")
         .withColumn("dist", SeriesFunctions.barrier(
           SeriesFunctions.dtw(col("test_series"), col("train_series"), band)))
-      time("q25.cands(fk=40,c=8)", 3)(noop(fusedCands(40, 8)))
-      time("q25.exact(band=8)", 3)(noop(exact(fusedCands(40, 8), 8)))
-      time("q26.cands(fk=16,c=8)", 3)(noop(fusedCands(16, 8)))
-      time("q26.exact(band=56)", 3)(noop(exact(fusedCands(16, 8), 56)))
+      time("q25.cands(fk=40,c=8)", 3)(noop(fusedCands(testSel, trainSel, 40, 8)))
+      time("q25.exact(band=8)", 3)(noop(exact(fusedCands(testSel, trainSel, 40, 8), 8)))
+      time("q26.cands(fk=16,c=8)", 3)(noop(fusedCands(testSel, trainSel, 16, 8)))
+      time("q26.exact(band=56)", 3)(noop(exact(fusedCands(testSel, trainSel, 16, 8), 56)))
       time("q25.full", 3) {
         SparkEntry.dropDerivedMemosExcept(spark, Set.empty)
         noop(SparkEntry.queries("q25_knn_dtw_pruned")(spark, sfDir))

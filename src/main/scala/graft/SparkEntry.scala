@@ -468,17 +468,17 @@ object SparkEntry {
       // this corpus (factor 24 first misses at coarsen 2)
       Knn.classify(train, test,
         KnnParams(k = 5, distance = "dtw", band = 0, lbPruning = true,
-          pruneRanker = "paa", coarsenFactor = 2, candidateFactor = 48))
+          coarsenFactor = 2, candidateFactor = 48))
         .orderBy("test_id")
     }),
 
     // Q25 — pruned banded DTW KNN, Model-1 shape (k=5 vote) on the HAR
     // series domain. Pruning is a TIME-SERIES technique: on structured
-    // series every ranker (PAA, coarse-DTW, LB_Keogh) reproduces the
-    // exact result at an 8x budget; on unstructured random vectors no
-    // cheap sketch predicts the banded-DTW ordering (measured: >40%
-    // wrong predictions at any reasonable budget), so this query runs
-    // where the operator is actually sound. Classes are separable, so
+    // series the PAA ranking reproduces the exact result at an 8x
+    // budget; on unstructured random vectors no cheap sketch predicts
+    // the banded-DTW ordering (measured: >40% wrong predictions at any
+    // reasonable budget), so this query runs where the operator is
+    // actually sound. Classes are separable, so
     // the exact result has the closed form predicted == id % 6 — which
     // the oracle checks, making the k=5 cascade driver-verified.
     "q25_knn_dtw_pruned" -> ((s, dir) => {
@@ -497,8 +497,8 @@ object SparkEntry {
     // (sf0.1 = full HAR size). Engine plan: PAA-ranked prune cascade +
     // exact banded DTW on survivors — a strictly stronger answer than the
     // reference's approximate FastDTW, still broadcast + min_by.
-    // (LB_Keogh ranking is DEGENERATE here: band 56 ~ the signal period,
-    // so the envelope spans the amplitude range and every bound is ~0 —
+    // (The 8:1 PAA sketch keeps phase at band 56 ~ one signal period,
+    // where an envelope lower bound would be ~0 for every candidate —
     // KnnSpec "PAA ranker stays exact where LB_Keogh degenerates".)
     "q26_har_model2_1nn" -> ((s, dir) => {
       GraftFunctions.register(s)

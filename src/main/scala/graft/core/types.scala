@@ -21,36 +21,18 @@ case class LabeledSeries(rowId: Long, series: Array[Double], label: Double)
   * @param band               Sakoe-Chiba band for exact DTW; -1 = unconstrained
   * @param trainPartitions    cartesian-strategy train-side repartition (reference `:186`)
   * @param testPartitions     cartesian-strategy test-side repartition (reference `:186`)
-  * @param lbPruning          candidate pruning for dtw/fastdtw (the 100 TB
-  *                           scale path: cheap per-pair ranking sketch,
-  *                           exact kernel only on surviving candidates)
+  * @param lbPruning          candidate cascade for dtw/fastdtw (the scale
+  *                           path): rank every pair by Manhattan distance
+  *                           between PAA sketches, then run the exact
+  *                           kernel only on the candidateFactor*k
+  *                           best-ranked train series per test point. The
+  *                           PAA ranking is FastDTW's coarse level used as
+  *                           a ranker (Salvador & Chan 2007), not a lower
+  *                           bound: results equal exact KNN only when
+  *                           candidateFactor*k covers the true neighbours
   * @param candidateFactor    candidates kept per test point = factor * k
-  * @param pruneRanker        "paa" (default): rank candidates by Manhattan
-  *                           distance between PAA sketches — O(n/coarsen)
-  *                           per pair and tracks the DTW ordering closely
-  *                           when the band is small relative to the
-  *                           series length; "paa_dtw": banded DTW on the
-  *                           sketches (FastDTW's coarse level as a
-  *                           ranker) — warp-aware, for band/length ratios
-  *                           where unwarped sketch distance misranks;
-  *                           "lb_keogh": rank by the admissible LB_Keogh
-  *                           bound — useful when the band is narrow
-  *                           relative to the signal's autocorrelation
-  *                           length, DEGENERATE (near-constant ~0) when
-  *                           the band window spans the signal range, which
-  *                           makes candidate selection arbitrary
-  * @param coarsenFactor      PAA block size for the "paa"/"paa_dtw" rankers
-  * @param prefilterSampleMod sampled-threshold pushdown for the ranking
-  *                           phase: score each test point against the
-  *                           ~1/mod deterministic train subsample, take
-  *                           the (candidateFactor*k)-th smallest sampled
-  *                           score as an upper bound tau on the true
-  *                           selection cutoff, and drop score > tau rows
-  *                           BEFORE the bounded-heap aggregate (same
-  *                           candidates, ~mod-fold fewer rows through
-  *                           aggregation machinery). <= 1 disables; when
-  *                           the subsample is smaller than the candidate
-  *                           budget the filter self-disables (tau = +inf)
+  * @param coarsenFactor      PAA block size of the ranking sketch (series
+  *                           length / coarsenFactor values per sketch)
   */
 case class KnnParams(
     k: Int = 1,
@@ -63,6 +45,4 @@ case class KnnParams(
     testPartitions: Int = 0,
     lbPruning: Boolean = false,
     candidateFactor: Int = 4,
-    pruneRanker: String = "paa",
-    coarsenFactor: Int = 8,
-    prefilterSampleMod: Int = 16)
+    coarsenFactor: Int = 8)

@@ -287,58 +287,6 @@ object Kernels {
     (cost(idx(n - 1, m - 1)), java.util.Arrays.copyOfRange(buf, w, n + m))
   }
 
-  // ------------------------------------------------------------- LB_Keogh
-
-  /** Sakoe-Chiba envelope of a series (Keogh & Ratanamahatana 2005):
-    * lower(i) = min(a[i-band..i+band]), upper(i) = max(...). Returned
-    * packed as [lower ++ upper] (length 2n) so it travels as one
-    * array<double> column. Computed ONCE per query series, then
-    * [[lbKeogh]] gives an O(n) lower bound on banded DTW per candidate —
-    * the classic cheap prefilter in front of the O(n*band) exact kernel.
-    */
-  def envelope(a: Array[Double], band: Int): Array[Double] = {
-    val n = a.length
-    val r = if (band < 0) n else band
-    val out = new Array[Double](2 * n)
-    var i = 0
-    while (i < n) {
-      var lo = a(i); var hi = a(i)
-      var j = math.max(0, i - r)
-      val end = math.min(n - 1, i + r)
-      while (j <= end) {
-        val v = a(j)
-        if (v < lo) lo = v
-        if (v > hi) hi = v
-        j += 1
-      }
-      out(i) = lo
-      out(n + i) = hi
-      i += 1
-    }
-    out
-  }
-
-  /** LB_Keogh lower bound: sum of distances from each candidate point to
-    * the query envelope (|x-y| point cost, matching [[dtw]]). Valid lower
-    * bound for band-constrained DTW of equal-length series; for unequal
-    * lengths only the common prefix contributes (still a lower bound).
-    */
-  def lbKeogh(env: Array[Double], c: Array[Double]): Double = {
-    val n = env.length / 2
-    val m = math.min(n, c.length)
-    var s = 0.0
-    var i = 0
-    while (i < m) {
-      val v = c(i)
-      val lo = env(i)
-      val hi = env(n + i)
-      if (v > hi) s += v - hi
-      else if (v < lo) s += lo - v
-      i += 1
-    }
-    s
-  }
-
   // ------------------------------------------------------------------- PAA
 
   /** Piecewise Aggregate Approximation (Keogh et al. 2001): coarsen a
@@ -381,28 +329,6 @@ object Kernels {
     manhattan(a.toDoubleArray(), b.toDoubleArray())
   def dtwAD(a: ArrayData, b: ArrayData, band: Int): Double =
     dtw(a.toDoubleArray(), b.toDoubleArray(), band)
-  def envelopeAD(a: ArrayData, band: Int): ArrayData =
-    org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(
-      envelope(a.toDoubleArray(), band))
-  /** Direct ArrayData reads — this runs once per candidate PAIR on the
-    * hot LB cascade; materializing both sides would memcpy ~13 KB per
-    * pair (hundreds of GB over a HAR-size crossJoin) and thrash GC.
-    */
-  def lbKeoghAD(env: ArrayData, c: ArrayData): Double = {
-    val n = env.numElements() / 2
-    val m = math.min(n, c.numElements())
-    var s = 0.0
-    var i = 0
-    while (i < m) {
-      val v = c.getDouble(i)
-      val lo = env.getDouble(i)
-      val hi = env.getDouble(n + i)
-      if (v > hi) s += v - hi
-      else if (v < lo) s += lo - v
-      i += 1
-    }
-    s
-  }
   def fastdtwAD(a: ArrayData, b: ArrayData, radius: Int): Double =
     fastdtw(a.toDoubleArray(), b.toDoubleArray(), radius)
   /** PAA sketch without intermediate toDoubleArray memcpy — runs once per

@@ -35,10 +35,6 @@ object SeriesFunctions {
   def simhash59(tokens: Column): Column = call_function("graft_simhash59", tokens)
   def paa(series: Column, factor: Int): Column =
     call_function("graft_paa", series, lit(factor))
-  def envelope(series: Column, band: Int): Column =
-    call_function("graft_envelope", series, lit(band))
-  def lbKeogh(env: Column, candidate: Column): Column =
-    call_function("graft_lb_keogh", env, candidate)
   def jaccardSorted(a: Column, b: Column): Column = call_function("graft_jaccard_sorted", a, b)
   def shingleHashes(tokens: Column, n: Int): Column =
     call_function("graft_shingle_hashes", tokens, lit(n))
@@ -58,12 +54,12 @@ object SeriesFunctions {
   def topkScores(score: Column, id: Column, k: Int): Column =
     call_function("graft_topk_scores", score, id, lit(k))
   /** Fused candidate-selection scan (see [[graft.functions.TopKScanIds]]):
-    * the ids of the k best-ranked entries of a broadcast
-    * array<struct<id, sketch>> for one test-side sketch — the
+    * the ids of the k entries of a broadcast array<struct<id, sketch>>
+    * nearest in Manhattan distance to one test-side sketch — the
     * broadcast-path replacement for pair-join + graft_topk_ids.
     */
-  def topkScan(sk: Column, trainArr: Column, k: Int, kind: String, band: Int): Column =
-    call_function("graft_topk_scan", sk, trainArr, lit(k), lit(kind), lit(band))
+  def topkScan(sk: Column, trainArr: Column, k: Int): Column =
+    call_function("graft_topk_scan", sk, trainArr, lit(k))
   /** The k smallest (score, id) pairs per group as array<struct<score,id>>,
     * sorted ascending — ONE heap maintains both columns (two separate
     * ids+scores aggregates would insert every input row twice).

@@ -78,33 +78,18 @@ final class TopKIdsBuffer(val k: Int) {
     sortedIdx().map(i => (scores(i), ids(i)))
 }
 
-/** Native bounded top-k-by-score aggregate: collects the ids of the k
-  * smallest (score, id) pairs per group as array<long>.
-  *
-  * This is the third incarnation of the reference's two-phase heap
-  * (`heapq.nsmallest` per partition then after the shuffle,
-  * `Team11-Project.py:180`/`:195`): the window-rank route and the typed
-  * Dataset `Aggregator` ([[graft.operators.BoundedTopKByScore]]) keep the
-  * same semantics, but this one runs as a Catalyst
-  * `TypedImperativeAggregate` — no Scala tuple boxing and no Kryo buffer
-  * encoding per row, with partial state serialized as packed primitives.
-  * Used by the KNN prune cascade, whose candidate-selection aggregate
-  * sees millions of slim rows per query.
-  */
 /** Fused candidate-selection scan — the broadcast-path replacement for
   * the pair-join + [[BoundedTopKIdsAgg]] sequence in the KNN prune
   * cascade (r22 optimization, guide §1.2 "fix the distributed algorithm
-  * first"): for ONE test-side sketch, rank EVERY train sketch with the
-  * cascade's ranking kernel and return the ids of the k smallest
-  * (score, id) pairs directly.
+  * first"): for ONE test-side PAA sketch, rank EVERY train sketch by
+  * Manhattan distance and return the ids of the k smallest (score, id)
+  * pairs directly.
   *
-  * Equivalence to the join+aggregate shape (KnnSpec pins it): the scores
-  * are computed by the SAME [[Kernels]] entry points the pair join's
-  * expressions called ([[Kernels.manhattanAD]] == manhattan over
-  * toDoubleArray, ditto dtw; lbKeogh accumulates in the same element
-  * order), and the selection is the SAME [[TopKIdsBuffer]] — a total
-  * order over (score, id), so the selected set is independent of
-  * insertion order. Null handling matches the aggregate: a null train
+  * Equivalence to the join+aggregate shape (AggregatesSpec pins it): the
+  * scores are computed by the SAME kernel the pair join's expression
+  * called ([[Kernels.manhattanAD]] == manhattan over toDoubleArray), and
+  * the selection is the SAME [[TopKIdsBuffer]] — a total order over
+  * (score, id), so the selected set is independent of insertion order. Null handling matches the aggregate: a null train
   * entry (null struct, null id, or null sketch → null score in the old
   * plan) is skipped; a null TEST sketch yields an empty array, exactly
   * what an all-null-score group produced (and the downstream
@@ -127,18 +112,9 @@ final class TopKIdsBuffer(val k: Int) {
 case class TopKScanIds(
     left: Expression,  // test sketch: array<double>
     right: Expression, // broadcast train: array<struct<id: long, sk: array<double>>>
-    k: Int,
-    kind: String, // "manhattan" | "dtw" | "lb_keogh"
-    band: Int)    // coarse band for kind = "dtw" (-1 = unconstrained)
+    k: Int)
     extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
   require(k >= 1, "k must be >= 1")
-
-  private val kindCode: Int = kind match {
-    case "manhattan" => 0
-    case "dtw"       => 1
-    case "lb_keogh"  => 2
-    case other => throw new IllegalArgumentException(s"unknown ranking kernel: $other")
-  }
 
   override def prettyName: String = "graft_topk_scan"
   override def dataType: DataType = ArrayType(LongType, containsNull = false)
@@ -166,8 +142,7 @@ case class TopKScanIds(
   }
 
   override def nullSafeEval(sk: Any, tarr: Any): Any =
-    TopKScanIds.scan(sk.asInstanceOf[ArrayData], tarr.asInstanceOf[ArrayData],
-      k, kindCode, band)
+    TopKScanIds.scan(sk.asInstanceOf[ArrayData], tarr.asInstanceOf[ArrayData], k)
 
   // REAL doGenCode (not CodegenFallback): a fallback expression inside a
   // whole-stage-codegen'd project forces INPUT_ROW materialization —
@@ -181,7 +156,7 @@ case class TopKScanIds(
       ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
       : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
     defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.TopKScanIds.scan($a, $b, $k, $kindCode, $band)")
+      s"graft.functions.TopKScanIds.scan($a, $b, $k)")
 
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): TopKScanIds =
@@ -247,27 +222,33 @@ object TopKScanIds {
   /** The fused scan body — called from generated code with the raw
     * ArrayData values (no row materialization).
     */
-  def scan(skAD: ArrayData, tarr: ArrayData, k: Int, kindCode: Int, band: Int): ArrayData = {
+  def scan(skAD: ArrayData, tarr: ArrayData, k: Int): ArrayData = {
     val sk = skAD.toDoubleArray()
     val d = decoded(tarr)
     val buf = new TopKIdsBuffer(k)
     var i = 0
     while (i < d.n) {
       val t = d.sks(i)
-      if (t != null) {
-        val s = kindCode match {
-          case 0 => Kernels.manhattan(sk, t)
-          case 1 => Kernels.dtw(sk, t, band)
-          case _ => Kernels.lbKeogh(sk, t)
-        }
-        buf.insert(s, d.ids(i))
-      }
+      if (t != null) buf.insert(Kernels.manhattan(sk, t), d.ids(i))
       i += 1
     }
     ArrayData.toArrayData(buf.sortedIds())
   }
 }
 
+/** Native bounded top-k-by-score aggregate: collects the ids of the k
+  * smallest (score, id) pairs per group as array<long>.
+  *
+  * This is the third incarnation of the reference's two-phase heap
+  * (`heapq.nsmallest` per partition then after the shuffle,
+  * `Team11-Project.py:180`/`:195`): the window-rank route and the typed
+  * Dataset `Aggregator` ([[graft.operators.BoundedTopKByScore]]) keep the
+  * same semantics, but this one runs as a Catalyst
+  * `TypedImperativeAggregate` — no Scala tuple boxing and no Kryo buffer
+  * encoding per row, with partial state serialized as packed primitives.
+  * Used by the KNN prune cascade, whose candidate-selection aggregate
+  * sees millions of slim rows per query.
+  */
 case class BoundedTopKIdsAgg(
     scoreChild: Expression,
     idChild: Expression,

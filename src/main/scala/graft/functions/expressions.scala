@@ -100,20 +100,6 @@ case class FastDtwDistance(left: Expression, right: Expression, radius: Int)
     copy(left = l, right = r)
 }
 
-/** Sakoe-Chiba envelope, packed [lower ++ upper] — see [[Kernels.envelope]]. */
-case class SeriesEnvelope(child: Expression, band: Int)
-    extends UnaryExpression with ImplicitCastInputTypes {
-  override def prettyName: String = "graft_envelope"
-  override def inputTypes: Seq[DataType] = Seq(ArrayType(DoubleType))
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullIntolerant: Boolean = true
-  override def nullSafeEval(v: Any): Any =
-    Kernels.envelopeAD(v.asInstanceOf[ArrayData], band)
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
-    defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.envelopeAD($c, $band)")
-  override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
 /** Piecewise Aggregate Approximation sketch — see [[Kernels.paa]]. */
 case class SeriesPaa(child: Expression, factor: Int)
     extends UnaryExpression with ImplicitCastInputTypes {
@@ -127,17 +113,6 @@ case class SeriesPaa(child: Expression, factor: Int)
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode =
     defineCodeGen(ctx, ev, c => s"graft.functions.Kernels.paaAD($c, $factor)")
   override protected def withNewChildInternal(c: Expression) = copy(child = c)
-}
-
-/** LB_Keogh lower bound against a precomputed envelope — see
-  * [[Kernels.lbKeogh]].
-  */
-case class LbKeogh(left: Expression, right: Expression)
-    extends ArrayPairDoubleExpression {
-  override def prettyName: String = "graft_lb_keogh"
-  protected def kernel = "lbKeoghAD"
-  protected def kernelFn(a: ArrayData, b: ArrayData): Double = Kernels.lbKeoghAD(a, b)
-  override protected def withNewChildrenInternal(l: Expression, r: Expression) = copy(l, r)
 }
 
 /** 64-bit SimHash over an array<string> of tokens (Charikar 2002):

@@ -63,17 +63,10 @@ object GraftFunctions {
       (es: Seq[Expression]) =>
         WordNgrams(es(0), intArg(es(1), "n")),
       "graft_word_ngrams(tokens, n) - distinct word n-gram strings (strict: <n tokens -> empty)"),
-    ("graft_envelope",
-      (es: Seq[Expression]) =>
-        SeriesEnvelope(es(0), if (es.length > 1) intArg(es(1), "band") else -1),
-      "graft_envelope(series[, band]) - Sakoe-Chiba envelope packed [lower ++ upper]"),
     ("graft_paa",
       (es: Seq[Expression]) =>
         SeriesPaa(es(0), intArg(es(1), "factor")),
       "graft_paa(series, factor) - Piecewise Aggregate Approximation (block means)"),
-    ("graft_lb_keogh",
-      (es: Seq[Expression]) => LbKeogh(es(0), es(1)),
-      "graft_lb_keogh(envelope, candidate) - LB_Keogh lower bound on banded DTW"),
     ("graft_barrier",
       (es: Seq[Expression]) => Barrier(es(0)),
       "graft_barrier(x) - identity; blocks predicate pushdown through it"),
@@ -98,14 +91,12 @@ object GraftFunctions {
       "graft_topk_scores(score, id, k) - scores of the k smallest (score, id) pairs, as array<double>"),
     ("graft_topk_scan",
       (es: Seq[Expression]) => {
-        val kind = es(3) match {
-          case Literal(s: org.apache.spark.unsafe.types.UTF8String, _) => s.toString
-          case other => throw new IllegalArgumentException(
-            s"kind must be a string literal, got: $other")
-        }
-        TopKScanIds(es(0), es(1), intArg(es(2), "k"), kind, intArg(es(4), "band"))
+        // extra arguments would otherwise be dropped without a word
+        if (es.length != 3) throw new IllegalArgumentException(
+          s"graft_topk_scan(sk, trainArr, k) takes 3 arguments, got ${es.length}")
+        TopKScanIds(es(0), es(1), intArg(es(2), "k"))
       },
-      "graft_topk_scan(sk, trainArr, k, kind, band) - ids of the k best-ranked broadcast train entries for one test sketch"),
+      "graft_topk_scan(sk, trainArr, k) - ids of the k broadcast train entries nearest in Manhattan distance to one test sketch"),
     ("graft_topk_pairs",
       (es: Seq[Expression]) =>
         BoundedTopKIdsAgg(es(0), es(1), intArg(es(2), "k"), emitPairs = true),

@@ -44,7 +44,9 @@ private[ml] trait KnnClassifierParams extends Params {
   final val excludeZeroDistance = new BooleanParam(this, "excludeZeroDistance",
     "drop zero-distance (self-match) neighbors")
   final val lbPruning = new BooleanParam(this, "lbPruning",
-    "candidate pruning for dtw/fastdtw (the scale path)")
+    "PAA-ranked candidate cascade for dtw/fastdtw (the scale path): a " +
+      "ranker, not a lower bound, so results equal exact KNN only when " +
+      "candidateFactor * k covers the true neighbours")
   final val candidateFactor = new IntParam(this, "candidateFactor",
     "pruned candidates kept per test point = factor * k",
     ParamValidators.gtEq(1))

@@ -49,35 +49,6 @@ object Knn {
     case other       => throw new IllegalArgumentException(s"unknown distance: $other")
   }
 
-  /** Strategy selection shared by every pair-generating phase (the
-    * unpruned crossJoin AND the prune cascade's ranking + payload joins):
-    * broadcast while the train side fits an executor, partitioned
-    * cartesian beyond that.
-    */
-  /** Measured-size-aware broadcastability: Catalyst stats, raised to the
-    * block manager's measured size for persisted (LogicalRDD) leaves —
-    * the optimizer's estimate pre-dates materialization and cannot see
-    * generated payload width, so the estimate-only path would happily
-    * broadcast an arbitrarily large checkpointed side at scale
-    * ([[graft.core.Materialize.storageBytes]]).
-    *
-    * A pair join replicates one side to every task EITHER way —
-    * broadcast ships one copy per executor, a partitioned cartesian
-    * shuffle-reads a whole side per opposite partition — so broadcast
-    * wins while a side fits comfortably in executor memory. The floor is
-    * deliberately higher than autoBroadcastJoinThreshold's 10 MB
-    * default: that knob guards hash-join build memory, this guards a
-    * replicated dense matrix (tunable via spark.graft.knn.broadcastFloor;
-    * conf values may carry a byte-unit suffix, "64MB").
-    */
-  /** @param replication conservative multiplier applied to the measured/
-    *                     estimated bytes before the threshold test — for
-    *                     deciding a broadcast of a frame DERIVED from
-    *                     `df` by row replication (LSH banding explodes
-    *                     one row per band/chunk/table); the derived rows
-    *                     are usually slimmer than `df`'s, so the scaled
-    *                     gate only ever under-broadcasts, never over.
-    */
   /** The effective broadcast byte cap: max(autoBroadcastJoinThreshold,
     * graft floor), or None when broadcasting is disabled (threshold -1).
     * Shared by [[fitsBroadcast]] and the dedup operators' slim-frame
@@ -101,6 +72,22 @@ object Knn {
     if (threshold < 0) None else Some(math.max(threshold, floor))
   }
 
+  /** Measured-size-aware broadcastability: Catalyst stats, raised to the
+    * block manager's measured size for persisted (LogicalRDD) leaves —
+    * the optimizer's estimate pre-dates materialization and cannot see
+    * generated payload width, so the estimate-only path would happily
+    * broadcast an arbitrarily large checkpointed side at scale
+    * ([[graft.core.Materialize.storageBytes]]).
+    *
+    * A pair join replicates one side to every task EITHER way —
+    * broadcast ships one copy per executor, a partitioned cartesian
+    * shuffle-reads a whole side per opposite partition — so broadcast
+    * wins while a side fits comfortably in executor memory. The floor is
+    * deliberately higher than autoBroadcastJoinThreshold's 10 MB
+    * default: that knob guards hash-join build memory, this guards a
+    * replicated dense matrix (tunable via spark.graft.knn.broadcastFloor;
+    * conf values may carry a byte-unit suffix, "64MB").
+    */
   private[operators] def fitsBroadcast(df: DataFrame): Boolean = {
     // a streaming frame can never be the broadcast build side, and
     // evaluating optimizedPlan.stats on one throws (streaming sources
@@ -142,7 +129,10 @@ object Knn {
   }
 
   /** Strategy-aware all-pairs cross join of a (possibly projected) train
-    * side against the spread test side. `broadcastTrain` carries a
+    * side against the spread test side, shared by every pair-generating
+    * phase (the unpruned crossJoin AND the prune cascade's ranking +
+    * payload joins): broadcast while the train side fits an executor,
+    * partitioned cartesian beyond that. `broadcastTrain` carries a
     * pre-computed decision so callers that build several pair joins per
     * query (the prune cascade: sampled tau pass, main scoring pass,
     * payload join-back) analyze the train subtree once, not per join.
@@ -235,24 +225,25 @@ object Knn {
       .filter(col("rank") <= p.k)
   }
 
+  /** The oversize path's tau pass samples ~1/PrefilterSampleMod of the
+    * train ids (see [[prunedCandidates]]).
+    */
+  private val PrefilterSampleMod = 16
+
   /** Prune cascade, the DTW scale path:
-    * 1. sketch each side ONCE scan-side (PAA block means by default, or
-    *    the test-side LB_Keogh envelope);
-    * 2. score every pair with the cheap ranking kernel — O(n/coarsen)
-    *    for PAA-Manhattan, O(n) for LB_Keogh;
+    * 1. sketch each side ONCE scan-side (PAA block means);
+    * 2. rank every pair by Manhattan distance between the sketches —
+    *    O(n/coarsen) per pair;
     * 3. keep the candidateFactor*k best-ranked per test point via a
-    *    bounded-heap aggregate (partial before the shuffle);
+    *    bounded heap;
     * 4. run the exact kernel only on survivors.
     *
-    * Ranker choice (KnnParams.pruneRanker): "paa" ranks by Manhattan
-    * distance between PAA sketches — not an admissible bound, but it
-    * tracks the DTW ordering tightly (it is FastDTW's coarse level used
-    * as a ranker, Salvador & Chan 2007 §4.1). "lb_keogh" ranks by the
-    * admissible lower bound (Keogh & Ratanamahatana 2005) — tight for
-    * narrow bands, but DEGENERATE when the band window spans the
-    * signal's value range (envelope covers everything, every bound ~0,
-    * selection collapses to the tie-break). Neither ranker is a proof;
-    * equality with the exact path is pinned per-workload in KnnSpec.
+    * The PAA ranking is not an admissible bound, but it tracks the DTW
+    * ordering tightly (it is FastDTW's coarse level used as a ranker,
+    * Salvador & Chan 2007 §4.1). It is not a proof either: equality with
+    * the exact path holds when candidateFactor*k covers the true
+    * neighbours, pinned per workload in KnnSpec and by the q25/q26/q33
+    * oracles.
     *
     * Every join here follows the same broadcast-vs-partitioned strategy
     * decision as the unpruned path ([[useBroadcast]]) — when the train
@@ -264,9 +255,9 @@ object Knn {
     val testSel = test.select(col("test_id"), col("test_series"))
     val spreadTest = Partitioning.spread(testSel, p.testPartitions)
     // barrier() on the STREAM side: a single-use alias gets inlined by
-    // CollapseProject, which would recompute the O(n)/O(n*band) sketch
-    // once per PAIR instead of once per row. The TRAIN side deliberately
-    // carries NO barrier: the build side of a pair join materializes its
+    // CollapseProject, which would recompute the O(n) sketch once per
+    // PAIR instead of once per row. The TRAIN side deliberately carries
+    // NO barrier: the build side of a pair join materializes its
     // projection once per row into the broadcast/shuffle block (nothing
     // collapses across the join boundary), and keeping that subtree
     // deterministic lets the tau pass and the main pass REUSE one
@@ -279,14 +270,8 @@ object Knn {
         if (withBarrier) SeriesFunctions.barrier(sketch) else sketch)
         .select(col(idCol), col(out))
     }
-    def trainSketchOf(tr: DataFrame): DataFrame = p.pruneRanker match {
-      case "lb_keogh" => tr.select(col("train_id"), col("train_series").as("tsk"))
-      case _          => paaSide(tr, "train_series", "train_id", "tsk",
-        withBarrier = false)
-    }
-    // coarse band for the warp-aware ranker, scaled to sketch resolution
-    val coarseBand =
-      if (p.band < 0) -1 else math.max(1, p.band / p.coarsenFactor + 1)
+    def trainSketch: DataFrame =
+      paaSide(trainSel, "train_series", "train_id", "tsk", withBarrier = false)
     // one stats-driven decision per query and side (conservative:
     // measured on the FULL train projection, reused for the smaller
     // sketch/sample joins; the test-side decision is only consulted when
@@ -306,27 +291,15 @@ object Knn {
       // test-payload SortMergeJoin and the explicit repartition of the
       // old shape (measured ~2.5 us/pair of join+aggregate machinery
       // around a ~0.1 us ranking kernel at HAR scale). Selection
-      // semantics are identical — same kernels, same TopKIdsBuffer total
+      // semantics are identical — same kernel, same TopKIdsBuffer total
       // order — and the sampled-tau prefilter is unnecessary here: it
       // existed to bound aggregate state, and the fused heap is local to
       // one row's evaluation. The test payload stays ON the row through
       // candidate selection, so the exact phase explodes in-partition at
       // the spread's parallelism with no join-back.
-      val (testSk, kind, kband) = p.pruneRanker match {
-        case "lb_keogh" =>
-          (spreadTest.withColumn("sk", SeriesFunctions.barrier(
-            SeriesFunctions.envelope(col("test_series"), p.band))),
-            "lb_keogh", -1)
-        case "paa_dtw" =>
-          (spreadTest.withColumn("sk", SeriesFunctions.barrier(
-            SeriesFunctions.paa(col("test_series"), p.coarsenFactor))),
-            "dtw", coarseBand)
-        case _ => // "paa": unwarped Manhattan on the sketches (cheapest)
-          (spreadTest.withColumn("sk", SeriesFunctions.barrier(
-            SeriesFunctions.paa(col("test_series"), p.coarsenFactor))),
-            "manhattan", -1)
-      }
-      val trainArr = trainSketchOf(trainSel)
+      val testSk = spreadTest.withColumn("sk", SeriesFunctions.barrier(
+        SeriesFunctions.paa(col("test_series"), p.coarsenFactor)))
+      val trainArr = trainSketch
         .agg(collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
       // barrier on cand_ids: InferFiltersFromGenerate adds a
       // size(cand_ids) > 0 predicate above this projection, and pushdown
@@ -335,7 +308,7 @@ object Knn {
         .crossJoin(broadcast(trainArr))
         .select(col("test_id"), col("test_series"),
           SeriesFunctions.barrier(SeriesFunctions.topkScan(
-            col("sk"), col("tarr"), fk, kind, kband)).as("cand_ids"))
+            col("sk"), col("tarr"), fk)).as("cand_ids"))
         .select(col("test_id"), col("test_series"),
           explode(col("cand_ids")).as("train_id"))
         .join(broadcast(trainSel), "train_id")
@@ -349,32 +322,14 @@ object Knn {
 
     // Oversize-train path: slim pair scores + bounded-heap selection (the
     // shape that never replicates or collects the train payload).
-    val (testSketch, scoreExpr) = p.pruneRanker match {
-      case "lb_keogh" =>
-        val ts = spreadTest.withColumn("sk", SeriesFunctions.barrier(
-          SeriesFunctions.envelope(col("test_series"), p.band)))
-          .select(col("test_id"), col("sk"))
-        (ts, SeriesFunctions.lbKeogh(col("sk"), col("tsk")))
-      case "paa_dtw" =>
-        // warp-aware coarse ranking (FastDTW's coarse level as a ranker):
-        // banded DTW on the sketches, band scaled to sketch resolution —
-        // for series where the band is a large fraction of the length,
-        // an unwarped sketch distance misranks warped near-neighbors
-        (paaSide(spreadTest, "test_series", "test_id", "sk"),
-          SeriesFunctions.dtw(col("sk"), col("tsk"), coarseBand))
-      case _ => // "paa": unwarped Manhattan on the sketches (cheapest)
-        (paaSide(spreadTest, "test_series", "test_id", "sk"),
-          SeriesFunctions.manhattan(col("sk"), col("tsk")))
-    }
-    // barrier on the score: the prefilter path puts a filter + projection
+    val testSketch = paaSide(spreadTest, "test_series", "test_id", "sk")
+    // barrier on the score: the prefilter puts a filter + projection
     // ABOVE this select (across the tau join), and predicate pushdown
     // would otherwise inline the ranking kernel into the filter — one
     // evaluation per pair becomes two
+    val scoreExpr = SeriesFunctions.barrier(
+      SeriesFunctions.manhattan(col("sk"), col("tsk")))
     val bcastTest = fitsBroadcast(testSketch)
-    def slimScores(tr: DataFrame): DataFrame =
-      crossPairs(trainSketchOf(tr), testSketch, p, Some(bcastTrain), Some(bcastTest))
-        .select(col("test_id"), col("train_id"),
-          SeriesFunctions.barrier(scoreExpr).as("score"))
     // SLIM ranking rows: only (test_id, train_id, score) feed candidate
     // selection — payloads would put candidateCount * seriesBytes into
     // every buffer. Selection is a bounded-heap AGGREGATE (the
@@ -389,47 +344,42 @@ object Knn {
     // top-fk — while the aggregate then sees ~fk*mod rows per test point
     // instead of |train|. This is TakeOrdered's sampling trick applied
     // map-side; the aggregation machinery (not the score kernel) is the
-    // measured bottleneck at HAR scale.
+    // measured bottleneck at HAR scale. When the subsample is smaller
+    // than the candidate budget the filter self-disables (tau = +inf).
+    //
+    // The sampled pass reuses the FULL train-sketch subtree and filters
+    // pairs AFTER the join (barrier keeps the predicate out of the join
+    // condition and un-pushable): the tau pass and the main pass then
+    // share ONE materialized sketch exchange (ReusedExchange) instead of
+    // building a second sketch-of-the-sample broadcast — one fewer
+    // scheduler round-trip and one sketch materialization, at the cost of
+    // a cheap codegen'd hash test per pair (the ranking kernel still runs
+    // only on sampled survivors: the filter sits below the score
+    // projection).
+    val sampledScores =
+      crossPairs(trainSketch, testSketch, p, Some(bcastTrain), Some(bcastTest))
+        .filter(SeriesFunctions.barrier(
+          pmod(xxhash64(col("train_id")), lit(PrefilterSampleMod)) === 0))
+        .select(col("test_id"), col("train_id"), scoreExpr.as("score"))
+    // bounded-heap order statistic: the fk-th smallest sampled score,
+    // with at most fk doubles of state per group (collect_list would
+    // buffer ~|train|/mod scores per test id — unbounded state inside
+    // the prefilter that exists to bound state)
+    val tau = sampledScores
+      .groupBy(col("test_id"))
+      .agg(SeriesFunctions.topkScores(col("score"), col("train_id"), fk).as("ss"))
+      .select(col("test_id"),
+        coalesce(get(col("ss"), lit(fk - 1)), lit(Double.MaxValue)).as("tau"))
+    // attach tau to the TEST side (a |test|-row broadcast join), so the
+    // threshold filter fuses into the crossJoin's output projection — no
+    // second pass over the pair stream. Left join: an empty subsample
+    // (tiny train side) must disable the filter, not drop every row.
+    val testWithTau = testSketch.join(broadcast(tau), Seq("test_id"), "left")
     val slimDf =
-      if (p.prefilterSampleMod > 1) {
-        // The sampled pass reuses the FULL train-sketch subtree and
-        // filters pairs AFTER the join (barrier keeps the predicate out
-        // of the join condition and un-pushable): the tau pass and the
-        // main pass then share ONE materialized sketch exchange
-        // (ReusedExchange) instead of building a second
-        // sketch-of-the-sample broadcast — one fewer scheduler
-        // round-trip and one sketch materialization, at the cost of a
-        // cheap codegen'd hash test per pair (the ranking kernel still
-        // runs only on sampled survivors: the filter sits below the
-        // score projection).
-        val sampledScores =
-          crossPairs(trainSketchOf(trainSel), testSketch, p,
-            Some(bcastTrain), Some(bcastTest))
-            .filter(SeriesFunctions.barrier(
-              pmod(xxhash64(col("train_id")), lit(p.prefilterSampleMod)) === 0))
-            .select(col("test_id"), col("train_id"),
-              SeriesFunctions.barrier(scoreExpr).as("score"))
-        // bounded-heap order statistic: the fk-th smallest sampled score,
-        // with at most fk doubles of state per group (collect_list would
-        // buffer ~|train|/mod scores per test id — unbounded state inside
-        // the prefilter that exists to bound state)
-        val tau = sampledScores
-          .groupBy(col("test_id"))
-          .agg(SeriesFunctions.topkScores(col("score"), col("train_id"), fk).as("ss"))
-          .select(col("test_id"),
-            coalesce(get(col("ss"), lit(fk - 1)), lit(Double.MaxValue)).as("tau"))
-        // attach tau to the TEST side (a |test|-row broadcast join), so
-        // the threshold filter fuses into the crossJoin's output
-        // projection — no second pass over the pair stream. Left join: an
-        // empty subsample (tiny train side) must disable the filter, not
-        // drop every row.
-        val testWithTau = testSketch.join(broadcast(tau), Seq("test_id"), "left")
-        crossPairs(trainSketchOf(trainSel), testWithTau, p, Some(bcastTrain), Some(bcastTest))
-          .select(col("test_id"), col("train_id"),
-            SeriesFunctions.barrier(scoreExpr).as("score"), col("tau"))
-          .filter(col("score") <= coalesce(col("tau"), lit(Double.MaxValue)))
-          .select("test_id", "train_id", "score")
-      } else slimScores(trainSel)
+      crossPairs(trainSketch, testWithTau, p, Some(bcastTrain), Some(bcastTest))
+        .select(col("test_id"), col("train_id"), scoreExpr.as("score"), col("tau"))
+        .filter(col("score") <= coalesce(col("tau"), lit(Double.MaxValue)))
+        .select("test_id", "train_id", "score")
     // ONE row per test point (test_id, candidate-id array) out of the
     // heap — the exact phase joins payloads at |test| row counts, not
     // |test|*fk. Selection runs as the native TypedImperativeAggregate

@@ -72,9 +72,9 @@ class AggregatesSpec extends SparkTestBase {
     assert(viaPairs === viaTwo)
   }
 
-  test("graft_topk_scan == pair-join + graft_topk_ids (every kernel, ties, nulls)") {
+  test("graft_topk_scan == pair-join + graft_topk_ids (ties, nulls)") {
     // the fused broadcast-path scan (r22) must select exactly what the
-    // join + heap-aggregate shape selected: same kernels, same
+    // join + heap-aggregate shape selected: same Manhattan kernel, same
     // (score, id) total order. Fixture includes duplicate sketches
     // (score ties -> id tie-break), a null train sketch (skipped), and
     // a null TEST sketch (null out, dropped by explode downstream).
@@ -92,25 +92,19 @@ class AggregatesSpec extends SparkTestBase {
     val train = trainRows.toDF("train_id", "tsk")
     val test = testRows.toDF("test_id", "sk")
     val k = 7
-    for ((kind, band) <- Seq(("manhattan", -1), ("dtw", 2), ("lb_keogh", -1))) {
-      val scoreExpr = kind match {
-        case "manhattan" => SeriesFunctions.manhattan(col("sk"), col("tsk"))
-        case "dtw"       => SeriesFunctions.dtw(col("sk"), col("tsk"), band)
-        case _           => SeriesFunctions.lbKeogh(col("sk"), col("tsk"))
-      }
-      val viaAgg = test.crossJoin(train)
-        .select(col("test_id"), col("train_id"), scoreExpr.as("score"))
-        .groupBy(col("test_id"))
-        .agg(SeriesFunctions.topkIds(col("score"), col("train_id"), k).as("ids"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
-      val tarr = train.agg(
-        collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
-      val viaScan = test.crossJoin(broadcast(tarr))
-        .select(col("test_id"),
-          SeriesFunctions.topkScan(col("sk"), col("tarr"), k, kind, band).as("ids"))
-        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
-      assert(viaScan === viaAgg, s"kind=$kind")
-    }
+    val viaAgg = test.crossJoin(train)
+      .select(col("test_id"), col("train_id"),
+        SeriesFunctions.manhattan(col("sk"), col("tsk")).as("score"))
+      .groupBy(col("test_id"))
+      .agg(SeriesFunctions.topkIds(col("score"), col("train_id"), k).as("ids"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
+    val tarr = train.agg(
+      collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
+    val viaScan = test.crossJoin(broadcast(tarr))
+      .select(col("test_id"),
+        SeriesFunctions.topkScan(col("sk"), col("tarr"), k).as("ids"))
+      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
+    assert(viaScan === viaAgg)
     // null train sketch entries are skipped exactly like null scores in
     // the aggregate; a null test sketch nulls the output array
     val trainWithNull = (trainRows.map { case (i, a) => (i, a) } :+
@@ -118,14 +112,32 @@ class AggregatesSpec extends SparkTestBase {
     val tarrN = trainWithNull.agg(
       collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
     val gotN = test.limit(1).crossJoin(broadcast(tarrN))
-      .select(SeriesFunctions.topkScan(col("sk"), col("tarr"), 100, "manhattan", -1).as("ids"))
+      .select(SeriesFunctions.topkScan(col("sk"), col("tarr"), 100).as("ids"))
       .collect().head.getSeq[Long](0)
     assert(gotN.size === 60 && !gotN.contains(999L))
     val nullTest = Seq((1L, null.asInstanceOf[Array[Double]])).toDF("test_id", "sk")
     val gotNull = nullTest.crossJoin(broadcast(tarrN))
-      .select(SeriesFunctions.topkScan(col("sk"), col("tarr"), 5, "manhattan", -1).as("ids"))
+      .select(SeriesFunctions.topkScan(col("sk"), col("tarr"), 5).as("ids"))
       .collect().head
     assert(gotNull.isNullAt(0))
+  }
+
+  test("graft_topk_scan refuses any argument count but 3 at analysis, naming its signature") {
+    // a stale (sk, trainArr, k, kind, band) call must not analyze and
+    // silently rank by Manhattan with its ranker arguments dropped
+    val tarr = Seq((7L, Array(1.0, 2.0))).toDF("train_id", "tsk")
+      .agg(collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
+    val pair = Seq((1L, Array(1.0, 2.0))).toDF("test_id", "sk").crossJoin(tarr)
+    for (args <- Seq(
+        Seq(col("sk"), col("tarr"), lit(1), lit("dtw"), lit(3)),
+        Seq(col("sk"), col("tarr")))) {
+      val e = intercept[Exception] {
+        pair.select(call_function("graft_topk_scan", args: _*))
+          .queryExecution.assertAnalyzed()
+      }
+      assert(e.getMessage.contains("graft_topk_scan(sk, trainArr, k)") &&
+        e.getMessage.contains(s"got ${args.length}"), s"got: ${e.getMessage}")
+    }
   }
 
   test("heap selection ties -0.0 with 0.0 like a window sort (id breaks the tie)") {

@@ -133,24 +133,21 @@ class KnnSpec extends SparkTestBase {
     assert(agree >= exact.size - 2, s"agree=$agree of ${exact.size}")
   }
 
-  test("pruned DTW KNN matches exact DTW KNN (banded) — both rankers") {
-    for (k <- Seq(1, 5); ranker <- Seq("paa_dtw", "lb_keogh")) {
+  test("pruned DTW KNN matches exact DTW KNN (banded)") {
+    for (k <- Seq(1, 5)) {
       val exact = Knn.classify(trainDf, testDf,
         KnnParams(k = k, distance = "dtw", band = 4))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      // band=4 over length-16 series is a 25% warp budget: an UNWARPED
-      // sketch distance ("paa") misranks here by design, so the fixture
-      // pins the warp-aware coarse ranker; the plain-"paa" regime (band
-      // small vs length) is pinned by the q26-shaped test below.
-      // Budget 20 = half the 40-row train set — length-16 series have NN
-      // margins of a few percent, so a 2:1 sketch needs a wide margin
-      // (measured: the true NN of one test point ranks 17th coarse)
-      val (factor, coarsen) = if (ranker == "paa_dtw") (20, 2) else (4, 4)
+      // band=4 over length-16 series is a 25% warp budget, where the
+      // unwarped PAA ranking tracks the DTW order only loosely: length-16
+      // series have NN margins of a few percent, so the 2:1 sketch needs
+      // a wide margin. Budget 20 = half the 40-row train set (measured:
+      // at k=1 the worst test point's true NN ranks 18th by sketch)
       val pruned = Knn.classify(trainDf, testDf,
         KnnParams(k = k, distance = "dtw", band = 4, lbPruning = true,
-          pruneRanker = ranker, coarsenFactor = coarsen, candidateFactor = factor))
+          coarsenFactor = 2, candidateFactor = 20))
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(pruned === exact, s"k=$k ranker=$ranker")
+      assert(pruned === exact, s"k=$k")
     }
   }
 
@@ -168,14 +165,11 @@ class KnnSpec extends SparkTestBase {
   }
 
   test("PAA ranker stays exact where LB_Keogh degenerates (wide band)") {
-    // band comparable to the signal period: the envelope spans the whole
-    // amplitude range, every LB_Keogh bound is ~0, and bound-ranked
-    // candidate selection collapses to the tie-break (this is the q26
-    // HAR-workload regime — the regression that motivated the PAA ranker)
     // the exact q26 regime at reduced n: 561-sample series, period ~57
-    // (t*0.11), band 56 ~ one period — the envelope spans the amplitude
-    // range, every LB_Keogh bound is ~0 (measured: 58% of predictions
-    // wrong under bound-ranked selection), while the 8:1 PAA sketch
+    // (t*0.11), band 56 ~ one period — an LB_Keogh envelope spans the
+    // amplitude range and every bound is ~0 (measured: 58% of
+    // predictions wrong under bound-ranked selection, the regression
+    // that replaced that ranker with PAA), while the 8:1 PAA sketch
     // (7 samples/block = 1/8 period) preserves phase and stays exact
     val L = 561
     // splitmix64 finalizer: well-mixed per-(id,t) noise (a fresh LCG's
@@ -200,21 +194,10 @@ class KnnSpec extends SparkTestBase {
       .select("test_id", "predicted_label")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     val paa = Knn.classify1NN(trDf, teDf,
-      p0.copy(lbPruning = true, pruneRanker = "paa", coarsenFactor = 8))
+      p0.copy(lbPruning = true, coarsenFactor = 8))
       .select("test_id", "predicted_label")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
     assert(paa === exact)
-  }
-
-  test("LB_Keogh bound is a true lower bound on banded DTW") {
-    val rnd2 = new scala.util.Random(9)
-    (1 to 200).foreach { _ =>
-      val a = Array.fill(16)(rnd2.nextDouble() * 10)
-      val b = Array.fill(16)(rnd2.nextDouble() * 10)
-      val env = graft.functions.Kernels.envelope(a, 4)
-      assert(graft.functions.Kernels.lbKeogh(env, b) <=
-        graft.functions.Kernels.dtw(a, b, 4) + 1e-9)
-    }
   }
 
   test("neighbors returns exactly k rows per test point with rank 1..k") {
