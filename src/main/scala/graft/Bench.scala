@@ -1,24 +1,6 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageSubmitted, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
-
-/** Counts scheduler events between `reset()`s (SPARK_GRAFT_JOBS=1). */
-private[graft] final class BenchListener extends SparkListener {
-  val jobs = new AtomicLong; val stages = new AtomicLong; val tasks = new AtomicLong
-  def reset(): Unit = { jobs.set(0); stages.set(0); tasks.set(0) }
-  override def onJobStart(e: SparkListenerJobStart): Unit = {
-    jobs.incrementAndGet()
-    if (sys.env.get("SPARK_GRAFT_JOBS").contains("2")) {
-      val names = e.stageInfos.map(si => s"${si.stageId}:${si.name.takeWhile(_ != '(').trim}:${si.numTasks}").mkString(" | ")
-      System.err.println(s"[jobsite] job=${e.jobId} $names")
-    }
-  }
-  override def onStageSubmitted(e: SparkListenerStageSubmitted): Unit = stages.incrementAndGet()
-  override def onTaskEnd(e: SparkListenerTaskEnd): Unit = tasks.incrementAndGet()
-}
 
 /** Benchmark main: runs every SparkEntry query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Each query is forced through a `noop` write so
@@ -616,8 +598,7 @@ object Bench {
     // load — many-small-job queries inflate 3-7x while single-job queries
     // track local time (NOTES_r4) — so the artifact itself must let a
     // reader separate co-tenant inflation from engine cost.
-    // SPARK_GRAFT_JOBS=2 additionally prints per-job stage names (stderr).
-    val listener = new BenchListener
+    val listener = new CountingListener
     spark.sparkContext.addSparkListener(listener)
     // Median-of-N per query (default 3): a single timed run cannot
     // distinguish an engine regression from co-tenant scheduler stall —

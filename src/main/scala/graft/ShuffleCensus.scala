@@ -1,8 +1,5 @@
 package graft
 
-import java.util.concurrent.atomic.AtomicLong
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 /** Noise-immune scale census: per-query BYTES moved at two scale factors.
@@ -49,24 +46,6 @@ import org.apache.spark.sql.SparkSession
   * records the table as BYTESCHECK_r{N}.json.
   */
 object ShuffleCensus {
-
-  private final class BytesListener extends SparkListener {
-    val input = new AtomicLong
-    val shuffleWrite = new AtomicLong
-    val shuffleRead = new AtomicLong
-    val spill = new AtomicLong
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      val m = e.taskMetrics
-      if (m != null) {
-        input.addAndGet(m.inputMetrics.bytesRead)
-        shuffleWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shuffleRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-        spill.addAndGet(m.diskBytesSpilled)
-        ()
-      }
-    }
-    def reset(): Unit = Seq(input, shuffleWrite, shuffleRead, spill).foreach(_.set(0L))
-  }
 
   private val streaming = Set(
     "q67_stream_window", "q68_stream_dedup", "q69_stream_state",
@@ -131,7 +110,7 @@ object ShuffleCensus {
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val listener = new BytesListener
+    val listener = new CountingListener
     spark.sparkContext.addSparkListener(listener)
 
     val names = SparkEntry.queries.keys.toSeq.sorted.filterNot(streaming)

@@ -19,8 +19,6 @@ case class LabeledSeries(rowId: Long, series: Array[Double], label: Double)
   *                           copy of a test vector is also excluded)
   * @param radius             FastDTW radius (Python fastdtw default = 1)
   * @param band               Sakoe-Chiba band for exact DTW; -1 = unconstrained
-  * @param trainPartitions    cartesian-strategy train-side repartition (reference `:186`)
-  * @param testPartitions     cartesian-strategy test-side repartition (reference `:186`)
   * @param lbPruning          candidate cascade for dtw/fastdtw (the scale
   *                           path): rank every pair by Manhattan distance
   *                           between PAA sketches, then run the exact
@@ -41,8 +39,6 @@ case class KnnParams(
     excludeZeroDistance: Boolean = true,
     radius: Int = 1,
     band: Int = -1,
-    trainPartitions: Int = 0,
-    testPartitions: Int = 0,
     lbPruning: Boolean = false,
     candidateFactor: Int = 4,
     coarsenFactor: Int = 8)

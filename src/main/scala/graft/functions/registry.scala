@@ -28,116 +28,128 @@ object GraftFunctions {
         s"$name must be an integer literal, got: $other")
   }
 
-  /** name -> (builder, usage) */
-  val builders: Seq[(String, Seq[Expression] => Expression, String)] = Seq(
-    ("graft_euclidean",
+  /** name -> (accepted argument counts, builder, usage) */
+  private val specs: Seq[(String, Range, Seq[Expression] => Expression, String)] = Seq(
+    ("graft_euclidean", 2 to 2,
       (es: Seq[Expression]) => EuclideanDistance(es(0), es(1)),
       "graft_euclidean(a, b) - Euclidean (L2) distance between array<double>"),
-    ("graft_sqdist",
+    ("graft_sqdist", 2 to 2,
       (es: Seq[Expression]) => SquaredDistance(es(0), es(1)),
       "graft_sqdist(a, b) - squared L2 distance between array<double>"),
-    ("graft_cosine",
+    ("graft_cosine", 2 to 2,
       (es: Seq[Expression]) => CosineSimilarity(es(0), es(1)),
       "graft_cosine(a, b) - cosine similarity between array<double>"),
-    ("graft_dot",
+    ("graft_dot", 2 to 2,
       (es: Seq[Expression]) => DotProduct(es(0), es(1)),
       "graft_dot(a, b) - dot product of array<double>"),
-    ("graft_manhattan",
+    ("graft_manhattan", 2 to 2,
       (es: Seq[Expression]) => ManhattanDistance(es(0), es(1)),
       "graft_manhattan(a, b) - L1 distance between array<double>"),
-    ("graft_dtw",
+    ("graft_dtw", 2 to 3,
       (es: Seq[Expression]) =>
         DtwDistance(es(0), es(1),
           if (es.length > 2) intArg(es(2), "band") else -1),
       "graft_dtw(a, b[, band]) - exact DTW distance (|x-y| cost), optional Sakoe-Chiba band"),
-    ("graft_fastdtw",
+    ("graft_fastdtw", 2 to 3,
       (es: Seq[Expression]) =>
         FastDtwDistance(es(0), es(1),
           if (es.length > 2) intArg(es(2), "radius") else 1),
       "graft_fastdtw(a, b[, radius]) - FastDTW approximate DTW distance (Salvador & Chan 2007)"),
-    ("graft_shingle_hashes",
+    ("graft_shingle_hashes", 2 to 2,
       (es: Seq[Expression]) =>
         WordShingleHashes(es(0), intArg(es(1), "n")),
       "graft_shingle_hashes(tokens, n) - sorted distinct xxhash64 of word n-grams"),
-    ("graft_word_ngrams",
+    ("graft_word_ngrams", 2 to 2,
       (es: Seq[Expression]) =>
         WordNgrams(es(0), intArg(es(1), "n")),
       "graft_word_ngrams(tokens, n) - distinct word n-gram strings (strict: <n tokens -> empty)"),
-    ("graft_paa",
+    ("graft_paa", 2 to 2,
       (es: Seq[Expression]) =>
         SeriesPaa(es(0), intArg(es(1), "factor")),
       "graft_paa(series, factor) - Piecewise Aggregate Approximation (block means)"),
-    ("graft_barrier",
+    ("graft_barrier", 1 to 1,
       (es: Seq[Expression]) => Barrier(es(0)),
       "graft_barrier(x) - identity; blocks predicate pushdown through it"),
-    ("graft_minhash",
+    ("graft_minhash", 2 to 2,
       (es: Seq[Expression]) =>
         MinHashSignature(es(0), intArg(es(1), "k")),
       "graft_minhash(hashedSet, k) - MinHash signature (k mins of seeded long-hashes)"),
-    ("graft_minhash_bands",
+    ("graft_minhash_bands", 2 to 2,
       (es: Seq[Expression]) =>
         MinHashBandKeys(es(0), intArg(es(1), "numBands")),
       "graft_minhash_bands(sig, numBands) - LSH band keys from a minhash signature"),
-    ("graft_jaccard_sorted",
+    ("graft_jaccard_sorted", 2 to 2,
       (es: Seq[Expression]) => SortedLongJaccard(es(0), es(1)),
       "graft_jaccard_sorted(a, b) - Jaccard similarity of two sorted array<long> sets"),
-    ("graft_topk_ids",
+    ("graft_topk_ids", 3 to 3,
       (es: Seq[Expression]) =>
         BoundedTopKIdsAgg(es(0), es(1), intArg(es(2), "k")),
       "graft_topk_ids(score, id, k) - ids of the k smallest (score, id) pairs, as array<long>"),
-    ("graft_topk_scores",
+    ("graft_topk_scores", 3 to 3,
       (es: Seq[Expression]) =>
         BoundedTopKIdsAgg(es(0), es(1), intArg(es(2), "k"), emitScores = true),
       "graft_topk_scores(score, id, k) - scores of the k smallest (score, id) pairs, as array<double>"),
-    ("graft_topk_scan",
-      (es: Seq[Expression]) => {
-        // extra arguments would otherwise be dropped without a word
-        if (es.length != 3) throw new IllegalArgumentException(
-          s"graft_topk_scan(sk, trainArr, k) takes 3 arguments, got ${es.length}")
-        TopKScanIds(es(0), es(1), intArg(es(2), "k"))
-      },
+    ("graft_topk_scan", 3 to 3,
+      (es: Seq[Expression]) => TopKScanIds(es(0), es(1), intArg(es(2), "k")),
       "graft_topk_scan(sk, trainArr, k) - ids of the k broadcast train entries nearest in Manhattan distance to one test sketch"),
-    ("graft_topk_pairs",
+    ("graft_topk_pairs", 3 to 3,
       (es: Seq[Expression]) =>
         BoundedTopKIdsAgg(es(0), es(1), intArg(es(2), "k"), emitPairs = true),
       "graft_topk_pairs(score, id, k) - the k smallest (score, id) pairs as array<struct<score,id>> (ONE heap for both)"),
-    ("graft_simhash59",
+    ("graft_simhash59", 1 to 1,
       (es: Seq[Expression]) => PortableSimHash59(es(0)),
       "graft_simhash59(tokens) - 59-bit SimHash over portable charfold token hashes"),
-    ("graft_charfold_fingerprint",
+    ("graft_charfold_fingerprint", 1 to 1,
       (es: Seq[Expression]) => CharFoldFingerprint(es(0)),
       "graft_charfold_fingerprint(tokens) - rotate-xor codepoint-fold fingerprint (SQL-portable)"),
-    ("graft_har_series",
+    ("graft_har_series", 2 to 2,
       (es: Seq[Expression]) =>
         HarSyntheticSeries(es(0), intArg(es(1), "length")),
       "graft_har_series(id, length) - deterministic HAR-shaped benchmark series"),
-    ("graft_repetition",
+    ("graft_repetition", 1 to 1,
       (es: Seq[Expression]) => RepetitionStats(es(0)),
       "graft_repetition(tokens) - [unigram, bigram] repetition ratios (1 - distinct/total)"),
-    ("graft_simhash64",
+    ("graft_simhash64", 1 to 1,
       (es: Seq[Expression]) => SimHash64(es(0)),
       "graft_simhash64(tokens) - 64-bit SimHash of an array<string>"),
-    ("graft_hamming64",
+    ("graft_hamming64", 2 to 2,
       (es: Seq[Expression]) => HammingDistance64(es(0), es(1)),
       "graft_hamming64(a, b) - Hamming distance between 64-bit signatures"),
-    ("graft_cosine_i8",
+    ("graft_cosine_i8", 2 to 2,
       (es: Seq[Expression]) => CosineSimilarityI8(es(0), es(1)),
       "graft_cosine_i8(a, b) - cosine similarity over array<tinyint> (no widening copies)"),
     // Spark's own runtime-filter machinery (BloomFilterAggregate /
     // BloomFilterMightContain, used by InjectRuntimeFilter) surfaced as
     // callable functions, so BloomJoin can materialize an explicit
     // bloom-pruned semi join (exact: no false negatives + residual join).
-    ("graft_bloom_agg",
+    ("graft_bloom_agg", 3 to 3,
       (es: Seq[Expression]) =>
         new org.apache.spark.sql.catalyst.expressions.aggregate
           .BloomFilterAggregate(es(0), es(1), es(2)),
       "graft_bloom_agg(key, items, bits) - bloom filter over long keys, as binary"),
-    ("graft_might_contain",
+    ("graft_might_contain", 2 to 2,
       (es: Seq[Expression]) =>
         org.apache.spark.sql.catalyst.expressions
           .BloomFilterMightContain(es(0), es(1)),
       "graft_might_contain(bloom, key) - bloom membership probe (no false negatives)"),
   )
+
+  /** name -> (builder, usage). Each builder first checks its argument
+    * count, so both registration paths fail analysis with the usage
+    * signature on a wrong count: a missing argument would otherwise throw
+    * a bare IndexOutOfBoundsException and an extra one be dropped without
+    * a word.
+    */
+  val builders: Seq[(String, Seq[Expression] => Expression, String)] =
+    specs.map { case (name, arities, build, usage) =>
+      val checked = (es: Seq[Expression]) => {
+        if (!arities.contains(es.length)) throw new IllegalArgumentException(
+          s"${usage.split(" - ", 2).head} takes ${arities.mkString(" or ")} " +
+            s"argument${if (arities.max == 1) "" else "s"}, got ${es.length}")
+        build(es)
+      }
+      (name, checked, usage)
+    }
 
   private def info(name: String, usage: String): ExpressionInfo =
     new ExpressionInfo("graft", null, name, usage, "")

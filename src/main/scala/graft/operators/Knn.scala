@@ -164,14 +164,11 @@ object Knn {
       spreadTest.crossJoin(broadcast(trainSel))
     else if (broadcastTrain.getOrElse(useBroadcast(trainSel, p)))
       spreadTest.crossJoin(broadcast(trainSel))
-    else {
-      val t = if (p.trainPartitions > 0) trainSel.repartition(p.trainPartitions) else trainSel
-      if (p.strategy != "cartesian" &&
-          broadcastTest.getOrElse(fitsBroadcast(spreadTest)))
-        t.crossJoin(broadcast(spreadTest))
-      else
-        spreadTest.hint("shuffle_replicate_nl").crossJoin(t)
-    }
+    else if (p.strategy != "cartesian" &&
+        broadcastTest.getOrElse(fitsBroadcast(spreadTest)))
+      trainSel.crossJoin(broadcast(spreadTest))
+    else
+      spreadTest.hint("shuffle_replicate_nl").crossJoin(trainSel)
 
   /** All (test x train) candidate pairs with distances.
     * train: (train_id, train_series, label); test: (test_id, test_series).
@@ -192,10 +189,8 @@ object Knn {
     // kernel work that row then pays.
     val spreadTest =
       if (testSel.isStreaming)
-        testSel.repartition(
-          if (p.testPartitions > 0) p.testPartitions
-          else testSel.sparkSession.sparkContext.defaultParallelism)
-      else Partitioning.spread(testSel, p.testPartitions)
+        testSel.repartition(testSel.sparkSession.sparkContext.defaultParallelism)
+      else Partitioning.spread(testSel)
     val joined = crossPairs(trainSel, spreadTest, p)
     val distExpr = distanceColumn(p)(col("test_series"), col("train_series"))
     // When the zero-distance exclusion is on, wrap the distance in a
@@ -212,15 +207,19 @@ object Knn {
     else withDist.filter(col("dist").isNotNull)
   }
 
+  /** Candidate pairs with distances: the prune cascade when `lbPruning`
+    * applies (dtw/fastdtw), else every pair.
+    */
+  private def candidates(train: DataFrame, test: DataFrame, p: KnnParams): DataFrame =
+    if (p.lbPruning && (p.distance == "dtw" || p.distance == "fastdtw"))
+      prunedCandidates(train, test, p)
+    else pairs(train, test, p)
+
   /** Top-k neighbors per test point: (test_id, train_id, label, dist, rank). */
   def neighbors(train: DataFrame, test: DataFrame, p: KnnParams): DataFrame = {
     val w = Window.partitionBy(col("test_id"))
       .orderBy(col("dist"), col("train_id")) // deterministic under distance ties
-    val candidates =
-      if (p.lbPruning && (p.distance == "dtw" || p.distance == "fastdtw"))
-        prunedCandidates(train, test, p)
-      else pairs(train, test, p)
-    candidates
+    candidates(train, test, p)
       .withColumn("rank", row_number().over(w))
       .filter(col("rank") <= p.k)
   }
@@ -253,7 +252,7 @@ object Knn {
   private def prunedCandidates(train: DataFrame, test: DataFrame, p: KnnParams): DataFrame = {
     val trainSel = train.select(col("train_id"), col("train_series"), col("label"))
     val testSel = test.select(col("test_id"), col("test_series"))
-    val spreadTest = Partitioning.spread(testSel, p.testPartitions)
+    val spreadTest = Partitioning.spread(testSel)
     // barrier() on the STREAM side: a single-use alias gets inlined by
     // CollapseProject, which would recompute the O(n) sketch once per
     // PAIR instead of once per row. The TRAIN side deliberately carries
@@ -457,11 +456,7 @@ object Knn {
     * (map-side) + final, no window, one shuffle of one row per test point.
     */
   def classify1NN(train: DataFrame, test: DataFrame, p: KnnParams): DataFrame = {
-    val pr =
-      if (p.lbPruning && (p.distance == "dtw" || p.distance == "fastdtw"))
-        prunedCandidates(train, test, p.copy(k = 1))
-      else pairs(train, test, p.copy(k = 1))
-    pr.groupBy(col("test_id"))
+    candidates(train, test, p.copy(k = 1)).groupBy(col("test_id"))
       .agg(min_by(
         struct(col("dist"), col("train_id"), col("label")),
         struct(col("dist"), col("train_id"))).as("nn"))

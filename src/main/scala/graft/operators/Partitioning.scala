@@ -109,18 +109,16 @@ object Partitioning {
     }.reduce(_ + _)
   }
 
-  /** Ensure a frame has at least `target` partitions (default: the
-    * cluster's parallelism). Small inputs — a single parquet split —
+  /** Ensure a frame has at least the cluster's parallelism in
+    * partitions. Small inputs — a single parquet split —
     * otherwise serialize an entire crossJoin distance loop into ONE task.
     * No-op when the input is already wide enough (the 100 TB case: scans
     * arrive with thousands of splits).
     */
-  def spread(df: DataFrame, target: Int = 0): DataFrame = {
+  def spread(df: DataFrame): DataFrame = {
     if (df.isStreaming) return df // micro-batch planner owns partitioning
     val spark = df.sparkSession
-    val t =
-      if (target > 0) target
-      else spark.sparkContext.defaultParallelism
+    val t = spark.sparkContext.defaultParallelism
     // Width check WITHOUT forcing physical planning of the subtree (an
     // `rdd.getNumPartitions` probe would plan it once per call).
     // File-backed frames: estimate the scan's split count the way

@@ -44,6 +44,14 @@ object StreamingOracle {
     graft.sources.EventTime.nanos(s.readStream.schema(schema).parquet(stage.toString))
   }
 
+  /** State-store partitions of a bounded replay: with the per-run codegen
+    * recompiles gone the per-store fixed cost is the next term — the r22
+    * interleaved A/B measured 8/4/2 partitions at e.g. q70 2.00/1.60/1.49 s
+    * and q78 1.32/1.09/1.04 s floors; 4 keeps headroom for the 10x tier's
+    * bigger single batch.
+    */
+  private val ReplayPartitions = 4
+
   /** Run a streaming frame to completion against a memory sink; returns
     * the materialized result as a batch frame.
     *
@@ -51,9 +59,9 @@ object StreamingOracle {
     * HDFS-backed store (a stream-stream join: FOUR per partition), and a
     * streaming query pins `spark.sql.shuffle.partitions` at first start —
     * at the bench session's 32 that is 128 store instances churning
-    * checkpoint files for a bounded replay. Scoped down to 8 for the
-    * replay and restored after; an unbounded production deployment sizes
-    * it to sustained key cardinality instead.
+    * checkpoint files for a bounded replay. Scoped down to
+    * [[ReplayPartitions]] for the replay and restored after; an unbounded
+    * production deployment sizes it to sustained key cardinality instead.
     */
   private[streaming] def runBounded(out: DataFrame, mode: String): DataFrame = {
     val s = out.sparkSession
@@ -61,14 +69,7 @@ object StreamingOracle {
     val prev = s.conf.get("spark.sql.shuffle.partitions")
     val prevNoData = s.conf.get(
       "spark.sql.streaming.noDataMicroBatches.enabled", "true")
-    // 4 partitions (was 8): with the per-run codegen recompiles gone the
-    // per-store fixed cost is the next term — the r22 interleaved A/B
-    // (PROF=streamparts) measured 8/4/2 at e.g. q70 2.00/1.60/1.49 and
-    // q78 1.32/1.09/1.04 floors; 4 keeps headroom for the 10x tier's
-    // bigger single batch. Replay-harness knob only — an unbounded
-    // production deployment sizes state partitions to key cardinality.
-    s.conf.set("spark.sql.shuffle.partitions",
-      s.conf.get("spark.graft.stream.replayPartitions", "4"))
+    s.conf.set("spark.sql.shuffle.partitions", ReplayPartitions.toString)
     // No-data micro-batches only advance the watermark and evict state —
     // none of the replayed operators emits rows from them (inner interval
     // joins emit on arrival, dedup emits first-seen in the data batch,

@@ -50,8 +50,7 @@ class EndToEndSpec extends SparkTestBase {
 
     // EP2: Model-1 shaped KNN (cartesian, partial+final top-k, vote)
     val m1 = Knn.classify(trainDf, testDf,
-      KnnParams(k = 5, distance = "fastdtw", strategy = "cartesian",
-        trainPartitions = 4, testPartitions = 2))
+      KnnParams(k = 5, distance = "fastdtw", strategy = "cartesian"))
     val acc1 = Evaluation.accuracy(m1.join(truth, "test_id"),
       col("predicted_label"), col("label")).head().getDouble(0)
     assert(acc1 >= 0.8, s"Model-1 fastdtw accuracy $acc1")

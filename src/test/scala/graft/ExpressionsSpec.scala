@@ -41,6 +41,25 @@ class ExpressionsSpec extends SparkTestBase {
     assert(dtw === 0.0)
   }
 
+  test("every function refuses one argument too many or too few, naming its signature") {
+    // the accepted counts are read off the usage signature itself:
+    // "graft_dtw(a, b[, band])" takes 2 or 3
+    val fns = graft.functions.GraftFunctions.builders.map { case (name, _, usage) =>
+      val sig = usage.split(" - ", 2).head
+      val params = sig.substring(sig.indexOf('(') + 1, sig.lastIndexOf(')'))
+      val required = params.takeWhile(_ != '[').split(",").count(_.trim.nonEmpty)
+      (name, sig, required, required + params.count(_ == '['))
+    }
+    assert(fns.size === 27)
+    for ((name, sig, min, max) <- fns; n <- Seq(min - 1, max + 1)) {
+      val e = intercept[Exception] {
+        spark.sql(s"SELECT $name(${Seq.fill(n)("1").mkString(", ")})")
+      }
+      assert(e.getMessage.contains(sig) && e.getMessage.contains(s"got $n"),
+        s"$name with $n arguments: ${e.getMessage}")
+    }
+  }
+
   test("expression dtw/fastdtw agree with the Scala kernels") {
     val rnd = new scala.util.Random(5)
     val rows = (1 to 50).map { i =>

@@ -90,15 +90,6 @@ class KnnSpec extends SparkTestBase {
     assert(b === c)
   }
 
-  test("partition knobs do not change answers") {
-    val base = engine(5, "euclidean", "broadcast")
-    val knobbed = Knn.classify(trainDf, testDf,
-      KnnParams(k = 5, distance = "euclidean", strategy = "cartesian",
-        trainPartitions = 7, testPartitions = 3))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    assert(knobbed === base)
-  }
-
   test("sweepClassify: one-pass sweep matches per-k classify, scores once") {
     val ks = Seq(1, 3, 5)
     val sweep = Knn.sweepClassify(trainDf, testDf,
