@@ -456,11 +456,11 @@ object SparkEntry {
 
     // Q33 — the WHOLE prune cascade under the DuckDB oracle: with band=0
     // the exact kernel is Manhattan distance (Q29's trick), so the
-    // sketch ranking + sampled-threshold prefilter + bounded-heap
-    // candidate selection + exact phase must reproduce the brute-force
-    // Manhattan KNN bit-for-bit for the hash to match. candidateFactor
-    // is sized so the sketch ranking's survivors provably contain the
-    // true top-k on this corpus (pinned by the oracle itself).
+    // sketch ranking + bounded-heap candidate selection + exact phase
+    // must reproduce the brute-force Manhattan KNN bit-for-bit for the
+    // hash to match. candidateFactor is sized so the sketch ranking's
+    // survivors provably contain the true top-k on this corpus (pinned
+    // by the oracle itself).
     "q33_knn_pruned_band0" -> ((s, dir) => {
       GraftFunctions.register(s)
       val (train, test, _) = trainTest(s, dir)

@@ -124,19 +124,6 @@ object Materialize {
     }
   }
 
-  /** The block manager's MEASURED byte size of a frame whose leaves are
-    * persisted RDDs (localCheckpoint / cache), or None when no leaf is
-    * persisted.
-    *
-    * Catalyst stats systematically UNDERESTIMATE checkpointed frames:
-    * `LogicalRDD` preserves the pre-materialization plan's estimate,
-    * which cannot see the width of generated or deserialized payload
-    * columns (a 561-double series column estimated from `range(n)` stats
-    * reports ~16 bytes/row against ~4.5 KB/row materialized). Size-driven
-    * strategy decisions (broadcast-vs-partitioned pair joins) must use
-    * the measured size, or they will broadcast an arbitrarily large
-    * train side at scale.
-    */
   /** Whether `df`'s Catalyst size estimate can be TRUSTED for a
     * broadcast decision. FILE relations carry real on-disk byte counts
     * and LocalRelations are literal rows; a persisted LogicalRDD has a
@@ -170,6 +157,19 @@ object Materialize {
       case _ => false
     }
 
+  /** The block manager's MEASURED byte size of a frame whose leaves are
+    * persisted RDDs (localCheckpoint / cache), or None when no leaf is
+    * persisted.
+    *
+    * Catalyst stats systematically UNDERESTIMATE checkpointed frames:
+    * `LogicalRDD` preserves the pre-materialization plan's estimate,
+    * which cannot see the width of generated or deserialized payload
+    * columns (a 561-double series column estimated from `range(n)` stats
+    * reports ~16 bytes/row against ~4.5 KB/row materialized). Size-driven
+    * strategy decisions (broadcast-vs-partitioned pair joins) must use
+    * the measured size, or they will broadcast an arbitrarily large
+    * train side at scale.
+    */
   def storageBytes(df: DataFrame): Option[BigInt] = {
     val persisted = df.queryExecution.optimizedPlan.collectLeaves().collect {
       case lr: LogicalRDD if lr.rdd.getStorageLevel != StorageLevel.NONE => lr.rdd.id

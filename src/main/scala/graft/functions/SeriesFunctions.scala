@@ -47,12 +47,6 @@ object SeriesFunctions {
     */
   def topkIds(score: Column, id: Column, k: Int): Column =
     call_function("graft_topk_ids", score, id, lit(k))
-  /** The k smallest scores per group, sorted ascending — bounded-buffer
-    * order statistics (the sampled-tau pass needs the fk-th smallest
-    * without an unbounded collect_list).
-    */
-  def topkScores(score: Column, id: Column, k: Int): Column =
-    call_function("graft_topk_scores", score, id, lit(k))
   /** Fused candidate-selection scan (see [[graft.functions.TopKScanIds]]):
     * the ids of the k entries of a broadcast array<struct<id, sketch>>
     * nearest in Manhattan distance to one test-side sketch — the

@@ -70,9 +70,6 @@ final class TopKIdsBuffer(val k: Int) {
   /** ids sorted ascending by (score, id) — deterministic output order. */
   def sortedIds(): Array[Long] = sortedIdx().map(ids(_))
 
-  /** scores sorted ascending by (score, id). */
-  def sortedScores(): Array[Double] = sortedIdx().map(scores(_))
-
   /** (score, id) pairs sorted ascending by (score, id). */
   def sortedPairs(): Array[(Double, Long)] =
     sortedIdx().map(i => (scores(i), ids(i)))
@@ -95,14 +92,12 @@ final class TopKIdsBuffer(val k: Int) {
   * what an all-null-score group produced (and the downstream
   * `explode(cand_ids)` drops the row either way).
   *
-  * Why it is faster: the old shape materialized |test| x |train| joined
-  * rows through BroadcastNestedLoopJoin + per-pair projection + hash
-  * aggregation (measured ~2.5 us/pair of machinery around a ~0.1 us
-  * kernel on the HAR workload), twice when the sampled-tau prefilter ran.
-  * This expression runs the kernel in a tight loop per test row over the
-  * broadcast sketch array — and the prefilter (which exists only to
-  * bound aggregate state) becomes unnecessary: the heap here is local to
-  * one row's evaluation.
+  * Why it is faster: the join+aggregate shape materializes |test| x
+  * |train| joined rows through BroadcastNestedLoopJoin + per-pair
+  * projection + hash aggregation (measured ~2.5 us/pair of machinery
+  * around a ~0.1 us kernel on the HAR workload). This expression runs
+  * the kernel in a tight loop per test row over the broadcast sketch
+  * array, with the heap local to one row's evaluation.
   *
   * The broadcast side is decoded to primitive arrays ONCE per task per
   * thread (identity-checked on the UnsafeArrayData's base buffer — every
@@ -237,7 +232,8 @@ object TopKScanIds {
 }
 
 /** Native bounded top-k-by-score aggregate: collects the ids of the k
-  * smallest (score, id) pairs per group as array<long>.
+  * smallest (score, id) pairs per group as array<long> (with
+  * `emitPairs`, the pairs themselves as array<struct<score, id>>).
   *
   * This is the third incarnation of the reference's two-phase heap
   * (`heapq.nsmallest` per partition then after the shuffle,
@@ -253,18 +249,14 @@ case class BoundedTopKIdsAgg(
     scoreChild: Expression,
     idChild: Expression,
     k: Int,
-    emitScores: Boolean = false,
     emitPairs: Boolean = false,
     mutableAggBufferOffset: Int = 0,
     inputAggBufferOffset: Int = 0)
     extends TypedImperativeAggregate[TopKIdsBuffer] with ImplicitCastInputTypes {
   require(k >= 1, "k must be >= 1")
-  require(!(emitScores && emitPairs), "emitScores and emitPairs are exclusive")
 
   override def prettyName: String =
-    if (emitPairs) "graft_topk_pairs"
-    else if (emitScores) "graft_topk_scores"
-    else "graft_topk_ids"
+    if (emitPairs) "graft_topk_pairs" else "graft_topk_ids"
   override def children: Seq[Expression] = Seq(scoreChild, idChild)
   // analysis-time coercion: an INT id or FLOAT score would otherwise
   // pass analysis and ClassCastException per task at execution
@@ -275,7 +267,6 @@ case class BoundedTopKIdsAgg(
       ArrayType(StructType(Seq(
         StructField("score", DoubleType, nullable = false),
         StructField("id", LongType, nullable = false))), containsNull = false)
-    else if (emitScores) ArrayType(DoubleType, containsNull = false)
     else ArrayType(LongType, containsNull = false)
 
   override def createAggregationBuffer(): TopKIdsBuffer = new TopKIdsBuffer(k)
@@ -300,7 +291,6 @@ case class BoundedTopKIdsAgg(
         buf.sortedPairs().map { case (s, id) =>
           InternalRow(s, id): Any
         })
-    else if (emitScores) ArrayData.toArrayData(buf.sortedScores())
     else ArrayData.toArrayData(buf.sortedIds())
 
   override def serialize(buf: TopKIdsBuffer): Array[Byte] = {

@@ -133,9 +133,8 @@ object Knn {
     * phase (the unpruned crossJoin AND the prune cascade's ranking +
     * payload joins): broadcast while the train side fits an executor,
     * partitioned cartesian beyond that. `broadcastTrain` carries a
-    * pre-computed decision so callers that build several pair joins per
-    * query (the prune cascade: sampled tau pass, main scoring pass,
-    * payload join-back) analyze the train subtree once, not per join.
+    * decision the caller already made (the prune cascade decides on the
+    * full train projection, then joins only its sketch).
     *
     * When the train side exceeds the broadcast budget: broadcast the
     * TEST side instead if it fits (the train side then STREAMS — never
@@ -149,8 +148,7 @@ object Knn {
     */
   private[operators] def crossPairs(
       trainSel: DataFrame, spreadTest: DataFrame, p: KnnParams,
-      broadcastTrain: Option[Boolean] = None,
-      broadcastTest: Option[Boolean] = None): DataFrame =
+      broadcastTrain: Option[Boolean] = None): DataFrame =
     if (spreadTest.isStreaming)
       // stream-static all-pairs has exactly ONE executable plan: the
       // static side broadcast under a BroadcastNestedLoopJoin (an
@@ -164,8 +162,7 @@ object Knn {
       spreadTest.crossJoin(broadcast(trainSel))
     else if (broadcastTrain.getOrElse(useBroadcast(trainSel, p)))
       spreadTest.crossJoin(broadcast(trainSel))
-    else if (p.strategy != "cartesian" &&
-        broadcastTest.getOrElse(fitsBroadcast(spreadTest)))
+    else if (p.strategy != "cartesian" && fitsBroadcast(spreadTest))
       trainSel.crossJoin(broadcast(spreadTest))
     else
       spreadTest.hint("shuffle_replicate_nl").crossJoin(trainSel)
@@ -224,11 +221,6 @@ object Knn {
       .filter(col("rank") <= p.k)
   }
 
-  /** The oversize path's tau pass samples ~1/PrefilterSampleMod of the
-    * train ids (see [[prunedCandidates]]).
-    */
-  private val PrefilterSampleMod = 16
-
   /** Prune cascade, the DTW scale path:
     * 1. sketch each side ONCE scan-side (PAA block means);
     * 2. rank every pair by Manhattan distance between the sketches —
@@ -253,28 +245,16 @@ object Knn {
     val trainSel = train.select(col("train_id"), col("train_series"), col("label"))
     val testSel = test.select(col("test_id"), col("test_series"))
     val spreadTest = Partitioning.spread(testSel)
-    // barrier() on the STREAM side: a single-use alias gets inlined by
-    // CollapseProject, which would recompute the O(n) sketch once per
-    // PAIR instead of once per row. The TRAIN side deliberately carries
-    // NO barrier: the build side of a pair join materializes its
-    // projection once per row into the broadcast/shuffle block (nothing
-    // collapses across the join boundary), and keeping that subtree
-    // deterministic lets the tau pass and the main pass REUSE one
-    // materialized sketch exchange (sameResult rejects non-deterministic
-    // plans, so a barrier there would force two builds).
-    def paaSide(df: DataFrame, seriesCol: String, idCol: String, out: String,
-        withBarrier: Boolean = true) = {
-      val sketch = SeriesFunctions.paa(col(seriesCol), p.coarsenFactor)
-      df.withColumn(out,
-        if (withBarrier) SeriesFunctions.barrier(sketch) else sketch)
+    // barrier() on each side's sketch: a single-use alias gets inlined
+    // by CollapseProject, which would recompute the O(n) sketch once per
+    // PAIR instead of once per row
+    def paaSide(df: DataFrame, seriesCol: String, idCol: String, out: String) =
+      df.withColumn(out, SeriesFunctions.barrier(
+          SeriesFunctions.paa(col(seriesCol), p.coarsenFactor)))
         .select(col(idCol), col(out))
-    }
-    def trainSketch: DataFrame =
-      paaSide(trainSel, "train_series", "train_id", "tsk", withBarrier = false)
-    // one stats-driven decision per query and side (conservative:
-    // measured on the FULL train projection, reused for the smaller
-    // sketch/sample joins; the test-side decision is only consulted when
-    // the train side exceeds the budget)
+    val trainSketch = paaSide(trainSel, "train_series", "train_id", "tsk")
+    // one stats-driven decision per query (conservative: measured on the
+    // FULL train projection, reused for the smaller sketch join)
     val bcastTrain = useBroadcast(trainSel, p)
     val fk = p.candidateFactor * p.k
     val distExpr = SeriesFunctions.barrier(
@@ -285,17 +265,14 @@ object Knn {
       // travel as ONE broadcast array<struct<id, sketch>> row and a
       // single expression ([[graft.functions.TopKScanIds]]) ranks every
       // train entry and selects the top-fk candidates per TEST ROW —
-      // replacing two BroadcastNestedLoopJoin pair passes (sampled-tau +
-      // main), two ObjectHashAggregate pairs with their exchanges, the
-      // test-payload SortMergeJoin and the explicit repartition of the
-      // old shape (measured ~2.5 us/pair of join+aggregate machinery
+      // replacing the oversize shape's BroadcastNestedLoopJoin pair pass,
+      // ObjectHashAggregate with its exchange and test-payload
+      // SortMergeJoin (measured ~2.5 us/pair of join+aggregate machinery
       // around a ~0.1 us ranking kernel at HAR scale). Selection
       // semantics are identical — same kernel, same TopKIdsBuffer total
-      // order — and the sampled-tau prefilter is unnecessary here: it
-      // existed to bound aggregate state, and the fused heap is local to
-      // one row's evaluation. The test payload stays ON the row through
-      // candidate selection, so the exact phase explodes in-partition at
-      // the spread's parallelism with no join-back.
+      // order. The test payload stays ON the row through candidate
+      // selection, so the exact phase explodes in-partition at the
+      // spread's parallelism with no join-back.
       val testSk = spreadTest.withColumn("sk", SeriesFunctions.barrier(
         SeriesFunctions.paa(col("test_series"), p.coarsenFactor)))
       val trainArr = trainSketch
@@ -321,64 +298,16 @@ object Knn {
 
     // Oversize-train path: slim pair scores + bounded-heap selection (the
     // shape that never replicates or collects the train payload).
-    val testSketch = paaSide(spreadTest, "test_series", "test_id", "sk")
-    // barrier on the score: the prefilter puts a filter + projection
-    // ABOVE this select (across the tau join), and predicate pushdown
-    // would otherwise inline the ranking kernel into the filter — one
-    // evaluation per pair becomes two
-    val scoreExpr = SeriesFunctions.barrier(
-      SeriesFunctions.manhattan(col("sk"), col("tsk")))
-    val bcastTest = fitsBroadcast(testSketch)
     // SLIM ranking rows: only (test_id, train_id, score) feed candidate
     // selection — payloads would put candidateCount * seriesBytes into
     // every buffer. Selection is a bounded-heap AGGREGATE (the
     // reference's two-phase heap, `Team11-Project.py:180`/`:195`), not a
     // window rank: sorting tens of millions of pair rows to keep
     // factor*k per group costs more than every ranking score combined.
-    //
-    // Sampled-threshold pushdown in front of the heap: the fk-th smallest
-    // score within a deterministic ~1/mod train subsample upper-bounds
-    // the fk-th smallest overall (any subset's order statistic can only
-    // move up), so filtering `score <= tau` provably keeps the true
-    // top-fk — while the aggregate then sees ~fk*mod rows per test point
-    // instead of |train|. This is TakeOrdered's sampling trick applied
-    // map-side; the aggregation machinery (not the score kernel) is the
-    // measured bottleneck at HAR scale. When the subsample is smaller
-    // than the candidate budget the filter self-disables (tau = +inf).
-    //
-    // The sampled pass reuses the FULL train-sketch subtree and filters
-    // pairs AFTER the join (barrier keeps the predicate out of the join
-    // condition and un-pushable): the tau pass and the main pass then
-    // share ONE materialized sketch exchange (ReusedExchange) instead of
-    // building a second sketch-of-the-sample broadcast — one fewer
-    // scheduler round-trip and one sketch materialization, at the cost of
-    // a cheap codegen'd hash test per pair (the ranking kernel still runs
-    // only on sampled survivors: the filter sits below the score
-    // projection).
-    val sampledScores =
-      crossPairs(trainSketch, testSketch, p, Some(bcastTrain), Some(bcastTest))
-        .filter(SeriesFunctions.barrier(
-          pmod(xxhash64(col("train_id")), lit(PrefilterSampleMod)) === 0))
-        .select(col("test_id"), col("train_id"), scoreExpr.as("score"))
-    // bounded-heap order statistic: the fk-th smallest sampled score,
-    // with at most fk doubles of state per group (collect_list would
-    // buffer ~|train|/mod scores per test id — unbounded state inside
-    // the prefilter that exists to bound state)
-    val tau = sampledScores
-      .groupBy(col("test_id"))
-      .agg(SeriesFunctions.topkScores(col("score"), col("train_id"), fk).as("ss"))
-      .select(col("test_id"),
-        coalesce(get(col("ss"), lit(fk - 1)), lit(Double.MaxValue)).as("tau"))
-    // attach tau to the TEST side (a |test|-row broadcast join), so the
-    // threshold filter fuses into the crossJoin's output projection — no
-    // second pass over the pair stream. Left join: an empty subsample
-    // (tiny train side) must disable the filter, not drop every row.
-    val testWithTau = testSketch.join(broadcast(tau), Seq("test_id"), "left")
-    val slimDf =
-      crossPairs(trainSketch, testWithTau, p, Some(bcastTrain), Some(bcastTest))
-        .select(col("test_id"), col("train_id"), scoreExpr.as("score"), col("tau"))
-        .filter(col("score") <= coalesce(col("tau"), lit(Double.MaxValue)))
-        .select("test_id", "train_id", "score")
+    val testSketch = paaSide(spreadTest, "test_series", "test_id", "sk")
+    val slimDf = crossPairs(trainSketch, testSketch, p, Some(bcastTrain))
+      .select(col("test_id"), col("train_id"),
+        SeriesFunctions.manhattan(col("sk"), col("tsk")).as("score"))
     // ONE row per test point (test_id, candidate-id array) out of the
     // heap — the exact phase joins payloads at |test| row counts, not
     // |test|*fk. Selection runs as the native TypedImperativeAggregate

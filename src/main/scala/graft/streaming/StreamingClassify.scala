@@ -42,35 +42,12 @@ object StreamingClassify {
     * (`KeyValueGroupedDataset` + `GroupState`) for accumulating per-key
     * aggregates across micro-batches. Works identically on batch frames
     * (state starts empty, one group pass).
-    */
-  def runningUserStats(events: DataFrame): DataFrame = {
-    import events.sparkSession.implicits._
-    import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout}
-    // coalesce BEFORE the typed boundary: the tuple encoder's primitive
-    // double field throws on NULL ("Null value appeared in non-nullable
-    // field") and events.value is nullable. Contract (matches the
-    // oracle's COUNT(*) + SUM-skips-NULL exactly): the row is counted,
-    // a null value contributes 0.
-    val typed = events
-      .select(col("user_id").cast("long"),
-        coalesce(col("value").cast("double"), lit(0.0)))
-      .as[(Long, Double)]
-    typed.groupByKey(_._1)
-      .mapGroupsWithState(GroupStateTimeout.NoTimeout)(
-        (uid: Long, it: Iterator[(Long, Double)], state: GroupState[(Long, Double)]) => {
-          var (c, s) = state.getOption.getOrElse((0L, 0.0))
-          it.foreach { case (_, v) => c += 1; s += v }
-          state.update((c, s))
-          (uid, c, s)
-        })
-      .toDF("user_id", "events", "total_value")
-  }
-
-  /** [[runningUserStats]] with the value sum accumulated in integer
-    * cents: `mapGroupsWithState` feeds each group's rows in arbitrary
-    * order, and a double sum is order-sensitive in its last ulps — the
-    * integer accumulator makes the emitted total an exact, order-free
-    * function of the row set (what the bounded oracle replay hashes).
+    *
+    * The value sum accumulates in integer cents: `mapGroupsWithState`
+    * feeds each group's rows in arbitrary order, and a double sum is
+    * order-sensitive in its last ulps — the integer accumulator makes the
+    * emitted total an exact, order-free function of the row set (what
+    * the bounded oracle replay hashes).
     */
   def runningUserStatsCents(events: DataFrame): DataFrame = {
     import events.sparkSession.implicits._

@@ -17,10 +17,14 @@ class AggregatesSpec extends SparkTestBase {
     for (g <- 0L until 20L; i <- 0L until 200L)
       yield (g, i, (rnd.nextInt(40) / 7.0))
 
-  private def oracle(k: Int): Map[Long, Seq[Long]] =
+  /** The k smallest (score, id) pairs per group, sorted. */
+  private def oraclePairs(k: Int): Map[Long, Seq[(Double, Long)]] =
     rows.groupBy(_._1).map { case (g, rs) =>
-      g -> rs.map(r => (r._3, r._2)).sorted.take(k).map(_._2)
+      g -> rs.map(r => (r._3, r._2)).sorted.take(k)
     }
+
+  private def oracle(k: Int): Map[Long, Seq[Long]] =
+    oraclePairs(k).map { case (g, ps) => g -> ps.map(_._2) }
 
   test("graft_topk_ids matches in-memory oracle (ties broken by id)") {
     val df = rows.toDF("gid", "id", "score")
@@ -53,23 +57,16 @@ class AggregatesSpec extends SparkTestBase {
     assert(got === Seq(11L, 10L))
   }
 
-  test("graft_topk_pairs: one heap emits the same (score, id) rows as ids+scores") {
+  test("graft_topk_pairs: one heap emits the k smallest (score, id) rows, sorted") {
     val df = rows.toDF("gid", "id", "score")
-    val k = 6
-    val viaPairs = df.groupBy(col("gid"))
-      .agg(SeriesFunctions.topkPairs(col("score"), col("id"), k).as("tk"))
-      .select(col("gid"), posexplode(col("tk")))
-      .select(col("gid"), col("pos"), col("col.score"), col("col.id"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getLong(3)))
-      .toSet
-    val viaTwo = df.groupBy(col("gid"))
-      .agg(SeriesFunctions.topkIds(col("score"), col("id"), k).as("ids"),
-        SeriesFunctions.topkScores(col("score"), col("id"), k).as("ss"))
-      .select(col("gid"), posexplode(arrays_zip(col("ids"), col("ss"))))
-      .select(col("gid"), col("pos"), col("col.ss"), col("col.ids"))
-      .collect().map(r => (r.getLong(0), r.getInt(1), r.getDouble(2), r.getLong(3)))
-      .toSet
-    assert(viaPairs === viaTwo)
+    for (k <- Seq(1, 6)) {
+      val got = df.groupBy(col("gid"))
+        .agg(SeriesFunctions.topkPairs(col("score"), col("id"), k).as("tk"))
+        .collect().map(r => r.getLong(0) ->
+          r.getSeq[org.apache.spark.sql.Row](1).map(p => (p.getDouble(0), p.getLong(1))))
+        .toMap
+      assert(got === oraclePairs(k), s"k=$k")
+    }
   }
 
   test("graft_topk_scan == pair-join + graft_topk_ids (ties, nulls)") {

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{Evaluation, TopKAggregator}
+import graft.operators.Evaluation
 import org.apache.spark.sql.functions._
 
 class EvaluationSpec extends SparkTestBase {
@@ -92,18 +92,6 @@ class EvaluationSpec extends SparkTestBase {
     assert(rows.count(_.isNullAt(0)) === 2)
   }
 
-  test("TopKAggregator: partial/merge == global sort.take(k)") {
-    val rnd = new scala.util.Random(42)
-    val data = Seq.fill(500)((rnd.nextDouble() * 100, rnd.nextInt(5).toDouble))
-    val agg = new TopKAggregator(10)
-    // simulate partial phase over 7 partitions + merge
-    val partials = data.grouped(72).map(part =>
-      part.foldLeft(agg.zero)((b, v) => agg.reduce(b, v))).toSeq
-    val merged = partials.reduce((a, b) => agg.merge(a, b))
-    val expected = data.sorted.take(10)
-    assert(agg.finish(merged).toSeq === expected)
-  }
-
   test("BoundedTopKByScore: keeps k smallest (score, id), deterministic ties") {
     import graft.operators.BoundedTopKByScore
     val agg = new BoundedTopKByScore(3)
@@ -116,11 +104,5 @@ class EvaluationSpec extends SparkTestBase {
     val (l, r) = rows.splitAt(2)
     val merged = agg.merge(l.foldLeft(agg.zero)(agg.reduce), r.foldLeft(agg.zero)(agg.reduce))
     assert(agg.finish(merged).toSeq === Seq(11L, 13L, 12L))
-  }
-
-  test("TopKAggregator as typed Dataset aggregate") {
-    val ds = Seq((0.5, 1.0), (0.1, 2.0), (0.9, 1.0), (0.2, 3.0)).toDS()
-    val top2 = ds.select(new TopKAggregator(2).toColumn).head()
-    assert(top2.toSeq === Seq((0.1, 2.0), (0.2, 3.0)))
   }
 }

@@ -153,6 +153,39 @@ class KnnSpec extends SparkTestBase {
         .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(pruned === exact, s"strategy=$strategy")
     }
+    // the oversize shape a fitted classifier takes: the localCheckpointed
+    // train side measures over the lowered cap, the test side fits under
+    // it, so the slim pair pass broadcasts the TEST side and the train
+    // side streams into the graft_topk_ids heap. k=5 keeps the 20
+    // candidates of the cases above; k=1 keeps all 40, because test 108's
+    // DTW nearest neighbour ranks past 20 by PAA on this noisy fixture
+    // (every strategy misses it alike at a smaller budget)
+    val exactByK = Seq(1 -> Knn.classify(trainDf, testDf,
+      KnnParams(k = 1, distance = "dtw", band = 4))
+      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap, 5 -> exact)
+    val ckTrain = trainDf.localCheckpoint()
+    spark.conf.set("spark.graft.knn.broadcastFloor", "1k")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "1k")
+    try {
+      for ((k, exactK) <- exactByK) {
+        val pred = Knn.classify(ckTrain, testDf,
+          KnnParams(k = k, distance = "dtw", band = 4, lbPruning = true,
+            coarsenFactor = 4, candidateFactor = if (k == 1) 40 else 4))
+        val bnlj = pred.queryExecution.sparkPlan.collect {
+          case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
+        }
+        assert(bnlj.nonEmpty &&
+          bnlj.forall(_.right.output.exists(_.name == "test_id")),
+          s"k=$k: expected the pair pass to broadcast the test side:\n" +
+            pred.queryExecution.sparkPlan)
+        assert(pred.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap === exactK,
+          s"oversize k=$k")
+      }
+    } finally {
+      spark.conf.unset("spark.graft.knn.broadcastFloor")
+      spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      graft.core.Materialize.releaseCheckpoint(ckTrain)
+    }
   }
 
   test("PAA ranker stays exact where LB_Keogh degenerates (wide band)") {

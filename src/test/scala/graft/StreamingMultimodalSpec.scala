@@ -36,7 +36,7 @@ class StreamingMultimodalSpec extends SparkTestBase {
     import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
     implicit val sq = spark.sqlContext
     val input = MemoryStream[(Long, Double)]
-    val out = StreamingClassify.runningUserStats(
+    val out = StreamingClassify.runningUserStatsCents(
       input.toDF().toDF("user_id", "value"))
     val qname = s"running_stats_${System.nanoTime()}"
     val q = out.writeStream.outputMode("update").format("memory")

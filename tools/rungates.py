@@ -9,8 +9,10 @@ their own tool, recording artifacts in the repo root:
                    then bytesdiff vs the previous round when present)
   3. faultcheck -> FAULTCHECK_r{N}.json
   4. minicluster-> MINICLUSTER_r{N}.json (+ MlClusterProbe)
-  5. planner-config Verify matrix at sf0.01 (AQE off; NO_CODEGEN),
-     each checked against the DuckDB oracle.
+  5. planner-config Verify matrix at sf0.01 (AQE off; NO_CODEGEN;
+     oversize: broadcast caps lowered to 1k so every size-driven
+     decision takes its oversize branch), each checked against the
+     DuckDB oracle.
 
 SCALECHECK is NOT chained here — it synthesizes multi-GB tiers and has
 its own resumable tool (tools/scalecheck.py --round N); run it
@@ -156,7 +158,9 @@ def main():
         for tag, conf in (
                 ("noaqe", "spark.sql.adaptive.enabled=false"),
                 ("nocodegen", "spark.sql.codegen.wholeStage=false;"
-                              "spark.sql.codegen.factoryMode=NO_CODEGEN")):
+                              "spark.sql.codegen.factoryMode=NO_CODEGEN"),
+                ("oversize", "spark.graft.knn.broadcastFloor=1k;"
+                             "spark.sql.autoBroadcastJoinThreshold=1k")):
             print(f"[rungates] 5/5 planner-config Verify ({tag})", flush=True)
             out = f"{tmp}/verify_{tag}"
             log = f"{tmp}/verify_{tag}.log"
