@@ -975,9 +975,7 @@ object SparkEntry {
     }),
 
     // Q19 — document fingerprint: portable 59-bit rotate-xor codepoint
-    // fold, recomputed exactly by the DuckDB oracle (the xxhash64-mixed
-    // variant stays as SeriesFunctions.fingerprint, spec-tested; this
-    // declared query uses the oracle-checkable hash)
+    // fold, recomputed exactly by the DuckDB oracle
     "q19_fingerprint" -> ((s, dir) => {
       GraftFunctions.register(s)
       docsSorted(s, dir)

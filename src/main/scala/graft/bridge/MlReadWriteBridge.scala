@@ -26,10 +26,11 @@ object MlReadWriteBridge {
     DefaultParamsReader.loadMetadata(path, spark, expectedClassName).uid
 
   /** Set every param recorded in `path/metadata` onto `instance`
-    * (which must already carry the stored uid).
+    * (which must already carry the stored uid), except those named in
+    * `skipParams`.
     */
   def loadAndSetParams(instance: Params, path: String, spark: SparkSession,
-      expectedClassName: String): Unit =
+      expectedClassName: String, skipParams: List[String]): Unit =
     DefaultParamsReader.loadMetadata(path, spark, expectedClassName)
-      .getAndSetParams(instance)
+      .getAndSetParams(instance, Some(skipParams))
 }

@@ -32,7 +32,7 @@ object Materialize {
 
   /** Materialize `df` once as a graft-owned MEMORY_AND_DISK persist and
     * return a frame reading those blocks — the internal-materialization
-    * primitive behind Tfidf's tf table and KnnClassifier's cacheInput.
+    * primitive behind Tfidf's tf table.
     *
     * Unlike `spark.createDataFrame(df.rdd, df.schema)` (the r15 shape),
     * the round-trip stays at the `InternalRow` layer
@@ -47,9 +47,9 @@ object Materialize {
     * block recomputes from the plan instead of failing (the property
     * [[releaseOwned]]'s recompute contract and the TfidfSpec release
     * pin rely on). NOT eager by itself — the caller decides which
-    * action warms it (Tfidf folds N in the same action; cacheInput
-    * counts), because a cold persist under one action's concurrent
-    * subtrees races (AQE schedules independent stages in parallel).
+    * action warms it (Tfidf folds N in the same action), because a cold
+    * persist under one action's concurrent subtrees races (AQE
+    * schedules independent stages in parallel).
     */
   private[graft] def persistInternal(df: DataFrame): DataFrame = {
     val internal = df.queryExecution.toRdd.map(_.copy())
@@ -74,8 +74,8 @@ object Materialize {
     * INCLUDING ones the caller (or a fitted model) still needs. A
     * KnnClassifierModel transform result carries the model's
     * checkpointed train set as exactly such a leaf; releasing the
-    * result through here kills the model (round-16 finding — the
-    * cacheInput spec caught it). For a result that merely CONTAINS
+    * result through here kills the model (round-16 finding; PipelineSpec
+    * pins it). For a result that merely CONTAINS
     * graft-internal persists, use [[releaseOwned]], which frees only
     * registry members and can never break anything else.
     * (Graft-owned persists DO keep lineage — releasing them trades
@@ -86,7 +86,7 @@ object Materialize {
 
   /** Free ONLY the graft-owned internal persists
     * ([[registerOwnedPersist]]: withRowId's persist-before-count,
-    * Tfidf's tf table, KnnClassifier's cacheInput) reachable from
+    * Tfidf's tf table) reachable from
     * `df`'s lineage. Safe on any frame at any time: never touches a
     * caller persist or a model's localCheckpoint, and owned persists
     * keep lineage, so a later evaluation of `df` recomputes instead of
@@ -166,7 +166,7 @@ object Materialize {
     * which cannot see the width of generated or deserialized payload
     * columns (a 561-double series column estimated from `range(n)` stats
     * reports ~16 bytes/row against ~4.5 KB/row materialized). Size-driven
-    * strategy decisions (broadcast-vs-partitioned pair joins) must use
+    * plan decisions (broadcast-vs-partitioned pair joins) must use
     * the measured size, or they will broadcast an arbitrarily large
     * train side at scale.
     */

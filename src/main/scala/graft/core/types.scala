@@ -6,11 +6,13 @@ package graft.core
 case class LabeledSeries(rowId: Long, series: Array[Double], label: Double)
 
 /** KNN configuration (reference Models 1 & 2, `Team11-Project.py:119-476`,
-  * `:480-580`).
+  * `:480-580`). The pair-join plan is not a field: [[graft.operators.Knn]]
+  * picks broadcast or partitioned cartesian from the measured sizes of
+  * the two sides (`spark.graft.knn.broadcastFloor`,
+  * `spark.sql.autoBroadcastJoinThreshold`).
   *
   * @param k                  neighbor count (reference sweeps 5..70; Model 2 fixes 1)
   * @param distance           "euclidean" | "sqdist" | "manhattan" | "dtw" | "fastdtw" | "cosine"
-  * @param strategy           "auto" | "broadcast" | "cartesian"
   * @param excludeZeroDistance drop self-matches (reference `:176-177`,
   *                           `:357-358`); "zero" is in the metric's own
   *                           terms — for cosine the column is the
@@ -35,7 +37,6 @@ case class LabeledSeries(rowId: Long, series: Array[Double], label: Double)
 case class KnnParams(
     k: Int = 1,
     distance: String = "euclidean",
-    strategy: String = "auto",
     excludeZeroDistance: Boolean = true,
     radius: Int = 1,
     band: Int = -1,

@@ -47,13 +47,6 @@ object SeriesFunctions {
     */
   def topkIds(score: Column, id: Column, k: Int): Column =
     call_function("graft_topk_ids", score, id, lit(k))
-  /** Fused candidate-selection scan (see [[graft.functions.TopKScanIds]]):
-    * the ids of the k entries of a broadcast array<struct<id, sketch>>
-    * nearest in Manhattan distance to one test-side sketch — the
-    * broadcast-path replacement for pair-join + graft_topk_ids.
-    */
-  def topkScan(sk: Column, trainArr: Column, k: Int): Column =
-    call_function("graft_topk_scan", sk, trainArr, lit(k))
   /** The k smallest (score, id) pairs per group as array<struct<score,id>>,
     * sorted ascending — ONE heap maintains both columns (two separate
     * ids+scores aggregates would insert every input row twice).
@@ -87,32 +80,7 @@ object SeriesFunctions {
     when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(dotBuiltin(a, b) / (na * nb))
   }
 
-  /** MinHash signature: `numHashes` independent hash functions simulated by
-    * seeding xxhash64 with the hash index (standard MinHash over shingles;
-    * Broder 1997). Pure built-ins -> codegen'd, partition-local, no shuffle.
-    */
-  def minhashSignature(tokens: Column, numHashes: Int): Column =
-    array((0 until numHashes).map { i =>
-      array_min(transform(tokens, t => xxhash64(lit(i), t)))
-    }: _*)
-
-  /** LSH band keys from a minhash signature: hash of each band's slice.
-    * rowsPerBand * numBands must equal the signature length.
-    */
-  def lshBandKeys(signature: Column, numBands: Int, rowsPerBand: Int): Column =
-    array((0 until numBands).map { b =>
-      xxhash64(lit(b), slice(signature, b * rowsPerBand + 1, rowsPerBand).cast("string"))
-    }: _*)
-
-  /** Order-sensitive rolling fingerprint of a token stream: rotate-left
-    * 5 + XOR accumulation of per-token hashes — document fingerprinting
-    * for exact-order dedup. Pure bitwise ops (no ANSI overflow).
-    */
-  def fingerprint(tokens: Column): Column =
-    aggregate(transform(tokens, t => xxhash64(t)), lit(0L),
-      (acc, h) => (shiftleft(acc, 5).bitwiseOR(shiftrightunsigned(acc, 59))).bitwiseXOR(h))
-
-  /** SQL-portable fingerprint variant (oracle-checkable) — see
+  /** Order-sensitive document fingerprint (oracle-checkable, q19) — see
     * [[graft.functions.CharFoldFingerprint]].
     */
   def charFoldFingerprint(tokens: Column): Column =

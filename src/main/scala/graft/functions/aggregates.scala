@@ -102,7 +102,12 @@ final class TopKIdsBuffer(val k: Int) {
   * The broadcast side is decoded to primitive arrays ONCE per task per
   * thread (identity-checked on the UnsafeArrayData's base buffer — every
   * joined row references the same broadcast bytes), the §4.5 "heavy
-  * state once per task" discipline.
+  * state once per task" discipline. That cache is sound only when the
+  * train array is a broadcast row's immutable bytes: a producer that
+  * reuses row buffers could hand over a different array at the same
+  * address. So the expression is not a registered SQL function; only
+  * [[graft.operators.Knn]] builds it ([[TopKScanIds.column]]), over a
+  * broadcast `collect_list` row.
   */
 case class TopKScanIds(
     left: Expression,  // test sketch: array<double>
@@ -159,6 +164,18 @@ case class TopKScanIds(
 }
 
 object TopKScanIds {
+
+  /** The ids of the k entries of the broadcast `trainArr`
+    * (array<struct<id, sketch>>) nearest in Manhattan distance to the
+    * test sketch `sk`.
+    */
+  private[graft] def column(
+      sk: org.apache.spark.sql.Column, trainArr: org.apache.spark.sql.Column,
+      k: Int): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(TopKScanIds(
+      ColumnBridge.expression(sk), ColumnBridge.expression(trainArr), k))
+  }
 
   /** Per-thread decoded broadcast side: every joined row references the
     * same broadcast bytes, so the identity check on the UnsafeArrayData's

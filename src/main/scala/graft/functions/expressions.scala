@@ -436,10 +436,8 @@ object SortedLongJaccard {
 
 /** Order-sensitive document fingerprint with a PORTABLE hash: per token,
   * fold codepoints with rotate-left-5 XOR; across tokens, fold the token
-  * hashes the same way. Unlike the xxhash64-based
-  * [[SeriesFunctions.fingerprint]] (the better-mixed production variant),
-  * every step here is expressible in ANSI-ish SQL bit ops — so the
-  * driver's DuckDB oracle can recompute it exactly (q19).
+  * hashes the same way. Every step is expressible in ANSI-ish SQL bit
+  * ops, so the driver's DuckDB oracle can recompute it exactly (q19).
   *
   * The rotate runs in a 59-BIT space (mask the top 5 bits, shift, OR the
   * carry): a true 64-bit rotate sets the sign bit, and SQL engines with

@@ -85,9 +85,6 @@ object GraftFunctions {
       (es: Seq[Expression]) =>
         BoundedTopKIdsAgg(es(0), es(1), intArg(es(2), "k")),
       "graft_topk_ids(score, id, k) - ids of the k smallest (score, id) pairs, as array<long>"),
-    ("graft_topk_scan", 3 to 3,
-      (es: Seq[Expression]) => TopKScanIds(es(0), es(1), intArg(es(2), "k")),
-      "graft_topk_scan(sk, trainArr, k) - ids of the k broadcast train entries nearest in Manhattan distance to one test sketch"),
     ("graft_topk_pairs", 3 to 3,
       (es: Seq[Expression]) =>
         BoundedTopKIdsAgg(es(0), es(1), intArg(es(2), "k"), emitPairs = true),

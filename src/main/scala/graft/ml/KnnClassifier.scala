@@ -21,9 +21,11 @@ import org.apache.spark.sql.{Column, DataFrame, Dataset}
   * `VectorAssembler`, not only through [[graft.operators.Knn]]).
   *
   * Every knob mirrors a [[KnnParams]] field (same names, same
-  * defaults); `featuresCol` accepts BOTH an MLlib `Vector` (the
-  * `VectorAssembler` output — the q37 surface) and an `array` of any
-  * numeric type (the engine's native series form — the q10 surface).
+  * defaults); as there, no Param picks the pair-join plan — [[Knn]]
+  * chooses it from measured sizes. `featuresCol` accepts BOTH an MLlib
+  * `Vector` (the `VectorAssembler` output — the q37 surface) and an
+  * `array` of any numeric type (the engine's native series form — the
+  * q10 surface).
   */
 private[ml] trait KnnClassifierParams extends Params {
 
@@ -33,9 +35,6 @@ private[ml] trait KnnClassifierParams extends Params {
     "euclidean | sqdist | manhattan | dtw | fastdtw | cosine",
     ParamValidators.inArray(Array(
       "euclidean", "sqdist", "manhattan", "dtw", "fastdtw", "cosine")))
-  final val strategy = new Param[String](this, "strategy",
-    "auto | broadcast | cartesian (pair-join strategy)",
-    ParamValidators.inArray(Array("auto", "broadcast", "cartesian")))
   final val band = new IntParam(this, "band",
     "Sakoe-Chiba band for exact DTW; -1 = unconstrained",
     (v: Int) => v >= -1)
@@ -63,38 +62,22 @@ private[ml] trait KnnClassifierParams extends Params {
       "must be unique and non-null — rows sharing an id are merged into " +
       "ONE vote group (silently wrong predictions), rows with a null id " +
       "are never matched by the join-back (null prediction); set " +
-      "validateIdCol (or the global spark.graft.knn.validateIdCol " +
-      "conf) to assert uniqueness per transform")
-  final val cacheInput = new BooleanParam(this, "cacheInput",
-    "materialize the transform input once (graft-owned persist) on the " +
-      "idCol path — the input lineage is otherwise referenced twice " +
-      "(classification + join-back) and recomputes per reference; turn " +
-      "on when the upstream is expensive, free the blocks eagerly with " +
-      "graft.core.Materialize.releaseOwned(result) once consumed " +
-      "(lineage is kept: a released frame recomputes, never fails). " +
-      "Trade: the input is pinned through an RDD materialization, so " +
-      "scan pushdown/columnar execution stop at the persist boundary. " +
-      "Ignored without idCol (the internal-id path already materializes " +
-      "via withRowId when the lineage is not provably stable)")
+      "validateIdCol to assert uniqueness per transform")
   final val validateIdCol = new BooleanParam(this, "validateIdCol",
     "assert the idCol contract per transform (throw on duplicate ids, " +
       "warn on null ids) at the cost of one extra aggregate over the " +
-      "input. A Param — NOT only a session conf — so the assertion " +
-      "persists through MLWriter/MLReader with the model like idCol " +
-      "and cacheInput do (an inference service loading a saved model " +
-      "keeps it); the session conf spark.graft.knn.validateIdCol=true " +
-      "remains a global override that turns validation ON regardless " +
-      "of the param. Ignored without idCol")
+      "input. A Param, so the assertion persists through " +
+      "MLWriter/MLReader with the model like idCol does (an inference " +
+      "service loading a saved model keeps it). Ignored without idCol")
 
-  setDefault(k -> 1, distance -> "euclidean", strategy -> "auto",
+  setDefault(k -> 1, distance -> "euclidean",
     band -> -1, radius -> 1, excludeZeroDistance -> true,
     lbPruning -> false, candidateFactor -> 4,
     featuresCol -> "features", labelCol -> "label",
-    predictionCol -> "prediction", idCol -> "", cacheInput -> false,
-    validateIdCol -> false)
+    predictionCol -> "prediction", idCol -> "", validateIdCol -> false)
 
   private[ml] def knnParams: KnnParams = KnnParams(
-    k = $(k), distance = $(distance), strategy = $(strategy),
+    k = $(k), distance = $(distance),
     excludeZeroDistance = $(excludeZeroDistance), radius = $(radius),
     band = $(band), lbPruning = $(lbPruning),
     candidateFactor = $(candidateFactor))
@@ -174,7 +157,6 @@ class KnnClassifier(override val uid: String)
 
   def setK(value: Int): this.type = set(k, value)
   def setDistance(value: String): this.type = set(distance, value)
-  def setStrategy(value: String): this.type = set(strategy, value)
   def setBand(value: Int): this.type = set(band, value)
   def setRadius(value: Int): this.type = set(radius, value)
   def setExcludeZeroDistance(value: Boolean): this.type = set(excludeZeroDistance, value)
@@ -184,7 +166,6 @@ class KnnClassifier(override val uid: String)
   def setLabelCol(value: String): this.type = set(labelCol, value)
   def setPredictionCol(value: String): this.type = set(predictionCol, value)
   def setIdCol(value: String): this.type = set(idCol, value)
-  def setCacheInput(value: Boolean): this.type = set(cacheInput, value)
   def setValidateIdCol(value: Boolean): this.type = set(validateIdCol, value)
 
   override def fit(dataset: Dataset[_]): KnnClassifierModel = {
@@ -219,12 +200,10 @@ object KnnClassifier extends DefaultParamsReadable[KnnClassifier] {
   * no RDD round-trip and no per-call input materialization). Duplicate
   * ids merge distinct rows into one vote group (wrong predictions);
   * null ids surface with a null prediction; `setValidateIdCol(true)`
-  * (a Param — it persists with a saved model; the session conf
-  * `spark.graft.knn.validateIdCol=true` is a global override) asserts
-  * the contract per transform. The input is referenced twice (classification +
-  * join-back) and recomputes per reference — `setCacheInput(true)` to
-  * materialize it once (graft-owned persist, freed eagerly via
-  * `Materialize.releaseOwned(result)`), or `cache()` it yourself.
+  * (a Param — it persists with a saved model) asserts the contract per
+  * transform. The input is referenced twice (classification +
+  * join-back) and recomputes per reference — `cache()` it when its
+  * upstream is expensive.
   * Without `idCol`, transform assigns an internal row id, which
   * materializes the input once per call when its lineage is not
   * provably re-evaluation-stable; in a long-lived session, free that
@@ -248,7 +227,6 @@ class KnnClassifierModel private[ml] (
   def setFeaturesCol(value: String): this.type = set(featuresCol, value)
   def setPredictionCol(value: String): this.type = set(predictionCol, value)
   def setIdCol(value: String): this.type = set(idCol, value)
-  def setCacheInput(value: Boolean): this.type = set(cacheInput, value)
   def setValidateIdCol(value: Boolean): this.type = set(validateIdCol, value)
 
   override def transform(dataset: Dataset[_]): DataFrame = {
@@ -263,123 +241,71 @@ class KnnClassifierModel private[ml] (
           "(stream-static broadcast KNN) on the streaming side")
     transformSchema(dataset.schema)
     val df = dataset.toDF()
-    if ($(idCol).nonEmpty) {
-      // User-supplied UNIQUE id: the prediction correlates through the
-      // caller's own key, so the input plan stays fully declarative —
-      // no RDD round-trip, no withRowId persist (at inference scale the
-      // internal-id path materializes the WHOLE input per transform
-      // call), columnar scan + pushdown preserved on the join-back left
-      // side. Uniqueness AND non-nullness are the caller's contract,
-      // and the failure modes differ from a plain join key's:
-      //  - DUPLICATE ids are merged by Knn.classify's per-test_id vote
-      //    group (distinct rows pool their neighbor candidates into one
-      //    top-k), producing silently WRONG predictions — not a mere
-      //    join-back fan-out;
-      //  - NULL ids form one merged null vote group whose prediction
-      //    the join-back never matches (USING-join equality is
-      //    null-rejecting), so null-id rows surface with a NULL
-      //    prediction.
-      // spark.graft.knn.validateIdCol=true trades one aggregate over
-      // the input for a loud failure on either breach.
-      // opt-in single evaluation: the input is referenced twice below
-      // (classification + join-back); persist it graft-owned —
-      // InternalRow layer, no external-Row codec
-      // (Materialize.persistInternal) — so both references read ONE
-      // materialization. EAGER (count()): the two references sit
-      // under one action whose independent subtrees AQE schedules
-      // concurrently, and a cold persist lets them RACE to compute
-      // the same partitions (duplicated upstream work — the exact
-      // cost the knob exists to remove); warming the blocks first
-      // makes single evaluation true by construction. Lineage is
-      // kept (eviction recomputes); the caller frees the blocks
-      // eagerly with Materialize.releaseOwned(result).
-      val base =
-        if ($(cacheInput)) graft.core.Materialize.persistInternal(df) else df
-      // warm + validate + BUILD THE RESULT under ONE unpersist-on-
-      // failure guard: an exception out of any of them (a failing
-      // upstream in count(), a duplicate-id require, an analysis or
-      // planner failure while constructing the classify/join-back
-      // plan — Knn.classify runs size-measurement actions of its own)
-      // escapes BEFORE any result frame reaches the caller, so the
-      // caller has no handle for releaseOwned and the warmed
-      // graft-owned blocks would otherwise linger until driver GC +
-      // ContextCleaner reclaim them (r16 advisory; the guard covers
-      // construction too, or an AMBIGUOUS_REFERENCE out of the final
-      // select would leak the same way). Release is a registry-only
-      // unpersist — rethrowing loses nothing. On SUCCESS nothing is
-      // released: the result's evaluation reads the warmed blocks and
-      // the caller frees them via Materialize.releaseOwned(result).
-      try {
-        if ($(cacheInput)) base.count()
-        // validation reads the warmed blocks (one cheap extra pass)
-        // rather than re-running the upstream lineage
-        if ($(validateIdCol) || df.sparkSession.conf.get(
-            "spark.graft.knn.validateIdCol", "false").toBoolean) {
-          val c = base.agg(
-            count(col($(idCol))).as("cnt"),
-            count_distinct(col($(idCol))).as("dst"),
-            count(lit(1)).as("total")).head()
-          require(c.getLong(0) == c.getLong(1),
-            s"idCol '${$(idCol)}' is not unique: ${c.getLong(0)} non-null " +
-              s"rows over ${c.getLong(1)} distinct ids — duplicate ids " +
-              "merge distinct rows into one vote group and produce wrong " +
-              "predictions")
-          if (c.getLong(2) > c.getLong(0))
-            org.slf4j.LoggerFactory.getLogger(getClass).warn(
-              s"idCol '${$(idCol)}': ${c.getLong(2) - c.getLong(0)} rows " +
-                "carry a null id and will surface with a null prediction")
-        }
-        val test = base.select(col($(idCol)).as("test_id"),
-          seriesColumn(base.schema).as("test_series"))
-        val preds = Knn.classify(train, test, knnParams)
-          .select(col("test_id").as($(idCol)),
-            col("predicted_label").as($(predictionCol)))
-        // merge hint, same rationale as the internal-id path: the preds
-        // side is post-aggregate with untrustworthy size estimates. The
-        // trailing select restores the input column order (a USING join
-        // fronts the join key) so both paths emit the same shape.
-        base.hint("merge").join(preds, Seq($(idCol)), "left")
-          .select((base.columns.map(col) :+ col($(predictionCol))).toIndexedSeq: _*)
-      } catch { case e: Throwable =>
-        // the cleanup must not MASK the original failure: releaseOwned
-        // can itself throw (e.g. a stopped SparkContext when `e` is the
-        // shutdown), and the original exception is the routable one
-        if ($(cacheInput))
-          try graft.core.Materialize.releaseOwned(base)
-          catch { case r: Throwable if r ne e => e.addSuppressed(r) }
-        throw e
-      }
-    } else {
-      val idC = "__graft_knn_test_id"
-      // withRowId (not a bare monotonic id): the id-annotated frame is
-      // referenced TWICE below — once feeding classify, once as the
-      // join-back left side — and withRowId's persist-before-count makes
-      // both references read ONE materialization, so the ids they see
-      // are identical even when the input lineage sits downstream of a
-      // shuffle (the double-evaluation hazard class). On such an input
-      // withRowId logs its once-per-JVM Exchange warning; here the id is
-      // an EPHEMERAL correlation key dropped before the result surfaces,
-      // so run-to-run id stability (what the warning protects) is not
-      // required — only the within-evaluation consistency the persist
-      // provides, with the partition-size backstop turning the
-      // eviction-plus-nondeterministic-recompute corner loud.
-      // (Provably re-evaluation-stable inputs — file-scan-rooted,
-      // Exchange-free — skip the persist inside withRowId itself; both
-      // references then recompute identically by construction.)
-      val withId = graft.ingest.SeriesIngest.withRowId(df, idC)
-      val test = withId.select(col(idC).as("test_id"),
-        seriesColumn(withId.schema).as("test_series"))
-      val preds = Knn.classify(train, test, knnParams)
-        .select(col("test_id").as(idC),
-          col("predicted_label").as($(predictionCol)))
-      // merge hint: both sides are O(|input|) LogicalRDD-rooted frames
-      // whose stats estimates are untrustworthy — an unhinted join lets
-      // Catalyst build-broadcast an arbitrarily large side (the r12
-      // build-side audit class). Sort-merge exchanges each side once and
-      // replicates nothing. Left join: a row that produced no prediction
-      // (e.g. all-null series) keeps its place with a null prediction.
-      withId.hint("merge").join(preds, Seq(idC), "left").drop(idC)
-    }
+    val userId = $(idCol).nonEmpty
+    // The correlation key. A user-supplied UNIQUE id keeps the input
+    // plan fully declarative — no RDD round-trip, no withRowId persist
+    // (at inference scale the internal id materializes the WHOLE input
+    // per transform call), columnar scan + pushdown preserved on the
+    // join-back left side.
+    // Otherwise withRowId (not a bare monotonic id): the id-annotated
+    // frame is referenced TWICE below — once feeding classify, once as
+    // the join-back left side — and withRowId's persist-before-count
+    // makes both references read ONE materialization, so the ids they
+    // see are identical even when the input lineage sits downstream of
+    // a shuffle (the double-evaluation hazard class). On such an input
+    // withRowId logs its once-per-JVM Exchange warning; here the id is
+    // an EPHEMERAL correlation key dropped before the result surfaces,
+    // so run-to-run id stability (what the warning protects) is not
+    // required — only the within-evaluation consistency the persist
+    // provides. (Provably re-evaluation-stable inputs — file-scan-rooted,
+    // Exchange-free — skip the persist inside withRowId itself; both
+    // references then recompute identically by construction.)
+    val (frame, idName) =
+      if (userId) (df, $(idCol))
+      else (graft.ingest.SeriesIngest.withRowId(df, KnnClassifierModel.RowId),
+        KnnClassifierModel.RowId)
+    if (userId && $(validateIdCol)) validateIds(frame)
+    val test = frame.select(col(idName).as("test_id"),
+      seriesColumn(frame.schema).as("test_series"))
+    val preds = Knn.classify(train, test, knnParams)
+      .select(col("test_id").as(KnnClassifierModel.PredId),
+        col("predicted_label").as($(predictionCol)))
+    // merge hint: both sides are O(|input|) frames whose stats estimates
+    // are untrustworthy (post-aggregate, LogicalRDD-rooted) — an
+    // unhinted join lets Catalyst build-broadcast an arbitrarily large
+    // side (the r12 build-side audit class). Sort-merge exchanges each
+    // side once and replicates nothing. Left join: a row that produced
+    // no prediction (e.g. all-null series, or a null user id — the
+    // equality is null-rejecting) keeps its place with a null
+    // prediction. An equality condition rather than a USING join keeps
+    // the input's column order without selecting its columns by name,
+    // which would fail on inputs with duplicate column names.
+    val out = frame.hint("merge")
+      .join(preds, col(idName) === col(KnnClassifierModel.PredId), "left")
+      .drop(KnnClassifierModel.PredId)
+    if (userId) out else out.drop(idName)
+  }
+
+  /** The idCol contract, checked with one aggregate over the input:
+    * DUPLICATE ids are merged by [[Knn.classify]]'s per-test_id vote
+    * group (distinct rows pool their neighbour candidates into one
+    * top-k), producing silently WRONG predictions, so they throw; NULL
+    * ids only lose their prediction, so they warn.
+    */
+  private def validateIds(frame: DataFrame): Unit = {
+    val c = frame.agg(
+      count(col($(idCol))).as("cnt"),
+      count_distinct(col($(idCol))).as("dst"),
+      count(lit(1)).as("total")).head()
+    require(c.getLong(0) == c.getLong(1),
+      s"idCol '${$(idCol)}' is not unique: ${c.getLong(0)} non-null " +
+        s"rows over ${c.getLong(1)} distinct ids — duplicate ids " +
+        "merge distinct rows into one vote group and produce wrong " +
+        "predictions")
+    if (c.getLong(2) > c.getLong(0))
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(
+        s"idCol '${$(idCol)}': ${c.getLong(2) - c.getLong(0)} rows " +
+          "carry a null id and will surface with a null prediction")
   }
 
   override def transformSchema(schema: StructType): StructType =
@@ -400,6 +326,14 @@ object KnnClassifierModel extends MLReadable[KnnClassifierModel] {
 
   private val className = classOf[KnnClassifierModel].getName
 
+  // internal transform columns: the row id and the predictions' key
+  private val RowId = "__graft_knn_test_id"
+  private val PredId = "__graft_knn_pred_id"
+
+  // Params of older releases: a model saved then carries them in its
+  // metadata (every default is written), and loading must skip them
+  private val RetiredParams = List("strategy", "cacheInput")
+
   private[ml] class Writer(instance: KnnClassifierModel) extends MLWriter {
     override protected def saveImpl(path: String): Unit = {
       MlReadWriteBridge.saveMetadata(instance, path, sparkSession)
@@ -412,7 +346,8 @@ object KnnClassifierModel extends MLReadable[KnnClassifierModel] {
       val uid = MlReadWriteBridge.loadUid(path, sparkSession, className)
       val data = sparkSession.read.parquet(new Path(path, "data").toString)
       val model = new KnnClassifierModel(uid, data)
-      MlReadWriteBridge.loadAndSetParams(model, path, sparkSession, className)
+      MlReadWriteBridge.loadAndSetParams(model, path, sparkSession, className,
+        RetiredParams)
       model
     }
   }

@@ -1,6 +1,5 @@
 package graft.operators
 
-import graft.core.KnnParams
 import graft.functions.{GraftFunctions, SeriesFunctions}
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
@@ -23,7 +22,7 @@ object CrossValidation {
     * Output: (fold, acc 6 dp, n) — one row per fold.
     *
     * The pair join routes through [[Knn.crossPairs]]'s measured-size-aware
-    * strategy: broadcast while one side fits the executor budget,
+    * decision: broadcast while one side fits the executor budget,
     * partitioned cartesian (`shuffle_replicate_nl`) beyond it — k-fold over
     * a 100 TB training table degrades to a streamed pair join instead of
     * replicating the whole input to every executor. `min_by` picks the
@@ -49,7 +48,7 @@ object CrossValidation {
     val test = Partitioning.spread(e.select(col("id"), col("v"), col("fold")))
     val train = e.select(col("id").as("tid"), col("v").as("tv"),
       col("label").as("tlabel"), col("fold").as("tfold"))
-    val pred = Knn.crossPairs(train, test, KnnParams())
+    val pred = Knn.crossPairs(train, test)
       .filter(col("fold") =!= col("tfold"))
       .withColumn("dist", SeriesFunctions.barrier(
         SeriesFunctions.euclidean(col("v"), col("tv"))))

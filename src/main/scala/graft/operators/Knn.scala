@@ -20,11 +20,13 @@ import org.apache.spark.sql.{Column, DataFrame}
   *    `crossJoin(broadcast(train))` + `min_by` — same semantics, no driver
   *    materialization, map-side combine for free.
   *
-  * Scale: broadcast strategy shuffles ONLY the per-(test,label) partial
-  * vote counts (k rows per test point after the group-limit), never the
-  * raw pair matrix. Cartesian strategy is the fallback when train exceeds
-  * broadcastable size; for 100 TB-class inputs use [[SimilaritySearch]]'s
-  * LSH candidate pruning in front of `classify`.
+  * Scale: the plan is chosen from measured sizes ([[fitsBroadcast]]),
+  * never by the caller. The broadcast plan shuffles ONLY the
+  * per-(test,label) partial vote counts (k rows per test point after the
+  * group-limit), never the raw pair matrix. The partitioned cartesian is
+  * the fallback when neither side fits the broadcast budget; for 100
+  * TB-class inputs use [[SimilaritySearch]]'s LSH candidate pruning in
+  * front of `classify`.
   *
   * Vote tie-break (deterministic, SURVEY §2.4 A5): highest vote count,
   * then smallest best-distance-rank within the tied labels, then smallest
@@ -67,8 +69,7 @@ object Knn {
         if (s.trim.startsWith("-")) -1L
         else org.apache.spark.network.util.JavaUtils.byteStringAsBytes(s)
       } catch { case scala.util.control.NonFatal(_) => 10485760L }
-    // -1 is Spark's documented "broadcast disabled": honor it (an
-    // explicit strategy="broadcast" still overrides via useBroadcast)
+    // -1 is Spark's documented "broadcast disabled": honor it
     if (threshold < 0) None else Some(math.max(threshold, floor))
   }
 
@@ -122,13 +123,7 @@ object Knn {
     bytes.exists(_ <= BigInt(cap))
   }
 
-  private def useBroadcast(trainSel: DataFrame, p: KnnParams): Boolean = p.strategy match {
-    case "broadcast" => true
-    case "cartesian" => false
-    case _           => fitsBroadcast(trainSel)
-  }
-
-  /** Strategy-aware all-pairs cross join of a (possibly projected) train
+  /** Size-driven all-pairs cross join of a (possibly projected) train
     * side against the spread test side, shared by every pair-generating
     * phase (the unpruned crossJoin AND the prune cascade's ranking +
     * payload joins): broadcast while the train side fits an executor,
@@ -147,7 +142,7 @@ object Knn {
     * just rejected.
     */
   private[operators] def crossPairs(
-      trainSel: DataFrame, spreadTest: DataFrame, p: KnnParams,
+      trainSel: DataFrame, spreadTest: DataFrame,
       broadcastTrain: Option[Boolean] = None): DataFrame =
     if (spreadTest.isStreaming)
       // stream-static all-pairs has exactly ONE executable plan: the
@@ -160,9 +155,9 @@ object Knn {
       // broadcast must be sharded upstream (ANN prefilter / per-class
       // split) before it meets an unbounded test stream.
       spreadTest.crossJoin(broadcast(trainSel))
-    else if (broadcastTrain.getOrElse(useBroadcast(trainSel, p)))
+    else if (broadcastTrain.getOrElse(fitsBroadcast(trainSel)))
       spreadTest.crossJoin(broadcast(trainSel))
-    else if (p.strategy != "cartesian" && fitsBroadcast(spreadTest))
+    else if (fitsBroadcast(spreadTest))
       trainSel.crossJoin(broadcast(spreadTest))
     else
       spreadTest.hint("shuffle_replicate_nl").crossJoin(trainSel)
@@ -188,7 +183,7 @@ object Knn {
       if (testSel.isStreaming)
         testSel.repartition(testSel.sparkSession.sparkContext.defaultParallelism)
       else Partitioning.spread(testSel)
-    val joined = crossPairs(trainSel, spreadTest, p)
+    val joined = crossPairs(trainSel, spreadTest)
     val distExpr = distanceColumn(p)(col("test_series"), col("train_series"))
     // When the zero-distance exclusion is on, wrap the distance in a
     // barrier(): a non-deterministic projection field cannot be inlined by
@@ -236,8 +231,8 @@ object Knn {
     * neighbours, pinned per workload in KnnSpec and by the q25/q26/q33
     * oracles.
     *
-    * Every join here follows the same broadcast-vs-partitioned strategy
-    * decision as the unpruned path ([[useBroadcast]]) — when the train
+    * Every join here follows the same broadcast-vs-partitioned
+    * decision as the unpruned path ([[fitsBroadcast]]) — when the train
     * side exceeds executor memory, the ranking join degrades to a
     * partitioned cross join instead of OOMing.
     */
@@ -255,7 +250,7 @@ object Knn {
     val trainSketch = paaSide(trainSel, "train_series", "train_id", "tsk")
     // one stats-driven decision per query (conservative: measured on the
     // FULL train projection, reused for the smaller sketch join)
-    val bcastTrain = useBroadcast(trainSel, p)
+    val bcastTrain = fitsBroadcast(trainSel)
     val fk = p.candidateFactor * p.k
     val distExpr = SeriesFunctions.barrier(
       distanceColumn(p)(col("test_series"), col("train_series")))
@@ -283,7 +278,7 @@ object Knn {
       val withDist = testSk
         .crossJoin(broadcast(trainArr))
         .select(col("test_id"), col("test_series"),
-          SeriesFunctions.barrier(SeriesFunctions.topkScan(
+          SeriesFunctions.barrier(graft.functions.TopKScanIds.column(
             col("sk"), col("tarr"), fk)).as("cand_ids"))
         .select(col("test_id"), col("test_series"),
           explode(col("cand_ids")).as("train_id"))
@@ -305,7 +300,7 @@ object Knn {
     // window rank: sorting tens of millions of pair rows to keep
     // factor*k per group costs more than every ranking score combined.
     val testSketch = paaSide(spreadTest, "test_series", "test_id", "sk")
-    val slimDf = crossPairs(trainSketch, testSketch, p, Some(bcastTrain))
+    val slimDf = crossPairs(trainSketch, testSketch, Some(bcastTrain))
       .select(col("test_id"), col("train_id"),
         SeriesFunctions.manhattan(col("sk"), col("tsk")).as("score"))
     // ONE row per test point (test_id, candidate-id array) out of the

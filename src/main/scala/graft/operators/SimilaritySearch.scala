@@ -332,7 +332,7 @@ object SimilaritySearch {
     * replays fully in SQL.
     *
     * The prefilter pair join routes through [[Knn.crossPairs]]'s
-    * measured-size strategy: broadcast the quantized corpus while it
+    * measured-size decision: broadcast the quantized corpus while it
     * fits an executor; beyond that broadcast the (bounded) query side
     * and STREAM the corpus; a true partitioned cartesian only when
     * neither side fits. int8 shrinks the corpus 8x but 100 TB of doubles
@@ -354,7 +354,7 @@ object SimilaritySearch {
     // rerank recomputes scores at full precision anyway); the window form
     // locally sorted the ENTIRE quantized pair stream before its
     // group-limit could prune
-    val cand = Knn.crossPairs(cq, Partitioning.spread(qq), graft.core.KnnParams())
+    val cand = Knn.crossPairs(cq, Partitioning.spread(qq))
       .select(col("query_id"), col("item_id"),
         // native int8 kernel: bit-identical to casting both sides to
         // array<double> + graft_cosine, without the two widened-array

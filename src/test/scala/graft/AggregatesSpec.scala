@@ -1,6 +1,6 @@
 package graft
 
-import graft.functions.SeriesFunctions
+import graft.functions.{SeriesFunctions, TopKScanIds}
 import graft.operators.BoundedTopKByScore
 import org.apache.spark.sql.functions._
 
@@ -99,7 +99,7 @@ class AggregatesSpec extends SparkTestBase {
       collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
     val viaScan = test.crossJoin(broadcast(tarr))
       .select(col("test_id"),
-        SeriesFunctions.topkScan(col("sk"), col("tarr"), k).as("ids"))
+        TopKScanIds.column(col("sk"), col("tarr"), k).as("ids"))
       .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
     assert(viaScan === viaAgg)
     // null train sketch entries are skipped exactly like null scores in
@@ -109,32 +109,17 @@ class AggregatesSpec extends SparkTestBase {
     val tarrN = trainWithNull.agg(
       collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
     val gotN = test.limit(1).crossJoin(broadcast(tarrN))
-      .select(SeriesFunctions.topkScan(col("sk"), col("tarr"), 100).as("ids"))
+      .select(TopKScanIds.column(col("sk"), col("tarr"), 100).as("ids"))
       .collect().head.getSeq[Long](0)
     assert(gotN.size === 60 && !gotN.contains(999L))
     val nullTest = Seq((1L, null.asInstanceOf[Array[Double]])).toDF("test_id", "sk")
     val gotNull = nullTest.crossJoin(broadcast(tarrN))
-      .select(SeriesFunctions.topkScan(col("sk"), col("tarr"), 5).as("ids"))
+      .select(TopKScanIds.column(col("sk"), col("tarr"), 5).as("ids"))
       .collect().head
     assert(gotNull.isNullAt(0))
-  }
-
-  test("graft_topk_scan refuses any argument count but 3 at analysis, naming its signature") {
-    // a stale (sk, trainArr, k, kind, band) call must not analyze and
-    // silently rank by Manhattan with its ranker arguments dropped
-    val tarr = Seq((7L, Array(1.0, 2.0))).toDF("train_id", "tsk")
-      .agg(collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
-    val pair = Seq((1L, Array(1.0, 2.0))).toDF("test_id", "sk").crossJoin(tarr)
-    for (args <- Seq(
-        Seq(col("sk"), col("tarr"), lit(1), lit("dtw"), lit(3)),
-        Seq(col("sk"), col("tarr")))) {
-      val e = intercept[Exception] {
-        pair.select(call_function("graft_topk_scan", args: _*))
-          .queryExecution.assertAnalyzed()
-      }
-      assert(e.getMessage.contains("graft_topk_scan(sk, trainArr, k)") &&
-        e.getMessage.contains(s"got ${args.length}"), s"got: ${e.getMessage}")
-    }
+    // the per-thread decode cache is sound only over broadcast rows, which
+    // only Knn builds: the scan is not a SQL function
+    assert(!graft.functions.GraftFunctions.builders.exists(_._1 == "graft_topk_scan"))
   }
 
   test("heap selection ties -0.0 with 0.0 like a window sort (id breaks the tie)") {

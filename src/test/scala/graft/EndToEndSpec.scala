@@ -48,11 +48,15 @@ class EndToEndSpec extends SparkTestBase {
       col("series").as("test_series"))
     val truth = test.select(col("row_id").as("test_id"), col("label"))
 
-    // EP2: Model-1 shaped KNN (cartesian, partial+final top-k, vote)
-    val m1 = Knn.classify(trainDf, testDf,
-      KnnParams(k = 5, distance = "fastdtw", strategy = "cartesian"))
-    val acc1 = Evaluation.accuracy(m1.join(truth, "test_id"),
-      col("predicted_label"), col("label")).head().getDouble(0)
+    // EP2: Model-1 shaped KNN (cartesian, partial+final top-k, vote);
+    // broadcasts disabled, so the pair join is the partitioned cartesian
+    val acc1 = withoutBroadcast {
+      val m1 = Knn.classify(trainDf, testDf,
+        KnnParams(k = 5, distance = "fastdtw"))
+      assertPairPlan(m1, "cartesian")
+      Evaluation.accuracy(m1.join(truth, "test_id"),
+        col("predicted_label"), col("label")).head().getDouble(0)
+    }
     assert(acc1 >= 0.8, s"Model-1 fastdtw accuracy $acc1")
 
     // EP3: Model-2 broadcast 1-NN via min_by

@@ -50,7 +50,7 @@ class ExpressionsSpec extends SparkTestBase {
       val required = params.takeWhile(_ != '[').split(",").count(_.trim.nonEmpty)
       (name, sig, required, required + params.count(_ == '['))
     }
-    assert(fns.size === 26)
+    assert(fns.size === 25)
     for ((name, sig, min, max) <- fns; n <- Seq(min - 1, max + 1)) {
       val e = intercept[Exception] {
         spark.sql(s"SELECT $name(${Seq.fill(n)("1").mkString(", ")})")

@@ -6,9 +6,10 @@ import graft.operators.{Evaluation, Knn}
 import org.apache.spark.sql.functions._
 
 /** KNN against an in-memory brute-force oracle (FIXTURES.md a6): both
-  * distances, k in {1,5}, both strategies, plus partition-count
-  * invariance (the reference's partition knobs must not change answers,
-  * SURVEY §5.2).
+  * distances, k in {1,5}, and both pair-join plans — the broadcast plan
+  * this small fixture takes at default confs, and the partitioned
+  * cartesian forced by disabling broadcasts, each checked in the
+  * physical plan.
   */
 class KnnSpec extends SparkTestBase {
   import spark.implicits._
@@ -47,10 +48,21 @@ class KnnSpec extends SparkTestBase {
       tid -> -best._3
     }.toMap
 
-  private def engine(k: Int, distance: String, strategy: String): Map[Long, Double] =
-    Knn.classify(trainDf, testDf,
-      KnnParams(k = k, distance = distance, strategy = strategy))
-      .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+  /** Classifies under the confs that pick `plan` ("broadcast" or
+    * "cartesian") and asserts the plan taken.
+    */
+  private def planned(plan: String)(run: => org.apache.spark.sql.DataFrame)
+      : Map[Long, Double] = {
+    def go(): Map[Long, Double] = {
+      val df = run
+      assertPairPlan(df, plan)
+      df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    }
+    if (plan == "cartesian") withoutBroadcast(go()) else go()
+  }
+
+  private def engine(k: Int, distance: String, plan: String = "broadcast"): Map[Long, Double] =
+    planned(plan)(Knn.classify(trainDf, testDf, KnnParams(k = k, distance = distance)))
 
   for {
     k <- Seq(1, 5)
@@ -59,7 +71,7 @@ class KnnSpec extends SparkTestBase {
       "dtw" -> ((a, b) => Kernels.dtw(a, b)))
   } test(s"classify matches brute force: k=$k $distance") {
     val expected = bruteForce(k, fn)
-    assert(engine(k, distance, "broadcast") === expected)
+    assert(engine(k, distance) === expected)
   }
 
   test("majority-vote tie: equal votes resolved by BEST (lowest) rank, not label") {
@@ -74,7 +86,7 @@ class KnnSpec extends SparkTestBase {
       (4L, Array(4.0, 0.0), 1.0)
     ).toDF("train_id", "train_series", "label")
     val test = Seq((100L, Array(0.0, 0.0))).toDF("test_id", "test_series")
-    val p = KnnParams(k = 4, distance = "euclidean", strategy = "broadcast")
+    val p = KnnParams(k = 4, distance = "euclidean")
     val got = Knn.classify(train, test, p).head()
     assert(got.getDouble(1) === 1.0)
     // Same planted ties through the one-pass k sweep: k=2 is a 1-1 split
@@ -97,7 +109,7 @@ class KnnSpec extends SparkTestBase {
     val got = sweep.collect()
       .map(r => (r.getLong(0), r.getInt(1)) -> r.getDouble(2)).toMap
     for (k <- ks) {
-      val perK = engine(k, "euclidean", "broadcast")
+      val perK = engine(k, "euclidean")
       assert(perK.map { case (tid, l) => (tid, k) -> l } === got.filter(_._1._2 == k),
         s"sweep diverges from classify at k=$k")
     }
@@ -110,7 +122,7 @@ class KnnSpec extends SparkTestBase {
   }
 
   test("classify1NN (Model-2 min_by path) matches k=1 window path") {
-    val windowPath = engine(1, "euclidean", "broadcast")
+    val windowPath = engine(1, "euclidean")
     val minByPath = Knn.classify1NN(trainDf, testDf, KnnParams(distance = "euclidean"))
       .select("test_id", "predicted_label")
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -118,8 +130,8 @@ class KnnSpec extends SparkTestBase {
   }
 
   test("fastdtw classification runs and mostly agrees with exact dtw (k=5)") {
-    val exact = engine(5, "dtw", "broadcast")
-    val approx = engine(5, "fastdtw", "broadcast")
+    val exact = engine(5, "dtw")
+    val approx = engine(5, "fastdtw")
     val agree = exact.keys.count(k => exact(k) == approx(k))
     assert(agree >= exact.size - 2, s"agree=$agree of ${exact.size}")
   }
@@ -146,12 +158,13 @@ class KnnSpec extends SparkTestBase {
     val exact = Knn.classify(trainDf, testDf,
       KnnParams(k = 5, distance = "dtw", band = 4))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    for (strategy <- Seq("broadcast", "cartesian")) {
-      val pruned = Knn.classify(trainDf, testDf,
+    // broadcast: the fused scan over the broadcast train sketches;
+    // cartesian: the slim pair pass over a partitioned cartesian
+    for (plan <- Seq("broadcast", "cartesian")) {
+      val pruned = planned(plan)(Knn.classify(trainDf, testDf,
         KnnParams(k = 5, distance = "dtw", band = 4, lbPruning = true,
-          strategy = strategy, coarsenFactor = 4))
-        .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-      assert(pruned === exact, s"strategy=$strategy")
+          coarsenFactor = 4)))
+      assert(pruned === exact, s"plan=$plan")
     }
     // the oversize shape a fitted classifier takes: the localCheckpointed
     // train side measures over the lowered cap, the test side fits under
@@ -159,7 +172,7 @@ class KnnSpec extends SparkTestBase {
     // side streams into the graft_topk_ids heap. k=5 keeps the 20
     // candidates of the cases above; k=1 keeps all 40, because test 108's
     // DTW nearest neighbour ranks past 20 by PAA on this noisy fixture
-    // (every strategy misses it alike at a smaller budget)
+    // (every plan misses it alike at a smaller budget)
     val exactByK = Seq(1 -> Knn.classify(trainDf, testDf,
       KnnParams(k = 1, distance = "dtw", band = 4))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap, 5 -> exact)

@@ -8,14 +8,6 @@ import org.apache.spark.ml.feature.VectorAssembler
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** Static eval counter for the cacheInput single-evaluation pin (same
-  * local-mode pattern as IngestSpec: executors share the driver JVM).
-  */
-object PipelineSpec {
-  val evalCounts = new java.util.concurrent.ConcurrentHashMap[
-    Int, java.util.concurrent.atomic.AtomicInteger]()
-}
-
 /** The MLlib `Estimator`/`Model` veneer (round-13 directive #3: the
   * reference's declared approach is "MLlib + custom transformers", so
   * the engine's KNN must run INSIDE a real `Pipeline` — the q37
@@ -55,6 +47,13 @@ class PipelineSpec extends SparkTestBase {
     df.select("key", "prediction").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
 
+  private def rmTree(dir: String): Unit = {
+    def rm(f: java.io.File): Unit = {
+      Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
+    }
+    rm(new java.io.File(dir))
+  }
+
   test("KnnClassifier inside a Pipeline with VectorAssembler matches " +
       "Knn.classify row-for-row") {
     val train = synthWide(120, 0)
@@ -86,10 +85,13 @@ class PipelineSpec extends SparkTestBase {
       new VectorAssembler()
         .setInputCols(Array("f1", "f2", "f3")).setOutputCol("features"),
       new KnnClassifier()
-        .setK(3).setDistance("manhattan").setExcludeZeroDistance(false)
-        .setStrategy("broadcast")))
+        .setK(3).setDistance("manhattan").setExcludeZeroDistance(false)))
     val model = pipeline.fit(train)
-    val want = collectPreds(model.transform(test))
+    // the fitted train side measures small, so the pair join broadcasts
+    // it — before the save and after the load alike
+    val out = model.transform(test)
+    assertPairPlan(out, "broadcast")
+    val want = collectPreds(out)
 
     val dir = java.nio.file.Files.createTempDirectory("graft_pipeline").toString
     try {
@@ -98,16 +100,13 @@ class PipelineSpec extends SparkTestBase {
       val knn = loaded.stages.last.asInstanceOf[KnnClassifierModel]
       assert(knn.getOrDefault(knn.k) === 3)
       assert(knn.getOrDefault(knn.distance) === "manhattan")
-      assert(knn.getOrDefault(knn.strategy) === "broadcast")
-      val got = collectPreds(loaded.transform(test))
+      assert(knn.getOrDefault(knn.excludeZeroDistance) === false)
+      val loadedOut = loaded.transform(test)
+      assertPairPlan(loadedOut, "broadcast")
+      val got = collectPreds(loadedOut)
       assert(got === want, "a loaded pipeline must predict row-for-row " +
         "identically (train ids round-trip through the parquet)")
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally rmTree(dir)
   }
 
   test("array featuresCol path (no assembler) + estimator save/load") {
@@ -132,12 +131,7 @@ class PipelineSpec extends SparkTestBase {
         .map(r => r.getLong(0) -> r.getDouble(1)).toMap
       assert(got.size === 30)
       assert(got.forall { case (k, v) => v === (k % 2).toDouble })
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally rmTree(dir)
   }
 
   test("schema validation: missing/mistyped features, existing output col") {
@@ -310,12 +304,7 @@ class PipelineSpec extends SparkTestBase {
       assert(loaded.getOrDefault(loaded.idCol) === "key",
         "idCol must round-trip through save/load")
       assert(collectPreds(loaded.transform(input)) === gotId)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
-      }
-      rm(new java.io.File(dir))
-    }
+    } finally rmTree(dir)
     // free the internal-id transform's per-call persist (r16: it lives
     // on the transform result's own lineage, so release THROUGH that
     // result — a fresh withRowId over the input no longer shares it)
@@ -344,101 +333,96 @@ class PipelineSpec extends SparkTestBase {
     model.release()
   }
 
-  test("cacheInput evaluates an expensive upstream exactly once on the " +
-      "idCol path, graft-owned and eagerly releasable (round-15 " +
-      "directive #4)") {
+  test("validateIdCol round-trips save/load; releaseOwned(result) keeps the checkpoint") {
     val train = synthWide(80, 0)
       .select(col("key"), col("label"),
         array(col("f1"), col("f2"), col("f3")).as("series"))
     val model = new KnnClassifier().setK(3).setFeaturesCol("series")
-      .setExcludeZeroDistance(false).setIdCol("key").fit(train)
-
-    val nParts = 4
-    def expensiveInput(): DataFrame = {
-      PipelineSpec.evalCounts.clear()
-      val rdd = spark.sparkContext.parallelize(0 until 40, nParts)
-        .mapPartitionsWithIndex { case (i, it) =>
-          PipelineSpec.evalCounts
-            .computeIfAbsent(i, _ => new java.util.concurrent.atomic.AtomicInteger())
-            .incrementAndGet()
-          it.map { j =>
-            org.apache.spark.sql.Row(j.toLong + 500,
-              Array((j % 2 * 100 + j * 37 % 19).toDouble,
-                (j % 2 * 100 + j * 53 % 23).toDouble,
-                (j % 2 * 100 + j * 71 % 29) / 7.0))
-          }
-        }
-      spark.createDataFrame(rdd, org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("key",
-          org.apache.spark.sql.types.LongType, nullable = false),
-        org.apache.spark.sql.types.StructField("series",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.DoubleType), nullable = true))))
-    }
-    def evals: Int =
-      PipelineSpec.evalCounts.values().stream().mapToInt(_.get()).sum()
-
-    // WITHOUT the knob: the documented trade — the input lineage is
-    // referenced twice (classification + join-back) and recomputes per
-    // reference
-    val plain = expensiveInput()
-    val gotPlain = collectPreds(model.transform(plain))
-    val plainEvals = evals
-    assert(plainEvals > nParts,
-      s"test premise: the uncached idCol path recomputes the upstream " +
-        s"per reference (got $plainEvals evaluations over $nParts partitions)")
-
-    // WITH the knob: one evaluation, one new graft-owned persist
+      .setExcludeZeroDistance(false).fit(train)
+    // input downstream of a shuffle: the internal-id path persists it
+    // (graft-owned) once per call
+    val input = synthWide(40, 500).repartition(3)
+      .select(col("key"), array(col("f1"), col("f2"), col("f3")).as("series"))
     val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val cachedIn = expensiveInput()
-    val modelCached = model.copy(org.apache.spark.ml.param.ParamMap.empty)
-      .setCacheInput(true)
-    val outCached = modelCached.transform(cachedIn)
-    val gotCached = collectPreds(outCached)
-    assert(evals === nParts,
-      "cacheInput must evaluate the upstream exactly once (eager warm: " +
-        "no cold-persist race between the join-back and classification " +
-        "subtrees)")
-    assert(gotCached === gotPlain, "the knob must not change predictions")
-    val newPersists =
-      spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore
-    assert(newPersists.nonEmpty, "cacheInput must persist the input")
-    // eager release through the result: releaseOwned frees ONLY the
-    // graft-owned input persist — NOT the model's localCheckpointed
-    // train set, which sits in the same result lineage and has no
-    // lineage to recompute from (releaseCheckpoint on this frame would
-    // kill the model — the round-16 finding that split the two APIs)
-    graft.core.Materialize.releaseOwned(outCached)
+    val out = model.transform(input)
+    val want = collectPreds(out)
+    assert(want.size === 40)
     assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore)
-      .isEmpty, "releaseOwned(result) must free the cacheInput persist")
-    assert(collectPreds(outCached) === gotPlain,
+      .nonEmpty, "test premise: the internal-id path persists this input")
+    // releaseOwned frees ONLY the graft-owned input persist — NOT the
+    // model's localCheckpointed train set, which sits in the same result
+    // lineage and has no lineage to recompute from (releaseCheckpoint
+    // on this frame would kill the model — the round-16 finding that
+    // split the two APIs)
+    graft.core.Materialize.releaseOwned(out)
+    assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore)
+      .isEmpty, "releaseOwned(result) must free the transform's persist")
+    assert(collectPreds(out) === want,
       "a released result must recompute, not fail — and the model's " +
         "train checkpoint must have survived the release")
-    // the BooleanParams ride MLWriter/MLReader for real: an in-memory
+    // validateIdCol rides MLWriter/MLReader for real: an in-memory
     // getOrDefault check alone would miss a save/load regression (r16
-    // advisory) — write a model with both knobs set, re-read it, and
-    // predict with the loaded instance
-    val dir = java.nio.file.Files.createTempDirectory("graft_knnc_cache").toString
+    // advisory) — write a model with it set, re-read it, and predict
+    // with the loaded instance
+    val dir = java.nio.file.Files.createTempDirectory("graft_knnc_validate").toString
     try {
-      modelCached.setValidateIdCol(true)
-      modelCached.write.overwrite().save(dir)
+      model.copy(org.apache.spark.ml.param.ParamMap.empty)
+        .setIdCol("key").setValidateIdCol(true)
+        .write.overwrite().save(dir)
       val loaded = KnnClassifierModel.load(dir)
-      assert(loaded.getOrDefault(loaded.cacheInput) === true,
-        "cacheInput must round-trip through save/load")
       assert(loaded.getOrDefault(loaded.validateIdCol) === true,
         "validateIdCol must round-trip through save/load — a session " +
           "conf would NOT travel with a saved model, which is why it " +
           "is a Param (r16 verdict nit)")
-      val outLoaded = loaded.transform(expensiveInput())
-      assert(collectPreds(outLoaded) === gotPlain,
-        "a loaded model with cacheInput+validateIdCol predicts identically")
-      graft.core.Materialize.releaseOwned(outLoaded)
-    } finally {
-      def rm(f: java.io.File): Unit = {
-        Option(f.listFiles()).getOrElse(Array.empty).foreach(rm); f.delete(); ()
+      assert(collectPreds(loaded.transform(input)) === want,
+        "a loaded model with idCol+validateIdCol predicts identically")
+      val dup = Seq((7L, Array(0.0, 0.0, 0.0)), (7L, Array(1.0, 1.0, 1.0)))
+        .toDF("key", "series")
+      val e = intercept[IllegalArgumentException] { loaded.transform(dup) }
+      assert(e.getMessage.contains("not unique"))
+    } finally rmTree(dir)
+    graft.ingest.SeriesIngest.resetExchangeWarning()
+    model.release()
+  }
+
+  test("loads a model saved with the retired strategy and cacheInput params") {
+    val train = synthWide(60, 0)
+      .select(col("key"), col("label"),
+        array(col("f1"), col("f2"), col("f3")).as("series"))
+    val test = synthWide(20, 500)
+      .select(col("key"), array(col("f1"), col("f2"), col("f3")).as("series"))
+    val model = new KnnClassifier().setK(3).setFeaturesCol("series")
+      .setExcludeZeroDistance(false).fit(train)
+    val want = collectPreds(model.transform(test))
+    val dir = java.nio.file.Files.createTempDirectory("graft_knnc_retired").toString
+    try {
+      model.write.overwrite().save(dir)
+      // rewrite the metadata as an older release wrote it: every
+      // default lands in defaultParamMap, and a caller could have set
+      // both knobs explicitly
+      val meta = new java.io.File(dir, "metadata")
+      def inject(json: String, key: String, entries: String): String = {
+        val open = s""""$key":{"""
+        assert(json.contains(open), s"$key missing from $json")
+        val at = json.indexOf(open) + open.length
+        json.substring(0, at) + entries +
+          (if (json.charAt(at) == '}') "" else ",") + json.substring(at)
       }
-      rm(new java.io.File(dir))
-    }
+      val parts = meta.listFiles().filter(_.getName.startsWith("part-"))
+      assert(parts.nonEmpty)
+      parts.foreach { f =>
+        val json = new String(java.nio.file.Files.readAllBytes(f.toPath), "UTF-8")
+        val old = inject(inject(json, "paramMap", """"strategy":"cartesian","cacheInput":true"""),
+          "defaultParamMap", """"strategy":"auto","cacheInput":false""")
+        java.nio.file.Files.write(f.toPath, old.getBytes("UTF-8"))
+      }
+      // the edited files no longer match their checksums
+      meta.listFiles().filter(_.getName.endsWith(".crc")).foreach(_.delete())
+      val loaded = KnnClassifierModel.load(dir)
+      assert(!loaded.hasParam("strategy") && !loaded.hasParam("cacheInput"))
+      assert(loaded.getOrDefault(loaded.k) === 3)
+      assert(collectPreds(loaded.transform(test)) === want)
+    } finally rmTree(dir)
     model.release()
   }
 
@@ -450,7 +434,7 @@ class PipelineSpec extends SparkTestBase {
     val model = new KnnClassifier().setK(1).setFeaturesCol("series")
       .setExcludeZeroDistance(false).setIdCol("key").fit(train)
     // null id: classified into the merged null vote group, but the
-    // USING-join equality is null-rejecting -> the row surfaces with a
+    // join-back equality is null-rejecting -> the row surfaces with a
     // NULL prediction (documented contract)
     val withNull = Seq(
       (java.lang.Long.valueOf(1L), Array(0.0, 0.0, 0.0)),
@@ -466,52 +450,26 @@ class PipelineSpec extends SparkTestBase {
     val dup = Seq(
       (7L, Array(0.0, 0.0, 0.0)),
       (7L, Array(1.0, 1.0, 1.0))).toDF("key", "series")
-    // the conf path: a global override regardless of the param
-    spark.conf.set("spark.graft.knn.validateIdCol", "true")
-    try {
-      val e = intercept[IllegalArgumentException] { model.transform(dup) }
-      assert(e.getMessage.contains("not unique"),
-        s"the failure must name the breach, got: ${e.getMessage}")
-      // unique + non-null input passes the validator untouched
-      assert(collectPreds(model.transform(
-        Seq((1L, Array(0.0, 0.0, 0.0)), (2L, Array(1.0, 1.0, 1.0)))
-          .toDF("key", "series"))).size === 2)
-    } finally spark.conf.unset("spark.graft.knn.validateIdCol")
-    // the PARAM path (r16 directive #2): same assertion, no session
-    // conf — this is the form that persists with a saved model
     val validating = model.copy(org.apache.spark.ml.param.ParamMap.empty)
       .setValidateIdCol(true)
-    val e2 = intercept[IllegalArgumentException] { validating.transform(dup) }
-    assert(e2.getMessage.contains("not unique"))
-    // ... and with cacheInput=true the failed transform must NOT leak
-    // the eagerly-warmed graft-owned persist (r16 advisory: the
-    // exception escapes before any result frame exists, so the caller
-    // has no handle for releaseOwned)
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.keySet
-    val e3 = intercept[IllegalArgumentException] {
-      validating.setCacheInput(true).transform(dup)
-    }
-    assert(e3.getMessage.contains("not unique"))
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore)
-      .isEmpty,
-      "a validateIdCol failure under cacheInput must unpersist the " +
-        "warmed input before rethrowing — nothing may linger until GC")
-    // ... and the guard must cover RESULT CONSTRUCTION too, not just
-    // warm+validate: an analysis failure out of the classify/join-back
-    // plan (here: a duplicate-named unrelated column turning the final
-    // column-order select ambiguous) also escapes before any result
-    // frame exists, and must release the warmed persist the same way
+    val e = intercept[IllegalArgumentException] { validating.transform(dup) }
+    assert(e.getMessage.contains("not unique"),
+      s"the failure must name the breach, got: ${e.getMessage}")
+    // unique + non-null input passes the validator untouched
+    assert(collectPreds(validating.transform(
+      Seq((1L, Array(0.0, 0.0, 0.0)), (2L, Array(1.0, 1.0, 1.0)))
+        .toDF("key", "series"))).size === 2)
+    // duplicate names among the other input columns: both correlation
+    // paths keep the input's columns, in order, plus the prediction
     val dupColName = Seq((1L, Array(0.0, 0.0, 0.0), 1, 2))
       .toDF("key", "series", "extra", "extra")
-    val persistedBefore2 = spark.sparkContext.getPersistentRDDs.keySet
-    intercept[org.apache.spark.sql.AnalysisException] {
-      model.copy(org.apache.spark.ml.param.ParamMap.empty)
-        .setCacheInput(true).transform(dupColName).collect()
+    for (m <- Seq(model, model.copy(org.apache.spark.ml.param.ParamMap.empty)
+        .setIdCol(""))) {
+      val out = m.transform(dupColName)
+      assert(out.columns.toSeq === Seq("key", "series", "extra", "extra", "prediction"))
+      val row = out.collect().head
+      assert(row.getLong(0) === 1L && !row.isNullAt(4), s"idCol='${m.getOrDefault(m.idCol)}'")
     }
-    assert((spark.sparkContext.getPersistentRDDs.keySet -- persistedBefore2)
-      .isEmpty,
-      "a plan-construction failure under cacheInput must unpersist the " +
-        "warmed input before rethrowing — nothing may linger until GC")
     model.release()
   }
 

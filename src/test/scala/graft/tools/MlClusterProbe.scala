@@ -30,10 +30,14 @@ import org.apache.spark.sql.functions._
   *     and release() the fitted model;
   *  3. every canon must be bit-identical to the local baseline.
   *
-  * Two param shapes: the q37 surface (Vector features, euclidean k=5,
-  * auto strategy) and the cartesian+DTW shape (array plumbing through
-  * the same wrapper). Tie-free by construction (PipelineSpec's
-  * manifold), so the comparison is exact, not order-free.
+  * Param shapes: the q37 surface (Vector features, euclidean k=5, the
+  * broadcast plan its small train side takes) and the cartesian+DTW
+  * shape (broadcasts disabled through
+  * `spark.sql.autoBroadcastJoinThreshold=-1`; array plumbing through the
+  * same wrapper), plus the idCol path on a plain and on a caller-cached
+  * input. Every transform checks the pair join it planned. Tie-free by
+  * construction (PipelineSpec's manifold), so the comparison is exact,
+  * not order-free.
   *
   * Run: SPARK_DRIVER_MEM=16g sbt "Test/runMain graft.tools.MlClusterProbe"
   * Prints one PASS/FAIL line per probe; exits nonzero on any FAIL.
@@ -52,25 +56,56 @@ object MlClusterProbe {
     df.select("key", "prediction").collect()
       .map(r => (r.getLong(0), r.getDouble(1))).sortBy(_._1).toSeq
 
-  private case class Shape(name: String, stage: () => KnnClassifier)
+  /** `cartesian`: run with broadcasts disabled, which plans the pair join
+    * as a partitioned cartesian; otherwise the train side broadcasts.
+    * `cached`: the caller `cache()`s the transform input.
+    */
+  private case class Shape(name: String, stage: () => KnnClassifier,
+      cartesian: Boolean = false, cached: Boolean = false)
   private val shapes = Seq(
     Shape("euclid_k5_auto", () => new KnnClassifier()
       .setK(5).setDistance("euclidean").setExcludeZeroDistance(false)),
     Shape("dtw_k3_cartesian", () => new KnnClassifier()
-      .setK(3).setDistance("dtw").setBand(2).setStrategy("cartesian")
-      .setExcludeZeroDistance(false)),
+      .setK(3).setDistance("dtw").setBand(2)
+      .setExcludeZeroDistance(false), cartesian = true),
     // round-15: the user-key correlation path (no withRowId, declarative
     // join-back) — its join and param persistence must also hold across
     // process boundaries
     Shape("euclid_k5_idcol", () => new KnnClassifier()
       .setK(5).setDistance("euclidean").setExcludeZeroDistance(false)
       .setIdCol("key")),
-    // round-16: the cacheInput single-evaluation path (graft-owned
-    // persist + eager count warm) — executor-side block distribution
-    // and the cached-base join-back must also hold across JVMs
+    // a caller-cached input on the idCol path — executor-side block
+    // distribution and the cached join-back must also hold across JVMs
     Shape("euclid_k5_idcol_cached", () => new KnnClassifier()
       .setK(5).setDistance("euclidean").setExcludeZeroDistance(false)
-      .setIdCol("key").setCacheInput(true)))
+      .setIdCol("key"), cached = true))
+
+  /** Runs `body` under the shape's confs. */
+  private def planned[T](spark: SparkSession, shape: Shape)(body: => T): T =
+    if (!shape.cartesian) body
+    else {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      try body finally spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+    }
+
+  /** Transforms the probe's test input with `model`, checking the pair
+    * join planned: a CartesianProductExec for a cartesian shape, else a
+    * BroadcastNestedLoopJoin.
+    */
+  private def transformCanon(spark: SparkSession, shape: Shape,
+      model: PipelineModel): Seq[(Long, Double)] = planned(spark, shape) {
+    val in = synthWide(spark, 200, 10000)
+    val input = if (shape.cached) in.cache() else in
+    val out = model.transform(input)
+    val joins = out.queryExecution.sparkPlan.collect {
+      case _: org.apache.spark.sql.execution.joins.CartesianProductExec => "cartesian"
+      case _: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => "broadcast"
+    }
+    val want = if (shape.cartesian) "cartesian" else "broadcast"
+    require(joins.nonEmpty && joins.forall(_ == want),
+      s"${shape.name}: expected the $want pair join, planned $joins")
+    try canon(out) finally if (shape.cached) input.unpersist()
+  }
 
   private def fitTransform(spark: SparkSession, shape: Shape,
       saveDir: String): Seq[(Long, Double)] = {
@@ -80,13 +115,13 @@ object MlClusterProbe {
       shape.stage()))
     val model = pipeline.fit(synthWide(spark, 600, 0))
     model.write.overwrite().save(saveDir)
-    val out = canon(model.transform(synthWide(spark, 200, 10000)))
+    val out = transformCanon(spark, shape, model)
     model.stages.last.asInstanceOf[KnnClassifierModel].release()
     out
   }
 
-  private def loadTransform(spark: SparkSession, dir: String): Seq[(Long, Double)] =
-    canon(PipelineModel.load(dir).transform(synthWide(spark, 200, 10000)))
+  private def loadTransform(spark: SparkSession, shape: Shape, dir: String): Seq[(Long, Double)] =
+    transformCanon(spark, shape, PipelineModel.load(dir))
 
   def main(args: Array[String]): Unit = {
     var failed = List.empty[String]
@@ -160,11 +195,11 @@ object MlClusterProbe {
       }
       shapes.foreach { s =>
         check(s"cluster load+transform of locally-saved model (${s.name})") {
-          loadTransform(cluster, s"$work/local_${s.name}") == want(s.name)
+          loadTransform(cluster, s, s"$work/local_${s.name}") == want(s.name)
         }
         check(s"cluster fit+save+load+transform (${s.name})") {
           val fitted = fitTransform(cluster, s, s"$work/cluster_${s.name}")
-          val reloaded = loadTransform(cluster, s"$work/cluster_${s.name}")
+          val reloaded = loadTransform(cluster, s, s"$work/cluster_${s.name}")
           fitted == want(s.name) && reloaded == want(s.name)
         }
       }
