@@ -83,13 +83,28 @@ object Kernels {
     * slope normalization for unequal lengths it is a plain index band).
     * `band < 0` = unconstrained.
     */
-  def dtw(a: Array[Double], b: Array[Double], band: Int): Double = {
+  def dtw(a: Array[Double], b: Array[Double], band: Int): Double =
+    dtwBounded(a, b, band, Double.PositiveInfinity)
+
+  /** [[dtw]] with early abandoning: returns +Inf as soon as every cell of
+    * a row exceeds `limit`. Point costs are >= 0, so cumulative costs
+    * never fall along a warping path (fl(c + x) >= x for c >= 0), and
+    * every path crosses every row: a row whose cells all exceed `limit`
+    * proves the distance does too. Whenever the distance is <= `limit`
+    * the full recurrence runs and the result is bit-identical to [[dtw]].
+    * A NaN cell keeps its row alive (`NaN > limit` is false), so a
+    * NaN-poisoned pair is only ever abandoned by a row without one.
+    * The row test is a separate pass after the row, taken only when
+    * `limit` is finite, so the plain kernel's inner loop is untouched.
+    */
+  def dtwBounded(a: Array[Double], b: Array[Double], band: Int, limit: Double): Double = {
     val n = a.length; val m = b.length
     if (n == 0 || m == 0) return if (n == 0 && m == 0) 0.0 else Double.PositiveInfinity
     // a plain index band narrower than the length difference admits no
     // monotone path from (1,1) to (n,m)
     if (band >= 0 && math.abs(n - m) > band) return Double.PositiveInfinity
     val INF = Double.PositiveInfinity
+    val bounded = limit < INF
     val sc = dtwScratch.get()
     sc.ensure(m + 1)
     var prev = sc.prev
@@ -123,12 +138,26 @@ object Kernels {
         diag = up
         j += 1
       }
+      if (bounded && rowAbove(curr, lo, hi, limit)) return INF
       val t = prev; prev = curr; curr = t
       i += 1
     }
     val res = prev(m)
     sc.prev = prev; sc.curr = curr // keep swapped refs consistent
     res
+  }
+
+  /** Whether every cell of `row(lo..hi)` is strictly above `limit`: a
+    * cell equal to the limit may still end at exactly the limit, which
+    * must be computed to the end. The scan stops at the first cell that
+    * is not above, so a pair that never abandons usually pays one
+    * compare per row. Kept out of [[dtwBounded]]'s body so the plain
+    * kernel compiles as before.
+    */
+  private def rowAbove(row: Array[Double], lo: Int, hi: Int, limit: Double): Boolean = {
+    var j = lo
+    while (j <= hi) { if (!(row(j) > limit)) return false; j += 1 }
+    true
   }
 
   def dtw(a: Array[Double], b: Array[Double]): Double = dtw(a, b, -1)
@@ -329,6 +358,8 @@ object Kernels {
     manhattan(a.toDoubleArray(), b.toDoubleArray())
   def dtwAD(a: ArrayData, b: ArrayData, band: Int): Double =
     dtw(a.toDoubleArray(), b.toDoubleArray(), band)
+  def dtwBoundedAD(a: ArrayData, b: ArrayData, band: Int, limit: Double): Double =
+    dtwBounded(a.toDoubleArray(), b.toDoubleArray(), band, limit)
   def fastdtwAD(a: ArrayData, b: ArrayData, radius: Int): Double =
     fastdtw(a.toDoubleArray(), b.toDoubleArray(), radius)
   /** PAA sketch without intermediate toDoubleArray memcpy — runs once per

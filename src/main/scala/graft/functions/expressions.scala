@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodeGenerator, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
 
@@ -84,6 +85,120 @@ case class DtwDistance(left: Expression, right: Expression, band: Int)
     defineCodeGen(ctx, ev, (a, b) => s"graft.functions.Kernels.dtwAD($a, $b, $band)")
   override protected def withNewChildrenInternal(l: Expression, r: Expression) =
     copy(left = l, right = r)
+}
+
+/** The prune cascade's exact distance: [[DtwDistance]] run against the
+  * running k-th best of the current test key, so a candidate that cannot
+  * reach the top k stops within a few DTW rows
+  * ([[Kernels.dtwBounded]]) and reads +Inf.
+  *
+  * It keeps the k smallest exact distances seen for the current
+  * `testId` and bounds each new candidate by the k-th of them. Rows of
+  * one key must arrive together for the bound to tighten; in any other
+  * order only the speed-up is lost. A candidate is abandoned only when
+  * its distance provably exceeds the k-th best distance among candidates
+  * already seen, so every candidate that can enter the top k (ties at the
+  * bound included) is computed exactly and is bit-identical to
+  * [[DtwDistance]]; only pairs outside the top k can read +Inf instead of
+  * their distance. Null and NaN distances never tighten the bound, and
+  * neither do zeros under `excludeZero` (those rows are filtered out
+  * downstream). A null key gets the plain kernel.
+  *
+  * `dtw` stays a child so the plan names the kernel and its band; it is
+  * never evaluated itself, only its inputs are. Nondeterministic: an
+  * abandoned row's value depends on row order, and the flag also keeps
+  * predicate pushdown from copying the kernel into a join condition.
+  * Built only by [[graft.operators.Knn]], not a SQL function.
+  */
+case class BoundedDtwDistance(testId: Expression, dtw: DtwDistance, k: Int, excludeZero: Boolean)
+    extends Expression with Nondeterministic {
+  require(k >= 1, "k must be >= 1")
+
+  override def prettyName: String = "graft_dtw_bounded"
+  override def children: Seq[Expression] = Seq(testId, dtw)
+  override def dataType: DataType = DoubleType
+  override def nullable: Boolean = dtw.nullable
+
+  @transient private lazy val keyOrdering: Ordering[Any] =
+    org.apache.spark.sql.catalyst.util.TypeUtils.getInterpretedOrdering(testId.dataType)
+
+  /** One partition's running state (generated code keeps its own). */
+  def newState(): RunningKthBest = new RunningKthBest(k, dtw.band, excludeZero, keyOrdering)
+
+  @transient private var state: RunningKthBest = _
+
+  override protected def initializeInternal(partitionIndex: Int): Unit = state = newState()
+
+  override protected def evalInternal(input: org.apache.spark.sql.catalyst.InternalRow): Any = {
+    val a = dtw.left.eval(input)
+    if (a == null) return null
+    val b = dtw.right.eval(input)
+    if (b == null) return null
+    state.distance(testId.eval(input), a.asInstanceOf[ArrayData], b.asInstanceOf[ArrayData])
+  }
+
+  // real codegen, not CodegenFallback: a fallback inside a whole-stage
+  // project rebuilds an UnsafeRow of every referenced column per pair
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val st = ctx.addMutableState(classOf[RunningKthBest].getName, "kthBest")
+    val self = ctx.addReferenceObj("boundedDtw", this)
+    ctx.addPartitionInitializationStatement(s"$st = $self.newState();")
+    val id = testId.genCode(ctx)
+    val a = dtw.left.genCode(ctx)
+    val b = dtw.right.genCode(ctx)
+    val key = if (CodeGenerator.isPrimitiveType(testId.dataType))
+      s"${CodeGenerator.boxedType(testId.dataType)}.valueOf(${id.value})"
+    else id.value.toString
+    ev.copy(code = code"""
+      ${a.code}
+      boolean ${ev.isNull} = true;
+      double ${ev.value} = -1.0;
+      if (!${a.isNull}) {
+        ${b.code}
+        if (!${b.isNull}) {
+          ${id.code}
+          ${ev.isNull} = false;
+          ${ev.value} = $st.distance(${id.isNull} ? null : (Object) $key, ${a.value}, ${b.value});
+        }
+      }""")
+  }
+
+  override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): BoundedDtwDistance =
+    copy(testId = c(0), dtw = c(1).asInstanceOf[DtwDistance])
+}
+
+object BoundedDtwDistance {
+  private[graft] def column(
+      testId: org.apache.spark.sql.Column, a: org.apache.spark.sql.Column,
+      b: org.apache.spark.sql.Column, band: Int, k: Int,
+      excludeZero: Boolean): org.apache.spark.sql.Column = {
+    import org.apache.spark.sql.graft.ColumnBridge
+    ColumnBridge.column(BoundedDtwDistance(ColumnBridge.expression(testId),
+      DtwDistance(ColumnBridge.expression(a), ColumnBridge.expression(b), band), k, excludeZero))
+  }
+}
+
+/** The k smallest exact distances seen for the current test key (a
+  * [[TopKIdsBuffer]] whose ids are unused) and the bound they set: see
+  * [[BoundedDtwDistance]]. The key is copied when it changes (row
+  * buffers are reused) and compared by value.
+  */
+final class RunningKthBest(k: Int, band: Int, excludeZero: Boolean, keyOrdering: Ordering[Any]) {
+  private val best = new TopKIdsBuffer(k)
+  private var key: Any = null
+
+  def distance(testKey: Any, a: ArrayData, b: ArrayData): Double = {
+    if (testKey == null) return Kernels.dtwAD(a, b, band)
+    if (key == null || !keyOrdering.equiv(key, testKey)) {
+      key = org.apache.spark.sql.catalyst.InternalRow.copyValue(testKey)
+      best.size = 0
+    }
+    // the buffer is a max-heap: its root is the k-th smallest
+    val limit = if (best.size < k) Double.PositiveInfinity else best.scores(0)
+    val d = Kernels.dtwBoundedAD(a, b, band, limit)
+    if (!d.isNaN && !(excludeZero && d == 0.0)) best.insert(d, 0L)
+    d
+  }
 }
 
 /** FastDTW (Salvador & Chan 2007); radius=1 matches the Python package

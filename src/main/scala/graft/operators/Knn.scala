@@ -222,7 +222,14 @@ object Knn {
     *    O(n/coarsen) per pair;
     * 3. keep the candidateFactor*k best-ranked per test point via a
     *    bounded heap;
-    * 4. run the exact kernel only on survivors.
+    * 4. run the exact kernel only on survivors, against the running
+    *    k-th best: a DTW candidate stops as soon as a whole row of its
+    *    cost matrix exceeds the k-th smallest exact distance already
+    *    found for its test point
+    *    ([[graft.functions.BoundedDtwDistance]]). The fused shape streams
+    *    each test's candidates in rank order; the oversize shape groups
+    *    them by test_id in sort-merge-join order. Every candidate that
+    *    can enter the top k is computed exactly, in any row order.
     *
     * The PAA ranking is not an admissible bound, but it tracks the DTW
     * ordering tightly (it is FastDTW's coarse level used as a ranker,
@@ -252,8 +259,16 @@ object Knn {
     // FULL train projection, reused for the smaller sketch join)
     val bcastTrain = fitsBroadcast(trainSel)
     val fk = p.candidateFactor * p.k
-    val distExpr = SeriesFunctions.barrier(
-      distanceColumn(p)(col("test_series"), col("train_series")))
+    // exact phase: DTW runs each test's candidates against its running
+    // k-th best (both shapes deliver a test's candidates together; the
+    // fused one in PAA-rank order, so the first candidate usually sets a
+    // tight bound); FastDTW has no row-wise bound and keeps the barrier
+    val distExpr =
+      if (p.distance == "dtw")
+        graft.functions.BoundedDtwDistance.column(col("test_id"),
+          col("test_series"), col("train_series"), p.band, p.k, p.excludeZeroDistance)
+      else SeriesFunctions.barrier(
+        distanceColumn(p)(col("test_series"), col("train_series")))
 
     if (bcastTrain) {
       // FUSED broadcast path (r22, guide §1.2/§2.4): the train sketches

@@ -51,6 +51,56 @@ class KernelsSpec extends AnyFunSuite {
     }
   }
 
+  test("dtwBounded equals dtw bit for bit whenever dtw <= limit, and abandons only above it") {
+    val rnd = new scala.util.Random(0xB0D)
+    // band 0 and length 1 make the last row's minimum the distance
+    // itself, so a limit equal to the distance sits exactly on the
+    // abandon test there
+    val bands = Array(-3, -1, 0, 0, 1, 2, 5, 100)
+    var abandoned = 0
+    var atLimit = 0
+    (1 to 2000).foreach { trial =>
+      def mk(len: Int): Array[Double] =
+        if (rnd.nextBoolean()) Array.fill(len)((rnd.nextInt(81) - 40) * 0.25)
+        else Array.fill(len)(rnd.nextDouble() * 20 - 10)
+      val n = rnd.nextInt(13)
+      // every fourth pair differs in length by more than a small band
+      val m = if (trial % 4 == 0) n + 3 else if (rnd.nextBoolean()) n else rnd.nextInt(13)
+      val a = mk(n); val b = mk(m)
+      val band = bands(rnd.nextInt(bands.length))
+      val d = Kernels.dtw(a, b, band)
+      val limits =
+        if (d.isInfinite) Seq(0.0, 1.0, Double.PositiveInfinity)
+        else Seq(d, math.nextUp(d), math.nextDown(d), d * rnd.nextDouble(),
+          d * (1 + rnd.nextDouble()), 0.0, Double.PositiveInfinity)
+      limits.foreach { limit =>
+        val got = Kernels.dtwBounded(a, b, band, limit)
+        val ctx = s"band=$band limit=$limit dtw=$d got=$got a=${a.toSeq} b=${b.toSeq}"
+        if (d <= limit) {
+          assert(java.lang.Double.doubleToRawLongBits(got) ==
+            java.lang.Double.doubleToRawLongBits(d), ctx)
+          if (limit == d && n > 0 && (band == 0 || n == 1)) atLimit += 1
+        } else {
+          assert(got == d || got == Double.PositiveInfinity, ctx)
+          if (got != d) abandoned += 1
+        }
+      }
+    }
+    // the fuzz really exercises both sides of the abandon test
+    assert(abandoned > 1000 && atLimit > 50, s"abandoned=$abandoned atLimit=$atLimit")
+  }
+
+  test("dtwBounded stops at the first row whose cells all exceed the limit") {
+    // row 1 of [10, 0, 0] against [0, 0, 0] costs 10 in every cell
+    val a = Array(10.0, 0.0, 0.0); val b = Array(0.0, 0.0, 0.0)
+    assert(Kernels.dtw(a, b, -1) === 10.0)
+    assert(Kernels.dtwBounded(a, b, -1, 9.5) === Double.PositiveInfinity)
+    assert(Kernels.dtwBounded(a, b, -1, 10.0) === 10.0)
+    // a NaN point never abandons a row it poisons
+    val nan = Array(Double.NaN, 0.0, 0.0)
+    assert(Kernels.dtwBounded(nan, b, -1, 0.5).isNaN)
+  }
+
   test("euclidean matches hand-computed values") {
     assert(Kernels.euclidean(Array(0.0, 0.0), Array(3.0, 4.0)) === 5.0)
     assert(Kernels.euclidean(Array(1.0, 2.0, 3.0), Array(1.0, 2.0, 3.0)) === 0.0)

@@ -304,4 +304,175 @@ class KnnSpec extends SparkTestBase {
     assert(nnAll.getLong(0) === 1L)
     assert(nnAll.getDouble(1) === 0.0)
   }
+
+  // ---- the cascade's exact phase against each test's running k-th best
+
+  /** Neighbor rows with the distance's bits, for exact comparison. */
+  private def nbRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Long, Int, Double, Long)] =
+    df.select("test_id", "train_id", "rank", "label", "dist").collect().map { r =>
+      (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3),
+        java.lang.Double.doubleToLongBits(r.getDouble(4)))
+    }.toSeq.sorted
+
+  private def nnRows(df: org.apache.spark.sql.DataFrame): Seq[(Long, Double, Long)] =
+    df.collect().map { r =>
+      (r.getLong(0), r.getDouble(1), java.lang.Double.doubleToLongBits(r.getDouble(2)))
+    }.toSeq.sorted
+
+  private def uses(df: org.apache.spark.sql.DataFrame, fn: String): Boolean =
+    df.queryExecution.sparkPlan.exists(_.expressions.exists(_.exists(_.prettyName == fn)))
+
+  /** Runs `body` on `train` in one cascade shape: "fused" (the broadcast
+    * scan a small train side takes) or "oversize" (slim pair scores plus
+    * the heap aggregate, forced as in the oversize test above).
+    */
+  private def inShape[T](shape: String, train: org.apache.spark.sql.DataFrame)(
+      body: org.apache.spark.sql.DataFrame => T): T = shape match {
+    case "fused" => body(train)
+    case "oversize" =>
+      // a lower cap than the oversize test above: the tie fixture's
+      // train side is under 1 KiB
+      val ck = train.localCheckpoint()
+      spark.conf.set("spark.graft.knn.broadcastFloor", "256b")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "256b")
+      try body(ck)
+      finally {
+        spark.conf.unset("spark.graft.knn.broadcastFloor")
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+        graft.core.Materialize.releaseCheckpoint(ck)
+      }
+  }
+
+  /** Asserts that the bounded cascade, in `shape`, returns exactly the
+    * unpruned path's neighbors (distances bit for bit) and 1-NN answers.
+    * The candidate budget covers the whole train side, so any difference
+    * is the bound's.
+    */
+  private def assertBoundedExact(shape: String, train: org.apache.spark.sql.DataFrame,
+      test: org.apache.spark.sql.DataFrame, p: KnnParams): Unit = {
+    val exactNb = nbRows(Knn.neighbors(train, test, p))
+    val exactNn = nnRows(Knn.classify1NN(train, test, p))
+    val q = p.copy(lbPruning = true, candidateFactor = 1024)
+    inShape(shape, train) { tr =>
+      val nb = Knn.neighbors(tr, test, q)
+      assert(uses(nb, if (shape == "fused") "graft_topk_scan" else "graft_topk_ids"),
+        s"$shape: unexpected plan\n${nb.queryExecution.sparkPlan}")
+      assert(uses(nb, "graft_dtw_bounded"))
+      assert(nbRows(nb) === exactNb, s"$shape neighbors $p")
+      assert(nnRows(Knn.classify1NN(tr, test, q)) === exactNn, s"$shape classify1NN $p")
+    }
+  }
+
+  // duplicate train series under distinct ids, a null series and a
+  // series holding a NaN on each side
+  private lazy val boundTrain = trainDf.unionByName(Seq(
+    (207L, trainData(6)._2, trainData(6)._3),
+    (307L, trainData(6)._2, trainData(6)._3),
+    (998L, null.asInstanceOf[Array[Double]], 0.0),
+    (999L, trainData(0)._2.updated(5, Double.NaN), 0.0))
+    .toDF("train_id", "train_series", "label"))
+  private lazy val boundTest = testDf.unionByName(Seq(
+    (198L, null.asInstanceOf[Array[Double]]),
+    (199L, testData(0)._2.updated(3, Double.NaN)))
+    .toDF("test_id", "test_series"))
+
+  for (shape <- Seq("fused", "oversize")) {
+    test(s"bounded exact phase ($shape): k in {1, 5} equal the unpruned path bit for bit") {
+      for (k <- Seq(1, 5); exclude <- Seq(true, false))
+        assertBoundedExact(shape, boundTrain, boundTest,
+          KnnParams(k = k, distance = "dtw", band = 4, coarsenFactor = 4,
+            excludeZeroDistance = exclude))
+    }
+
+    test(s"bounded exact phase ($shape): self-matches under excludeZeroDistance never set the bound") {
+      // the train set as the test set: each test's first-ranked candidate
+      // is itself at distance 0, which must not bound the rest
+      val selfTest = boundTrain.select(
+        col("train_id").as("test_id"), col("train_series").as("test_series"))
+      for (k <- Seq(1, 5))
+        assertBoundedExact(shape, boundTrain, selfTest,
+          KnnParams(k = k, distance = "dtw", band = 4, coarsenFactor = 4))
+    }
+
+    test(s"bounded exact phase ($shape): a tie at the bound is computed, smaller train_id wins") {
+      // band 0 makes DTW the Manhattan sum, whose last DTW row holds only
+      // the final cell: a tied candidate's last row sits exactly on the
+      // bound. X (id 9) and Y (id 3) tie at 8, but X ranks first by PAA
+      // (its offsets cancel inside each 2-block), so X sets the bound and
+      // Y must still be computed to win the tie by train_id. A1..A4 sit
+      // at 0.25 so that at k = 5 the tie falls on the fifth place.
+      val t = Array.tabulate(16)(i => (i % 4) * 0.25)
+      val x = t.zipWithIndex.map { case (v, i) => if (i % 2 == 0) v + 0.5 else v - 0.5 }
+      val y = t.map(_ + 0.5)
+      val near = (0 until 4).map(j => (11L + j, t.updated(j * 4, t(j * 4) + 0.25), 2.0))
+      val probe = Seq((1L, t)).toDF("test_id", "test_series")
+      for ((k, extra) <- Seq(1 -> Nil, 5 -> near)) {
+        val train = ((9L, x, 0.0) +: (3L, y, 1.0) +: extra)
+          .toDF("train_id", "train_series", "label")
+        val q = KnnParams(k = k, distance = "dtw", band = 0, coarsenFactor = 2)
+        assertBoundedExact(shape, train, probe, q)
+        if (shape == "fused") {
+          val last = nbRows(Knn.neighbors(train, probe,
+            q.copy(lbPruning = true, candidateFactor = 8))).maxBy(_._3)
+          assert(last._2 === 3L && last._5 === java.lang.Double.doubleToLongBits(8.0), s"k=$k")
+        }
+      }
+    }
+  }
+
+  test("bounded exact phase: the interpreted eval path equals the unpruned path") {
+    spark.conf.set("spark.sql.codegen.wholeStage", "false")
+    spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+    try {
+      for (shape <- Seq("fused", "oversize"); k <- Seq(1, 5))
+        assertBoundedExact(shape, boundTrain, boundTest,
+          KnnParams(k = k, distance = "dtw", band = 4, coarsenFactor = 4))
+    } finally {
+      spark.conf.unset("spark.sql.codegen.wholeStage")
+      spark.conf.unset("spark.sql.codegen.factoryMode")
+    }
+  }
+
+  test("fused plan: the bounded dist is projected over Generate -> BroadcastHashJoin in one codegen stage") {
+    // the running bound tightens only while a test's candidates stream
+    // together in PAA-rank order; if a plan change scatters them, the
+    // pruning would vanish silently, so pin the shape that keeps them
+    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    val df = Knn.classify1NN(trainDf, testDf,
+      KnnParams(k = 1, distance = "dtw", band = 4, lbPruning = true, coarsenFactor = 4))
+    df.collect()
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    // the operators one whole-stage-codegen stage fuses
+    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
+      case _: InputAdapter | _: WholeStageCodegenExec => Nil
+      case o => o +: o.children.flatMap(stage)
+    }
+    val plan = df.queryExecution.executedPlan
+    val fused = nodes(plan).collect { case w: WholeStageCodegenExec => stage(w.child) }
+      .filter(_.exists {
+        case pr: ProjectExec =>
+          pr.projectList.exists(_.exists(_.isInstanceOf[graft.functions.BoundedDtwDistance]))
+        case _ => false
+      })
+    assert(fused.size === 1, s"expected one stage projecting the bounded dist:\n$plan")
+    val ops = fused.head
+    val project = ops.collectFirst { case pr: ProjectExec
+      if pr.projectList.exists(_.exists(_.isInstanceOf[graft.functions.BoundedDtwDistance])) => pr }.get
+    val ok = project.child match {
+      case j: BroadcastHashJoinExec =>
+        val streamed = if (j.buildSide == org.apache.spark.sql.catalyst.optimizer.BuildRight) j.left else j.right
+        ops.contains(j) && stage(streamed).exists {
+        case g: GenerateExec => ops.contains(g)
+        case _ => false
+      }
+      case _ => false
+    }
+    assert(ok, s"expected Project <- BroadcastHashJoin <- Generate in one stage:\n$plan")
+  }
 }
