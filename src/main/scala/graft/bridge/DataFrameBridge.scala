@@ -3,6 +3,7 @@ package org.apache.spark.sql.graft
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.types.StructType
 
 /** Minimal accessor for the (`private[sql]`)
@@ -36,4 +37,12 @@ object DataFrameBridge {
             s"layer; got ${other.getClass.getName} (Spark Connect " +
             "sessions cannot host graft-owned persists)")
     }
+
+  /** A frame over a graft logical node (`private[sql]` `Dataset.ofRows`). */
+  def ofPlan(spark: SparkSession, plan: LogicalPlan): DataFrame = spark match {
+    case classic: org.apache.spark.sql.classic.SparkSession =>
+      org.apache.spark.sql.classic.Dataset.ofRows(classic, plan)
+    case other => throw new UnsupportedOperationException(
+      s"graft logical operators need a classic SparkSession; got ${other.getClass.getName}")
+  }
 }

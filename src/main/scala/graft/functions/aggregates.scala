@@ -10,10 +10,14 @@ import org.apache.spark.sql.types._
   * lexicographic order, kept as a binary MAX-heap over primitive arrays —
   * eviction compares against the current maximum in O(1), inserts are
   * O(log k), and partial state serializes at 16 bytes per kept entry.
+  * Each entry carries a caller `ref` (the KNN candidate operator keeps
+  * the index of the row it came from there); it plays no part in the
+  * order.
   */
 final class TopKIdsBuffer(val k: Int) {
   val scores = new Array[Double](k)
   val ids = new Array[Long](k)
+  val refs = new Array[Int](k)
   var size = 0
 
   // SQLOrderingUtil.compareDoubles: Spark's OWN sort comparator — a total
@@ -27,39 +31,41 @@ final class TopKIdsBuffer(val k: Int) {
     val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(s1, s2)
     c > 0 || (c == 0 && i1 > i2)
   }
+  @inline private def gt(i: Int, j: Int): Boolean = gt(scores(i), ids(i), scores(j), ids(j))
 
-  def insert(s: Double, id: Long): Unit = {
-    if (size < k) {
-      var i = size
-      scores(i) = s; ids(i) = id
-      size += 1
-      // sift up
-      while (i > 0) {
-        val p = (i - 1) >> 1
-        if (gt(scores(i), ids(i), scores(p), ids(p))) {
-          val ts = scores(i); scores(i) = scores(p); scores(p) = ts
-          val ti = ids(i); ids(i) = ids(p); ids(p) = ti
-          i = p
-        } else return
-      }
-    } else if (gt(scores(0), ids(0), s, id)) {
-      // replace the root (current max) and sift down
-      scores(0) = s; ids(0) = id
-      var i = 0
-      while (true) {
-        val l = 2 * i + 1; val r = l + 1
-        var m = i
-        if (l < size && gt(scores(l), ids(l), scores(m), ids(m))) m = l
-        if (r < size && gt(scores(r), ids(r), scores(m), ids(m))) m = r
-        if (m == i) return
-        val ts = scores(i); scores(i) = scores(m); scores(m) = ts
-        val ti = ids(i); ids(i) = ids(m); ids(m) = ti
-        i = m
-      }
-    }
+  private def swap(i: Int, j: Int): Unit = {
+    val ts = scores(i); scores(i) = scores(j); scores(j) = ts
+    val ti = ids(i); ids(i) = ids(j); ids(j) = ti
+    val tr = refs(i); refs(i) = refs(j); refs(j) = tr
   }
 
-  private def sortedIdx(): Array[Int] = {
+  /** Offers one entry; true when it was kept. */
+  def insert(s: Double, id: Long, ref: Int = 0): Boolean = {
+    if (size < k) {
+      var i = size
+      scores(i) = s; ids(i) = id; refs(i) = ref
+      size += 1
+      // sift up
+      while (i > 0 && gt(i, (i - 1) >> 1)) { swap(i, (i - 1) >> 1); i = (i - 1) >> 1 }
+      true
+    } else if (gt(scores(0), ids(0), s, id)) {
+      // replace the root (current max) and sift down
+      scores(0) = s; ids(0) = id; refs(0) = ref
+      var i = 0
+      var done = false
+      while (!done) {
+        val l = 2 * i + 1; val r = l + 1
+        var m = i
+        if (l < size && gt(l, m)) m = l
+        if (r < size && gt(r, m)) m = r
+        if (m == i) done = true else { swap(i, m); i = m }
+      }
+      true
+    } else false
+  }
+
+  /** Heap slots in ascending (score, id) order. */
+  def sortedIdx(): Array[Int] = {
     val idx = Array.range(0, size)
     idx.sortWith { (x, y) =>
       val c = org.apache.spark.sql.catalyst.util.SQLOrderingUtil.compareDoubles(scores(x), scores(y))
@@ -73,179 +79,6 @@ final class TopKIdsBuffer(val k: Int) {
   /** (score, id) pairs sorted ascending by (score, id). */
   def sortedPairs(): Array[(Double, Long)] =
     sortedIdx().map(i => (scores(i), ids(i)))
-}
-
-/** Fused candidate-selection scan — the broadcast-path replacement for
-  * the pair-join + [[BoundedTopKIdsAgg]] sequence in the KNN prune
-  * cascade (r22 optimization, guide §1.2 "fix the distributed algorithm
-  * first"): for ONE test-side PAA sketch, rank EVERY train sketch by
-  * Manhattan distance and return the ids of the k smallest (score, id)
-  * pairs directly.
-  *
-  * Equivalence to the join+aggregate shape (AggregatesSpec pins it): the
-  * scores are computed by the SAME kernel the pair join's expression
-  * called ([[Kernels.manhattanAD]] == manhattan over toDoubleArray), and
-  * the selection is the SAME [[TopKIdsBuffer]] — a total order over
-  * (score, id), so the selected set is independent of insertion order. Null handling matches the aggregate: a null train
-  * entry (null struct, null id, or null sketch → null score in the old
-  * plan) is skipped; a null TEST sketch yields an empty array, exactly
-  * what an all-null-score group produced (and the downstream
-  * `explode(cand_ids)` drops the row either way).
-  *
-  * Why it is faster: the join+aggregate shape materializes |test| x
-  * |train| joined rows through BroadcastNestedLoopJoin + per-pair
-  * projection + hash aggregation (measured ~2.5 us/pair of machinery
-  * around a ~0.1 us kernel on the HAR workload). This expression runs
-  * the kernel in a tight loop per test row over the broadcast sketch
-  * array, with the heap local to one row's evaluation.
-  *
-  * The broadcast side is decoded to primitive arrays ONCE per task per
-  * thread (identity-checked on the UnsafeArrayData's base buffer — every
-  * joined row references the same broadcast bytes), the §4.5 "heavy
-  * state once per task" discipline. That cache is sound only when the
-  * train array is a broadcast row's immutable bytes: a producer that
-  * reuses row buffers could hand over a different array at the same
-  * address. So the expression is not a registered SQL function; only
-  * [[graft.operators.Knn]] builds it ([[TopKScanIds.column]]), over a
-  * broadcast `collect_list` row.
-  */
-case class TopKScanIds(
-    left: Expression,  // test sketch: array<double>
-    right: Expression, // broadcast train: array<struct<id: long, sk: array<double>>>
-    k: Int)
-    extends org.apache.spark.sql.catalyst.expressions.BinaryExpression {
-  require(k >= 1, "k must be >= 1")
-
-  override def prettyName: String = "graft_topk_scan"
-  override def dataType: DataType = ArrayType(LongType, containsNull = false)
-  // null-intolerant: a null test sketch yields a null id array, which the
-  // downstream explode() drops — the same end state as the join+aggregate
-  // shape, where all-null scores left the test point with no candidate
-  // rows at all
-  override def nullIntolerant: Boolean = true
-
-  override def checkInputDataTypes()
-      : org.apache.spark.sql.catalyst.analysis.TypeCheckResult = {
-    import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-    (left.dataType, right.dataType) match {
-      case (ArrayType(DoubleType, _), ArrayType(StructType(fs), _))
-          if fs.length == 2 && fs(0).dataType == LongType &&
-            (fs(1).dataType match {
-              case ArrayType(DoubleType, _) => true
-              case _ => false
-            }) =>
-        TypeCheckResult.TypeCheckSuccess
-      case (l, r) =>
-        TypeCheckResult.TypeCheckFailure(
-          s"$prettyName needs (array<double>, array<struct<long, array<double>>>), got ($l, $r)")
-    }
-  }
-
-  override def nullSafeEval(sk: Any, tarr: Any): Any =
-    TopKScanIds.scan(sk.asInstanceOf[ArrayData], tarr.asInstanceOf[ArrayData], k)
-
-  // REAL doGenCode (not CodegenFallback): a fallback expression inside a
-  // whole-stage-codegen'd project forces INPUT_ROW materialization —
-  // the generated code rebuilds an UnsafeRow of every referenced column
-  // per output row, memcpy'ing the multi-MB broadcast sketch array once
-  // per TEST ROW (measured: 39 s executor time for a 2 s kernel).
-  // Direct codegen passes the ArrayData views, so the per-thread decode
-  // cache actually hits.
-  override protected def doGenCode(
-      ctx: org.apache.spark.sql.catalyst.expressions.codegen.CodegenContext,
-      ev: org.apache.spark.sql.catalyst.expressions.codegen.ExprCode)
-      : org.apache.spark.sql.catalyst.expressions.codegen.ExprCode =
-    defineCodeGen(ctx, ev, (a, b) =>
-      s"graft.functions.TopKScanIds.scan($a, $b, $k)")
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): TopKScanIds =
-    copy(left = newLeft, right = newRight)
-}
-
-object TopKScanIds {
-
-  /** The ids of the k entries of the broadcast `trainArr`
-    * (array<struct<id, sketch>>) nearest in Manhattan distance to the
-    * test sketch `sk`.
-    */
-  private[graft] def column(
-      sk: org.apache.spark.sql.Column, trainArr: org.apache.spark.sql.Column,
-      k: Int): org.apache.spark.sql.Column = {
-    import org.apache.spark.sql.graft.ColumnBridge
-    ColumnBridge.column(TopKScanIds(
-      ColumnBridge.expression(sk), ColumnBridge.expression(trainArr), k))
-  }
-
-  /** Per-thread decoded broadcast side: every joined row references the
-    * same broadcast bytes, so the identity check on the UnsafeArrayData's
-    * base buffer hits after the first row of each task. Thread-confined
-    * like [[Kernels]]' DTW scratch (generated code shares statics across
-    * all of the session's tasks).
-    */
-  private final class Decoded {
-    var baseObj: AnyRef = null
-    var baseOff: Long = -1L
-    var refId: AnyRef = null
-    var n: Int = -1
-    var ids: Array[Long] = null
-    var sks: Array[Array[Double]] = null
-  }
-  private val decodedTL = new ThreadLocal[Decoded] {
-    override def initialValue(): Decoded = new Decoded
-  }
-
-  private def decode(ad: ArrayData, d: Decoded): Unit = {
-    val n = ad.numElements()
-    d.n = n
-    d.ids = new Array[Long](n)
-    d.sks = new Array[Array[Double]](n)
-    var i = 0
-    while (i < n) {
-      if (!ad.isNullAt(i)) {
-        val st = ad.getStruct(i, 2)
-        if (!st.isNullAt(0) && !st.isNullAt(1)) {
-          d.ids(i) = st.getLong(0)
-          d.sks(i) = st.getArray(1).toDoubleArray()
-        }
-      }
-      i += 1
-    }
-  }
-
-  private def decoded(ad: ArrayData): Decoded = {
-    val d = decodedTL.get()
-    ad match {
-      case u: org.apache.spark.sql.catalyst.expressions.UnsafeArrayData =>
-        if (!(d.baseObj eq u.getBaseObject) || d.baseOff != u.getBaseOffset ||
-          d.n != u.numElements()) {
-          decode(u, d)
-          d.baseObj = u.getBaseObject; d.baseOff = u.getBaseOffset; d.refId = null
-        }
-      case other =>
-        if (!(d.refId eq other)) {
-          decode(other, d)
-          d.refId = other; d.baseObj = null; d.baseOff = -1L
-        }
-    }
-    d
-  }
-
-  /** The fused scan body — called from generated code with the raw
-    * ArrayData values (no row materialization).
-    */
-  def scan(skAD: ArrayData, tarr: ArrayData, k: Int): ArrayData = {
-    val sk = skAD.toDoubleArray()
-    val d = decoded(tarr)
-    val buf = new TopKIdsBuffer(k)
-    var i = 0
-    while (i < d.n) {
-      val t = d.sks(i)
-      if (t != null) buf.insert(Kernels.manhattan(sk, t), d.ids(i))
-      i += 1
-    }
-    ArrayData.toArrayData(buf.sortedIds())
-  }
 }
 
 /** Native bounded top-k-by-score aggregate: collects the ids of the k

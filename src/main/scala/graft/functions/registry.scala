@@ -155,8 +155,8 @@ object GraftFunctions {
     }
 
   /** Idempotent post-hoc registration on a live session: functions via
-    * the registry bridge, optimizer rules via the public
-    * `experimental.extraOptimizations` hook.
+    * the registry bridge, optimizer rules and planner strategies via the
+    * public `experimental` hooks.
     */
   def register(spark: SparkSession): Unit = {
     org.apache.spark.sql.graft.RegistryBridge.install(spark, installInto)
@@ -164,6 +164,7 @@ object GraftFunctions {
     if (!spark.experimental.extraOptimizations.contains(rule))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ rule
+    graft.operators.KnnStrategy.install(spark)
   }
 }
 
@@ -175,5 +176,6 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         new ExpressionInfo("graft", null, name, usage, ""), b))
     }
     e.injectOptimizerRule(_ => graft.plans.EuclideanThresholdToSqdist)
+    e.injectPlannerStrategy(_ => graft.operators.KnnStrategy)
   }
 }

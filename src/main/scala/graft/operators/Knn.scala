@@ -124,12 +124,9 @@ object Knn {
   }
 
   /** Size-driven all-pairs cross join of a (possibly projected) train
-    * side against the spread test side, shared by every pair-generating
-    * phase (the unpruned crossJoin AND the prune cascade's ranking +
-    * payload joins): broadcast while the train side fits an executor,
-    * partitioned cartesian beyond that. `broadcastTrain` carries a
-    * decision the caller already made (the prune cascade decides on the
-    * full train projection, then joins only its sketch).
+    * side against the spread test side, shared by every unpruned
+    * pair-generating operator: broadcast while the train side fits an
+    * executor, partitioned cartesian beyond that.
     *
     * When the train side exceeds the broadcast budget: broadcast the
     * TEST side instead if it fits (the train side then STREAMS — never
@@ -141,9 +138,7 @@ object Knn {
     * inputs — it would silently broadcast the huge side this decision
     * just rejected.
     */
-  private[operators] def crossPairs(
-      trainSel: DataFrame, spreadTest: DataFrame,
-      broadcastTrain: Option[Boolean] = None): DataFrame =
+  private[operators] def crossPairs(trainSel: DataFrame, spreadTest: DataFrame): DataFrame =
     if (spreadTest.isStreaming)
       // stream-static all-pairs has exactly ONE executable plan: the
       // static side broadcast under a BroadcastNestedLoopJoin (an
@@ -155,7 +150,7 @@ object Knn {
       // broadcast must be sharded upstream (ANN prefilter / per-class
       // split) before it meets an unbounded test stream.
       spreadTest.crossJoin(broadcast(trainSel))
-    else if (broadcastTrain.getOrElse(fitsBroadcast(trainSel)))
+    else if (fitsBroadcast(trainSel))
       spreadTest.crossJoin(broadcast(trainSel))
     else if (fitsBroadcast(spreadTest))
       trainSel.crossJoin(broadcast(spreadTest))
@@ -217,19 +212,18 @@ object Knn {
   }
 
   /** Prune cascade, the DTW scale path:
-    * 1. sketch each side ONCE scan-side (PAA block means);
-    * 2. rank every pair by Manhattan distance between the sketches —
-    *    O(n/coarsen) per pair;
-    * 3. keep the candidateFactor*k best-ranked per test point via a
-    *    bounded heap;
-    * 4. run the exact kernel only on survivors, against the running
-    *    k-th best: a DTW candidate stops as soon as a whole row of its
-    *    cost matrix exceeds the k-th smallest exact distance already
-    *    found for its test point
-    *    ([[graft.functions.BoundedDtwDistance]]). The fused shape streams
-    *    each test's candidates in rank order; the oversize shape groups
-    *    them by test_id in sort-merge-join order. Every candidate that
-    *    can enter the top k is computed exactly, in any row order.
+    * 1. rank every pair by Manhattan distance between PAA sketches —
+    *    O(n/coarsen) per pair — and keep the candidateFactor*k
+    *    best-ranked per test point in a bounded heap, all inside one
+    *    [[KnnCandidates]] node that broadcasts one side once;
+    * 2. run the exact kernel only on those candidates, against the
+    *    running k-th best: a DTW candidate stops as soon as a whole row
+    *    of its cost matrix exceeds the k-th smallest exact distance
+    *    already found for its test point
+    *    ([[graft.functions.BoundedDtwDistance]]). The node hands it each
+    *    test's candidates together, in rank order, so the first candidate
+    *    usually sets a tight bound. Every candidate that can enter the
+    *    top k is computed exactly, in any row order.
     *
     * The PAA ranking is not an admissible bound, but it tracks the DTW
     * ordering tightly (it is FastDTW's coarse level used as a ranker,
@@ -238,31 +232,19 @@ object Knn {
     * neighbours, pinned per workload in KnnSpec and by the q25/q26/q33
     * oracles.
     *
-    * Every join here follows the same broadcast-vs-partitioned
-    * decision as the unpruned path ([[fitsBroadcast]]) — when the train
-    * side exceeds executor memory, the ranking join degrades to a
-    * partitioned cross join instead of OOMing.
+    * The broadcast side follows the same measured-size decisions as the
+    * unpruned path ([[fitsBroadcast]], [[crossPairs]]): the train side
+    * while it fits (a streaming test side always broadcasts it), else
+    * the test side, else neither — a partitioned cartesian of slim
+    * sketch scores into the graft_topk_ids heap aggregate.
     */
   private def prunedCandidates(train: DataFrame, test: DataFrame, p: KnnParams): DataFrame = {
     val trainSel = train.select(col("train_id"), col("train_series"), col("label"))
     val testSel = test.select(col("test_id"), col("test_series"))
-    val spreadTest = Partitioning.spread(testSel)
-    // barrier() on each side's sketch: a single-use alias gets inlined
-    // by CollapseProject, which would recompute the O(n) sketch once per
-    // PAIR instead of once per row
-    def paaSide(df: DataFrame, seriesCol: String, idCol: String, out: String) =
-      df.withColumn(out, SeriesFunctions.barrier(
-          SeriesFunctions.paa(col(seriesCol), p.coarsenFactor)))
-        .select(col(idCol), col(out))
-    val trainSketch = paaSide(trainSel, "train_series", "train_id", "tsk")
-    // one stats-driven decision per query (conservative: measured on the
-    // FULL train projection, reused for the smaller sketch join)
-    val bcastTrain = fitsBroadcast(trainSel)
     val fk = p.candidateFactor * p.k
-    // exact phase: DTW runs each test's candidates against its running
-    // k-th best (both shapes deliver a test's candidates together; the
-    // fused one in PAA-rank order, so the first candidate usually sets a
-    // tight bound); FastDTW has no row-wise bound and keeps the barrier
+    // exact phase, projected directly over the candidate rows: DTW runs
+    // each test's candidates against its running k-th best; FastDTW has
+    // no row-wise bound and keeps the barrier
     val distExpr =
       if (p.distance == "dtw")
         graft.functions.BoundedDtwDistance.column(col("test_id"),
@@ -270,77 +252,48 @@ object Knn {
       else SeriesFunctions.barrier(
         distanceColumn(p)(col("test_series"), col("train_series")))
 
-    if (bcastTrain) {
-      // FUSED broadcast path (r22, guide §1.2/§2.4): the train sketches
-      // travel as ONE broadcast array<struct<id, sketch>> row and a
-      // single expression ([[graft.functions.TopKScanIds]]) ranks every
-      // train entry and selects the top-fk candidates per TEST ROW —
-      // replacing the oversize shape's BroadcastNestedLoopJoin pair pass,
-      // ObjectHashAggregate with its exchange and test-payload
-      // SortMergeJoin (measured ~2.5 us/pair of join+aggregate machinery
-      // around a ~0.1 us ranking kernel at HAR scale). Selection
-      // semantics are identical — same kernel, same TopKIdsBuffer total
-      // order. The test payload stays ON the row through candidate
-      // selection, so the exact phase explodes in-partition at the
-      // spread's parallelism with no join-back.
-      val testSk = spreadTest.withColumn("sk", SeriesFunctions.barrier(
-        SeriesFunctions.paa(col("test_series"), p.coarsenFactor)))
-      val trainArr = trainSketch
-        .agg(collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
-      // barrier on cand_ids: InferFiltersFromGenerate adds a
-      // size(cand_ids) > 0 predicate above this projection, and pushdown
-      // through a deterministic alias would re-run the whole scan per row
-      val withDist = testSk
-        .crossJoin(broadcast(trainArr))
-        .select(col("test_id"), col("test_series"),
-          SeriesFunctions.barrier(graft.functions.TopKScanIds.column(
-            col("sk"), col("tarr"), fk)).as("cand_ids"))
-        .select(col("test_id"), col("test_series"),
-          explode(col("cand_ids")).as("train_id"))
-        .join(broadcast(trainSel), "train_id")
-        .withColumn("dist", distExpr)
-      val filtered =
-        if (p.excludeZeroDistance) withDist.filter(col("dist") =!= 0.0)
-        else withDist
-      return filtered.select(
-        col("test_id"), col("train_id"), col("label"), col("dist"))
-    }
-
-    // Oversize-train path: slim pair scores + bounded-heap selection (the
-    // shape that never replicates or collects the train payload).
-    // SLIM ranking rows: only (test_id, train_id, score) feed candidate
-    // selection — payloads would put candidateCount * seriesBytes into
-    // every buffer. Selection is a bounded-heap AGGREGATE (the
-    // reference's two-phase heap, `Team11-Project.py:180`/`:195`), not a
-    // window rank: sorting tens of millions of pair rows to keep
-    // factor*k per group costs more than every ranking score combined.
-    val testSketch = paaSide(spreadTest, "test_series", "test_id", "sk")
-    val slimDf = crossPairs(trainSketch, testSketch, Some(bcastTrain))
-      .select(col("test_id"), col("train_id"),
-        SeriesFunctions.manhattan(col("sk"), col("tsk")).as("score"))
-    // ONE row per test point (test_id, candidate-id array) out of the
-    // heap — the exact phase joins payloads at |test| row counts, not
-    // |test|*fk. Selection runs as the native TypedImperativeAggregate
-    // (graft_topk_ids): primitive-array heap buffer, no per-row tuple
-    // boxing or Kryo buffer codec — the typed-Aggregator twin
-    // ([[BoundedTopKByScore]]) keeps identical semantics and cross-checks
-    // it in KnnSpec
-    val perTest = slimDf.groupBy(col("test_id"))
-      .agg(SeriesFunctions.topkIds(col("score"), col("train_id"), fk).as("cand_ids"))
-    // Oversize train: broadcast the SLIM (train_id, test_id)
-    // candidate pairs instead — fk ids per test point, payload-free —
-    // so the train payload STREAMS through the hash join, never
-    // collected, never shuffled. An unhinted equi join here would let
-    // Catalyst build-broadcast the train side from its lying
-    // LogicalRDD estimate. The test-payload join is pinned to
-    // sort-merge for the same reason (exchanges the candidate rows
-    // and |test| payload rows; replicates nothing unbounded).
-    val slimPairs = perTest.select(
-      col("test_id"), explode(col("cand_ids")).as("train_id"))
-    val withDist = trainSel
-      .join(broadcast(slimPairs), "train_id")
-      .join(testSel.hint("merge"), "test_id")
-      .withColumn("dist", distExpr)
+    val withDist =
+      if (test.isStreaming || fitsBroadcast(trainSel))
+        KnnCandidates.frame(Partitioning.spread(testSel), trainSel, p.coarsenFactor, fk,
+          broadcastTrain = true).withColumn("dist", distExpr)
+      else if (fitsBroadcast(testSel)) {
+        // each train partition's local top-fk per test, merged by one
+        // exchange on test_id. Exact: a survivor in the global top-fk
+        // has only global top-fk survivors before it in its partition,
+        // so the bound it ran against is valid; any other survivor is
+        // dropped here whatever its distance
+        val w = Window.partitionBy(col("test_id")).orderBy(col("score"), col("train_id"))
+        KnnCandidates.frame(testSel, trainSel, p.coarsenFactor, fk, broadcastTrain = false)
+          .withColumn("dist", distExpr)
+          .withColumn("cand_rank", row_number().over(w))
+          .filter(col("cand_rank") <= fk)
+      } else {
+        // Neither side fits: slim (test_id, train_id, score) rows over a
+        // partitioned cartesian feed a bounded-heap AGGREGATE (the
+        // reference's two-phase heap, `Team11-Project.py:180`/`:195`),
+        // ONE row of candidate ids per test point. The slim candidate
+        // pairs are broadcast so the train payload streams through the
+        // hash join; the test-payload join is pinned to sort-merge
+        // (Catalyst would otherwise build-broadcast a side from its
+        // lying LogicalRDD estimate).
+        // barrier() on each sketch: a single-use alias gets inlined by
+        // CollapseProject, recomputing the O(n) sketch once per PAIR
+        def paaSide(df: DataFrame, seriesCol: String, idCol: String, out: String) =
+          df.select(col(idCol), SeriesFunctions.barrier(
+            SeriesFunctions.paa(col(seriesCol), p.coarsenFactor)).as(out))
+        val perTest = paaSide(Partitioning.spread(testSel), "test_series", "test_id", "sk")
+          .hint("shuffle_replicate_nl")
+          .crossJoin(paaSide(trainSel, "train_series", "train_id", "tsk"))
+          .groupBy(col("test_id"))
+          .agg(SeriesFunctions.topkIds(
+            SeriesFunctions.manhattan(col("sk"), col("tsk")), col("train_id"), fk).as("cand_ids"))
+        val slimPairs = perTest.select(
+          col("test_id"), explode(col("cand_ids")).as("train_id"))
+        trainSel
+          .join(broadcast(slimPairs), "train_id")
+          .join(testSel.hint("merge"), "test_id")
+          .withColumn("dist", distExpr)
+      }
     val filtered =
       if (p.excludeZeroDistance) withDist.filter(col("dist") =!= 0.0) else withDist
     filtered.select(col("test_id"), col("train_id"), col("label"), col("dist"))

@@ -1,7 +1,7 @@
 package graft
 
-import graft.functions.{SeriesFunctions, TopKScanIds}
-import graft.operators.BoundedTopKByScore
+import graft.functions.SeriesFunctions
+import graft.operators.{BoundedTopKByScore, KnnCandidates}
 import org.apache.spark.sql.functions._
 
 /** The native TypedImperativeAggregate bounded top-k vs an in-memory
@@ -69,57 +69,50 @@ class AggregatesSpec extends SparkTestBase {
     }
   }
 
-  test("graft_topk_scan == pair-join + graft_topk_ids (ties, nulls)") {
-    // the fused broadcast-path scan (r22) must select exactly what the
-    // join + heap-aggregate shape selected: same Manhattan kernel, same
-    // (score, id) total order. Fixture includes duplicate sketches
-    // (score ties -> id tie-break), a null train sketch (skipped), and
-    // a null TEST sketch (null out, dropped by explode downstream).
+  test("candidate node == pair-join + graft_topk_ids (ties, nulls)") {
+    // both orientations of the KNN candidate node must select exactly
+    // what the join + heap-aggregate shape selects: same Manhattan
+    // kernel, same (score, id) total order. Coarsening 1 makes the
+    // sketch the series itself. Fixture: duplicate series (score ties ->
+    // id tie-break), a null train series (skipped) and a null TEST
+    // series (no candidates, like its all-null-score group).
     val rnd2 = new scala.util.Random(7)
     val trainRows: Seq[(Long, Array[Double])] =
       (1L to 60L).map { i =>
         // duplicates every 10th id: exact score ties across distinct ids
         val seed = (i % 10).toInt
         i -> Array.tabulate(12)(t => math.sin(t * 0.7 + seed) + seed * 0.1)
-      }
+      } :+ (999L -> null.asInstanceOf[Array[Double]])
     val testRows: Seq[(Long, Array[Double])] =
       (101L to 115L).map { i =>
         i -> Array.tabulate(12)(t => math.sin(t * 0.7) + rnd2.nextGaussian() * 0.2)
+      } :+ (1L -> null.asInstanceOf[Array[Double]])
+    val train = trainRows.map { case (i, a) => (i, a, 0.0) }
+      .toDF("train_id", "train_series", "label").repartition(3)
+    val test = testRows.toDF("test_id", "test_series")
+    for (k <- Seq(1, 7, 100)) {
+      val viaAgg = test.crossJoin(train)
+        .select(col("test_id"), col("train_id"),
+          SeriesFunctions.manhattan(col("test_series"), col("train_series")).as("score"))
+        .groupBy(col("test_id"))
+        .agg(SeriesFunctions.topkIds(col("score"), col("train_id"), k).as("ids"))
+        .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq)
+        .filter(_._2.nonEmpty).toMap
+      // train broadcast: each test's global top-k, in (score, id) order
+      val trainSide = KnnCandidates.frame(test, train, 1, k, broadcastTrain = true)
+        .select("test_id", "train_id").collect()
+        .groupBy(_.getLong(0)).map { case (t, rs) => t -> rs.map(_.getLong(1)).toSeq }
+      assert(trainSide === viaAgg, s"train broadcast k=$k")
+      // test broadcast: per train partition local top-k with scores; the
+      // merge keeps the k smallest (score, id)
+      val local = KnnCandidates.frame(test, train, 1, k, broadcastTrain = false)
+        .select("test_id", "train_id", "score").collect()
+      assert(local.forall(_.getLong(1) != 999L))
+      val testSide = local.groupBy(_.getLong(0)).map { case (t, rs) =>
+        t -> rs.map(r => (r.getDouble(2), r.getLong(1))).sorted.take(k).map(_._2).toSeq
       }
-    val train = trainRows.toDF("train_id", "tsk")
-    val test = testRows.toDF("test_id", "sk")
-    val k = 7
-    val viaAgg = test.crossJoin(train)
-      .select(col("test_id"), col("train_id"),
-        SeriesFunctions.manhattan(col("sk"), col("tsk")).as("score"))
-      .groupBy(col("test_id"))
-      .agg(SeriesFunctions.topkIds(col("score"), col("train_id"), k).as("ids"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
-    val tarr = train.agg(
-      collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
-    val viaScan = test.crossJoin(broadcast(tarr))
-      .select(col("test_id"),
-        TopKScanIds.column(col("sk"), col("tarr"), k).as("ids"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq).toMap
-    assert(viaScan === viaAgg)
-    // null train sketch entries are skipped exactly like null scores in
-    // the aggregate; a null test sketch nulls the output array
-    val trainWithNull = (trainRows.map { case (i, a) => (i, a) } :+
-      (999L, null.asInstanceOf[Array[Double]])).toDF("train_id", "tsk")
-    val tarrN = trainWithNull.agg(
-      collect_list(struct(col("train_id"), col("tsk"))).as("tarr"))
-    val gotN = test.limit(1).crossJoin(broadcast(tarrN))
-      .select(TopKScanIds.column(col("sk"), col("tarr"), 100).as("ids"))
-      .collect().head.getSeq[Long](0)
-    assert(gotN.size === 60 && !gotN.contains(999L))
-    val nullTest = Seq((1L, null.asInstanceOf[Array[Double]])).toDF("test_id", "sk")
-    val gotNull = nullTest.crossJoin(broadcast(tarrN))
-      .select(TopKScanIds.column(col("sk"), col("tarr"), 5).as("ids"))
-      .collect().head
-    assert(gotNull.isNullAt(0))
-    // the per-thread decode cache is sound only over broadcast rows, which
-    // only Knn builds: the scan is not a SQL function
-    assert(!graft.functions.GraftFunctions.builders.exists(_._1 == "graft_topk_scan"))
+      assert(testSide === viaAgg, s"test broadcast k=$k")
+    }
   }
 
   test("heap selection ties -0.0 with 0.0 like a window sort (id breaks the tie)") {

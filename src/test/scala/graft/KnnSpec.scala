@@ -158,18 +158,21 @@ class KnnSpec extends SparkTestBase {
     val exact = Knn.classify(trainDf, testDf,
       KnnParams(k = 5, distance = "dtw", band = 4))
       .collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    // broadcast: the fused scan over the broadcast train sketches;
+    // broadcast: the candidate node over the broadcast train side;
     // cartesian: the slim pair pass over a partitioned cartesian
-    for (plan <- Seq("broadcast", "cartesian")) {
-      val pruned = planned(plan)(Knn.classify(trainDf, testDf,
-        KnnParams(k = 5, distance = "dtw", band = 4, lbPruning = true,
-          coarsenFactor = 4)))
-      assert(pruned === exact, s"plan=$plan")
+    for (shape <- Seq("fused", "cartesian")) {
+      val pruned = inShape(shape, trainDf) { tr =>
+        val df = Knn.classify(tr, testDf,
+          KnnParams(k = 5, distance = "dtw", band = 4, lbPruning = true, coarsenFactor = 4))
+        assertShape(df, shape)
+        df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      }
+      assert(pruned === exact, s"shape=$shape")
     }
     // the oversize shape a fitted classifier takes: the localCheckpointed
     // train side measures over the lowered cap, the test side fits under
-    // it, so the slim pair pass broadcasts the TEST side and the train
-    // side streams into the graft_topk_ids heap. k=5 keeps the 20
+    // it, so the candidate node broadcasts the TEST side and the train
+    // side streams through its per-test heaps. k=5 keeps the 20
     // candidates of the cases above; k=1 keeps all 40, because test 108's
     // DTW nearest neighbour ranks past 20 by PAA on this noisy fixture
     // (every plan misses it alike at a smaller budget)
@@ -184,13 +187,7 @@ class KnnSpec extends SparkTestBase {
         val pred = Knn.classify(ckTrain, testDf,
           KnnParams(k = k, distance = "dtw", band = 4, lbPruning = true,
             coarsenFactor = 4, candidateFactor = if (k == 1) 40 else 4))
-        val bnlj = pred.queryExecution.sparkPlan.collect {
-          case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
-        }
-        assert(bnlj.nonEmpty &&
-          bnlj.forall(_.right.output.exists(_.name == "test_id")),
-          s"k=$k: expected the pair pass to broadcast the test side:\n" +
-            pred.queryExecution.sparkPlan)
+        assertShape(pred, "oversize")
         assert(pred.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap === exactK,
           s"oversize k=$k")
       }
@@ -322,25 +319,43 @@ class KnnSpec extends SparkTestBase {
   private def uses(df: org.apache.spark.sql.DataFrame, fn: String): Boolean =
     df.queryExecution.sparkPlan.exists(_.expressions.exists(_.exists(_.prettyName == fn)))
 
-  /** Runs `body` on `train` in one cascade shape: "fused" (the broadcast
-    * scan a small train side takes) or "oversize" (slim pair scores plus
-    * the heap aggregate, forced as in the oversize test above).
+  /** Runs `body` on `train` in one cascade shape: "fused" (the candidate
+    * node over the broadcast train side, which a small train side
+    * takes), "oversize" (the node over the broadcast TEST side: the
+    * checkpointed train side measures one byte over the cap, the small
+    * test side fits under it) or "cartesian" (broadcasts disabled).
     */
   private def inShape[T](shape: String, train: org.apache.spark.sql.DataFrame)(
       body: org.apache.spark.sql.DataFrame => T): T = shape match {
     case "fused" => body(train)
+    case "cartesian" => withoutBroadcast(body(train))
     case "oversize" =>
-      // a lower cap than the oversize test above: the tie fixture's
-      // train side is under 1 KiB
       val ck = train.localCheckpoint()
-      spark.conf.set("spark.graft.knn.broadcastFloor", "256b")
-      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "256b")
+      val cap = s"${graft.core.Materialize.storageBytes(ck).get - 1}b"
+      spark.conf.set("spark.graft.knn.broadcastFloor", cap)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", cap)
       try body(ck)
       finally {
         spark.conf.unset("spark.graft.knn.broadcastFloor")
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
         graft.core.Materialize.releaseCheckpoint(ck)
       }
+  }
+
+  /** Asserts the cascade shape `df` plans (see [[inShape]]): the
+    * candidate node and the side it broadcasts, or the cartesian
+    * fallback's heap aggregate.
+    */
+  private def assertShape(df: org.apache.spark.sql.DataFrame, shape: String): Unit = {
+    val sides = candidateBuildSides(df)
+    val ok = shape match {
+      case "fused" => sides.nonEmpty && sides.forall(_ == "train")
+      case "oversize" => sides.nonEmpty && sides.forall(_ == "test")
+      case "cartesian" => sides.isEmpty && uses(df, "graft_topk_ids") &&
+        df.queryExecution.sparkPlan.exists(
+          _.isInstanceOf[org.apache.spark.sql.execution.joins.CartesianProductExec])
+    }
+    assert(ok, s"expected the $shape cascade:\n${df.queryExecution.executedPlan}")
   }
 
   /** Asserts that the bounded cascade, in `shape`, returns exactly the
@@ -355,8 +370,7 @@ class KnnSpec extends SparkTestBase {
     val q = p.copy(lbPruning = true, candidateFactor = 1024)
     inShape(shape, train) { tr =>
       val nb = Knn.neighbors(tr, test, q)
-      assert(uses(nb, if (shape == "fused") "graft_topk_scan" else "graft_topk_ids"),
-        s"$shape: unexpected plan\n${nb.queryExecution.sparkPlan}")
+      assertShape(nb, shape)
       assert(uses(nb, "graft_dtw_bounded"))
       assert(nbRows(nb) === exactNb, s"$shape neighbors $p")
       assert(nnRows(Knn.classify1NN(tr, test, q)) === exactNn, s"$shape classify1NN $p")
@@ -376,7 +390,7 @@ class KnnSpec extends SparkTestBase {
     (199L, testData(0)._2.updated(3, Double.NaN)))
     .toDF("test_id", "test_series"))
 
-  for (shape <- Seq("fused", "oversize")) {
+  for (shape <- Seq("fused", "oversize", "cartesian")) {
     test(s"bounded exact phase ($shape): k in {1, 5} equal the unpruned path bit for bit") {
       for (k <- Seq(1, 5); exclude <- Seq(true, false))
         assertBoundedExact(shape, boundTrain, boundTest,
@@ -424,7 +438,7 @@ class KnnSpec extends SparkTestBase {
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try {
-      for (shape <- Seq("fused", "oversize"); k <- Seq(1, 5))
+      for (shape <- Seq("fused", "oversize", "cartesian"); k <- Seq(1, 5))
         assertBoundedExact(shape, boundTrain, boundTest,
           KnnParams(k = k, distance = "dtw", band = 4, coarsenFactor = 4))
     } finally {
@@ -433,46 +447,169 @@ class KnnSpec extends SparkTestBase {
     }
   }
 
-  test("fused plan: the bounded dist is projected over Generate -> BroadcastHashJoin in one codegen stage") {
-    // the running bound tightens only while a test's candidates stream
-    // together in PAA-rank order; if a plan change scatters them, the
-    // pruning would vanish silently, so pin the shape that keeps them
-    import org.apache.spark.sql.execution.{GenerateExec, InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
-    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
-    val df = Knn.classify1NN(trainDf, testDf,
-      KnnParams(k = 1, distance = "dtw", band = 4, lbPruning = true, coarsenFactor = 4))
-    df.collect()
-    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
-      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
-      case q: QueryStageExec => q +: nodes(q.plan)
-      case o => o +: o.children.flatMap(nodes)
-    }
-    // the operators one whole-stage-codegen stage fuses
-    def stage(p: SparkPlan): Seq[SparkPlan] = p match {
-      case _: InputAdapter | _: WholeStageCodegenExec => Nil
-      case o => o +: o.children.flatMap(stage)
-    }
-    val plan = df.queryExecution.executedPlan
-    val fused = nodes(plan).collect { case w: WholeStageCodegenExec => stage(w.child) }
-      .filter(_.exists {
-        case pr: ProjectExec =>
-          pr.projectList.exists(_.exists(_.isInstanceOf[graft.functions.BoundedDtwDistance]))
-        case _ => false
-      })
-    assert(fused.size === 1, s"expected one stage projecting the bounded dist:\n$plan")
-    val ops = fused.head
-    val project = ops.collectFirst { case pr: ProjectExec
-      if pr.projectList.exists(_.exists(_.isInstanceOf[graft.functions.BoundedDtwDistance])) => pr }.get
-    val ok = project.child match {
-      case j: BroadcastHashJoinExec =>
-        val streamed = if (j.buildSide == org.apache.spark.sql.catalyst.optimizer.BuildRight) j.left else j.right
-        ops.contains(j) && stage(streamed).exists {
-        case g: GenerateExec => ops.contains(g)
-        case _ => false
+  for (shape <- Seq("fused", "oversize"))
+    test(s"$shape plan: the bounded dist is projected directly over the candidate node") {
+      // the running bound tightens only while a test's candidates stream
+      // together in rank order, and knnbench reads the exact phase's
+      // input as the row count of the counted node under the topmost
+      // graft_dtw user: pin the Project directly over the node
+      import org.apache.spark.sql.execution.{InputAdapter, ProjectExec, SparkPlan, WholeStageCodegenExec}
+      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+        case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+        case q: QueryStageExec => q +: nodes(q.plan)
+        case o => o +: o.children.flatMap(nodes)
       }
-      case _ => false
+      val p = KnnParams(k = 1, distance = "dtw", band = 4, lbPruning = true, coarsenFactor = 4)
+      val fk = p.candidateFactor * p.k
+      inShape(shape, trainDf.repartition(3)) { tr =>
+        val df = Knn.classify1NN(tr, testDf, p)
+        df.collect()
+        val all = nodes(df.queryExecution.executedPlan)
+        val top = all.find(_.expressions.exists(_.exists(_.prettyName == "graft_dtw")))
+        val node = top.flatMap(_.children.headOption).collect {
+          case InputAdapter(n: graft.operators.KnnCandidatesExec) => n
+        }
+        assert(top.exists(_.isInstanceOf[ProjectExec]) && node.nonEmpty &&
+          all.exists { case w: WholeStageCodegenExec => w.exists(_ eq top.get); case _ => false },
+          s"expected Project(graft_dtw_bounded) <- candidate node in one stage:\n${all.head}")
+        // train broadcast: fk per test; test broadcast: fk per test from
+        // each of the 3 train partitions (13 or 14 rows each)
+        val perTest = if (shape == "fused") fk else 3 * fk
+        assert(node.get.metrics("numOutputRows").value === testData.size * perTest)
+      }
     }
-    assert(ok, s"expected Project <- BroadcastHashJoin <- Generate in one stage:\n$plan")
+
+  // ---- the test-broadcast orientation: per-partition heaps, one merge
+
+  /** A train frame with exactly these rows in each partition. */
+  private def partitioned(parts: Seq[Seq[(Long, Array[Double], Double)]]) = {
+    val df = spark.createDataFrame(spark.sparkContext
+      .parallelize(parts, parts.size).flatMap(_.map { case (i, a, l) =>
+        org.apache.spark.sql.Row(i, a.toSeq, l) }), trainDf.schema)
+    assert(df.rdd.glom().collect().map(_.map(_.getLong(0)).toSeq).toSeq === parts.map(_.map(_._1)))
+    df
+  }
+
+  /** [[boundTest]] as a local table, which the node broadcasts itself,
+    * and repartitioned, which it broadcasts through an exchange.
+    */
+  private lazy val boundTestSides = Seq(boundTest.repartition(2), spark.createDataFrame(
+    java.util.Arrays.asList(boundTest.collect(): _*), boundTest.schema))
+
+  /** Neighbors and 1-NN rows of the pruned cascade in `shape`. */
+  private def cascade(shape: String, train: org.apache.spark.sql.DataFrame,
+      test: org.apache.spark.sql.DataFrame, q: KnnParams) =
+    inShape(shape, train) { tr =>
+      val nb = Knn.neighbors(tr, test, q)
+      assertShape(nb, shape)
+      (nbRows(nb), nnRows(Knn.classify1NN(tr, test, q)))
+    }
+
+  test("test broadcast: 5 train partitions, k in {1, 5}, nulls and NaNs equal the cartesian fallback and the exact path") {
+    val tr5 = boundTrain.repartition(5)
+    for (test <- boundTestSides; k <- Seq(1, 5); cf <- Seq(2, 1024)) {
+      val q = KnnParams(k = k, distance = "dtw", band = 4, coarsenFactor = 4,
+        lbPruning = true, candidateFactor = cf)
+      val cart = cascade("cartesian", tr5, test, q)
+      assert(cascade("oversize", tr5, test, q) === cart, s"k=$k cf=$cf")
+      if (cf == 1024) assert(cart ===
+        ((nbRows(Knn.neighbors(tr5, test, q.copy(lbPruning = false))),
+          nnRows(Knn.classify1NN(tr5, test, q.copy(lbPruning = false))))), s"k=$k exact")
+    }
+    val q = KnnParams(distance = "dtw", band = 4, lbPruning = true)
+    val testChildren = boundTestSides.map(t => inShape("oversize", tr5) { tr =>
+      val plan = Knn.neighbors(tr, t, q).queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      plan.collect { case n: graft.operators.KnnCandidatesExec => n.left.getClass.getSimpleName }
+    })
+    assert(testChildren === Seq(Seq("BroadcastExchangeExec"), Seq("LocalTableScanExec")))
+  }
+
+  test("test broadcast: score ties at rank fk split across partitions keep the smaller train_id") {
+    // five train series tie on score (and DTW) with the probe, one
+    // partition each, after one clear winner: at k = 1, fk = 2 the
+    // second candidate is the tied row with the smallest id (3), whose
+    // exact distance beats the winner's
+    val t = Array.tabulate(16)(i => math.sin(i * 0.4))
+    val tied = t.map(_ + 0.25)
+    val best = t.zipWithIndex.map { case (v, i) => if (i % 2 == 0) v + 1.0 else v - 1.0 }
+    val parts = Seq(Seq((20L, best, 1.0), (9L, tied, 2.0)), Seq((5L, tied, 3.0)),
+      Seq((3L, tied, 4.0)), Seq((7L, tied, 5.0)), Seq((4L, tied.map(_ + 1e-9), 6.0)))
+    val train = partitioned(parts)
+    val probe = Seq((1L, t)).toDF("test_id", "test_series")
+    val q = KnnParams(k = 1, distance = "dtw", band = 0, coarsenFactor = 2,
+      lbPruning = true, candidateFactor = 2)
+    val cart = cascade("cartesian", train, probe, q)
+    assert(cart._2.map(_._2) === Seq(4.0), "the tie at rank fk goes to train_id 3")
+    assert(cascade("oversize", train, probe, q) === cart)
+  }
+
+  test("test broadcast: a partition's best-DTW survivor outside the global top-fk cannot bound the others") {
+    // band 0, coarsening 2: DTW is the Manhattan sum and the sketch score
+    // the sum of 2-block mean gaps. Y and A (offsets that cancel in each
+    // block) score 0 and form the global top-2; X (a constant 0.5 offset)
+    // scores 2 but has the smallest DTW. Partition 1 keeps {Y, X}: run
+    // in (score, train_id) order Y sets the bound, and X, dropped by the
+    // merge whatever its distance, cannot abandon Y. The answer among
+    // the global top-2 is Y (DTW 8 < A's 16).
+    val t = Array.tabulate(8)(_.toDouble)
+    def alt(c: Double) = t.zipWithIndex.map { case (v, i) => if (i % 2 == 0) v + c else v - c }
+    val train = partitioned(Seq(Seq((3L, alt(2.0), 3.0)),
+      Seq((1L, t.map(_ + 0.5), 1.0), (2L, alt(1.0), 2.0))))
+    val probe = Seq((100L, t)).toDF("test_id", "test_series")
+    val q = KnnParams(k = 1, distance = "dtw", band = 0, coarsenFactor = 2,
+      lbPruning = true, candidateFactor = 2)
+    val cart = cascade("cartesian", train, probe, q)
+    assert(cart._2 === Seq((100L, 2.0, java.lang.Double.doubleToLongBits(8.0))))
+    assert(cascade("oversize", train, probe, q) === cart)
+  }
+
+  test("test broadcast: equal to the cartesian fallback without AQE and without codegen") {
+    val tr5 = boundTrain.repartition(5)
+    val q = KnnParams(k = 1, distance = "dtw", band = 4, coarsenFactor = 4,
+      lbPruning = true, candidateFactor = 2)
+    val cart = cascade("cartesian", tr5, boundTest, q)
+    for (confs <- Seq(Seq("spark.sql.adaptive.enabled" -> "false"),
+        Seq("spark.sql.codegen.wholeStage" -> "false",
+          "spark.sql.codegen.factoryMode" -> "NO_CODEGEN")); test <- boundTestSides) {
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try assert(cascade("oversize", tr5, test, q) === cart, confs.toString)
+      finally confs.foreach { case (k, _) => spark.conf.unset(k) }
+    }
+  }
+
+  test("duplicated train_id: the candidate node keeps each train row once; the cartesian fallback joins ids back (pinned)") {
+    // train ids are unique for every caller (the classifier assigns
+    // them); this pins what a duplicate does. The probe is train row 7
+    // plus 0.001, and a second row with id 7 sits 0.02 from that row
+    val dup = trainDf.unionByName(Seq((7L, trainData(6)._2.map(_ + 0.02), 9.0))
+      .toDF("train_id", "train_series", "label"))
+    val probe = Seq((101L, trainData(6)._2.map(_ + 0.001)), (102L, testData(1)._2))
+      .toDF("test_id", "test_series")
+    val q = KnnParams(k = 3, distance = "dtw", band = 4, coarsenFactor = 4,
+      lbPruning = true, candidateFactor = 2)
+    def run(shape: String) = inShape(shape, dup) { tr =>
+      val nb = Knn.neighbors(tr, probe, q)
+      assertShape(nb, shape)
+      (nb.select("test_id", "train_id", "rank", "label").collect()
+        .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq.sorted,
+        nnRows(Knn.classify1NN(tr, probe, q.copy(k = 1))))
+    }
+    val exact = Knn.neighbors(dup, probe, q.copy(lbPruning = false))
+      .select("test_id", "train_id", "rank", "label").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq.sorted
+    val fused = run("fused")
+    assert(fused._1 === exact)
+    assert(fused._1.filter(_._1 == 101L).take(2) === Seq((101L, 7L, 1, 1.0), (101L, 7L, 2, 9.0)))
+    assert(run("oversize") === fused)
+    // the fallback explodes candidate ids and joins them back by id, so
+    // each selected id 7 meets both rows
+    val cart = run("cartesian")
+    assert(cart._1.filter(_._1 == 101L) ===
+      Seq((101L, 7L, 1, 1.0), (101L, 7L, 2, 1.0), (101L, 7L, 3, 9.0)))
+    assert(cart._2 === fused._2)
   }
 }

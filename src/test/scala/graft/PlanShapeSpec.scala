@@ -55,16 +55,16 @@ class PlanShapeSpec extends SparkTestBase {
     } finally Materialize.releaseCheckpoint(ck)
   }
 
-  test("q26 cascade on broadcastable checkpointed inputs plans BroadcastNestedLoopJoin") {
+  test("q26 cascade on broadcastable checkpointed inputs broadcasts the train side") {
     val train = synth(400, 0, "train_id", "train_series").localCheckpoint()
     val test = synth(60, 1000000, "test_id", "test_series")
       .select(col("test_id"), col("test_series")).localCheckpoint()
     try {
       val pred = Knn.classify1NN(train, test, harParams)
       val plan = pred.queryExecution.sparkPlan.toString
-      assert(plan.contains("BroadcastNestedLoopJoin"),
-        s"expected the pair joins to broadcast the train side, plan:\n$plan")
-      assert(!plan.contains("CartesianProduct"),
+      assert(candidateBuildSides(pred) === Seq("train"),
+        s"expected the candidate node to broadcast the train side, plan:\n$plan")
+      assert(!plan.contains("CartesianProduct") && !plan.contains("BroadcastNestedLoopJoin"),
         "broadcastable train must not fall back to partitioned cartesian")
     } finally { Materialize.releaseCheckpoint(train); Materialize.releaseCheckpoint(test) }
   }
@@ -80,20 +80,63 @@ class PlanShapeSpec extends SparkTestBase {
       .select(col("test_id"), col("test_series")).localCheckpoint()
     try {
       val pred = Knn.classify1NN(train, test, harParams)
-      val bnlj = pred.queryExecution.sparkPlan.collect {
-        case j: org.apache.spark.sql.execution.joins.BroadcastNestedLoopJoinExec => j
-      }
-      assert(bnlj.nonEmpty, "expected pair joins to broadcast the small test side")
-      assert(bnlj.forall(_.right.output.exists(_.name.startsWith("test_id"))),
-        "the broadcast (build-right) side must be the TEST side — the " +
+      assert(candidateBuildSides(pred) === Seq("test"),
+        "the candidate node must broadcast the TEST side — the " +
           "oversize train side must stream, never replicate")
       // EVERY broadcast in the plan, hash joins included (the payload
       // join-back!), must be free of the oversize train payload
       assertNoPayloadBroadcast(pred, "train_series")
+      // a local test side (a request frame) is broadcast by the node
+      // itself: no broadcast exchange and its collect job, same answers
+      val local = spark.createDataFrame(java.util.Arrays.asList(test.collect(): _*), test.schema)
+      val localPred = Knn.classify1NN(train, local, harParams)
+      assert(candidateBuildSides(localPred) === Seq("test"))
+      val initial = localPred.queryExecution.executedPlan match {
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+        case p => p
+      }
+      assert(!initial.exists(_.isInstanceOf[
+        org.apache.spark.sql.execution.exchange.BroadcastExchangeExec]), initial.toString)
+      assert(localPred.collect().toSet === pred.collect().toSet)
     } finally {
       spark.conf.unset("spark.graft.knn.broadcastFloor")
       Materialize.releaseCheckpoint(train); Materialize.releaseCheckpoint(test)
     }
+  }
+
+  test("builder sessions and registered sessions plan the KNN candidate node; register adds its strategy once") {
+    import graft.operators.KnnStrategy
+    import org.apache.spark.sql.SparkSession
+    def strategies(s: SparkSession) =
+      s.asInstanceOf[org.apache.spark.sql.classic.SparkSession].sessionState.planner.strategies
+    def plansNode(s: SparkSession): Unit = {
+      def side(n: Int, offset: Int, id: String, series: String) =
+        s.range(n).select((col("id") + offset).as(id),
+          pmod(col("id"), lit(6)).cast("double").as("label"),
+          call_function("graft_har_series", col("id") + offset, lit(64)).as(series))
+          .localCheckpoint()
+      val (train, test) = (side(40, 0, "train_id", "train_series"),
+        side(8, 1000, "test_id", "test_series"))
+      try {
+        val pred = Knn.classify1NN(train, test.drop("label"), harParams)
+        assert(candidateBuildSides(pred) === Seq("train"))
+        assert(pred.count() === 8)
+      } finally { Materialize.releaseCheckpoint(train); Materialize.releaseCheckpoint(test) }
+    }
+    // a builder session gets the strategy from GraftExtensions, and so
+    // do its new sessions
+    SparkSession.clearActiveSession(); SparkSession.clearDefaultSession()
+    val built = try GraftSession.builder().getOrCreate().newSession()
+    finally { SparkSession.setDefaultSession(spark); SparkSession.setActiveSession(spark) }
+    assert(strategies(built).contains(KnnStrategy) && built.experimental.extraStrategies.isEmpty)
+    plansNode(built)
+    // a plain session gets it from register, once however often it runs
+    val plain = spark.newSession()
+    assert(plain.experimental.extraStrategies.isEmpty)
+    graft.functions.GraftFunctions.register(plain)
+    graft.functions.GraftFunctions.register(plain)
+    assert(plain.experimental.extraStrategies.count(_ == KnnStrategy) === 1)
+    plansNode(plain)
   }
 
   test("as-of join plans as ONE hash exchange + window — no join operator") {

@@ -57,4 +57,23 @@ abstract class SparkTestBase extends AnyFunSuite {
     }
     assert(ok, s"expected the $plan pair join:\n$sp")
   }
+
+  /** The side each KNN candidate node of `df` broadcasts, "train" or
+    * "test", read from the plan with its exchanges in place.
+    */
+  def candidateBuildSides(df: DataFrame): Seq[String] = {
+    import org.apache.spark.sql.execution.LocalTableScanExec
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    val plan = df.queryExecution.executedPlan match {
+      case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+      case p => p
+    }
+    plan.collect { case n: graft.operators.KnnCandidatesExec =>
+      (n.left, n.right) match {
+        case (_: BroadcastExchangeExec | _: LocalTableScanExec, _) if n.score.nonEmpty => "test"
+        case (_, _: BroadcastExchangeExec) if n.score.isEmpty => "train"
+        case _ => s"unexpected children of $n"
+      }
+    }
+  }
 }

@@ -16,6 +16,22 @@ class StreamingMultimodalSpec extends SparkTestBase {
     assert(streamed === batch)
   }
 
+  test("streaming pruned DTW 1-NN plans the candidate node and matches the batch path") {
+    // a streaming test side always streams through the candidate node
+    // over the broadcast train side, planned in the query's cloned session
+    val p = KnnParams(distance = "dtw", band = 8, lbPruning = true, coarsenFactor = 4)
+    val streamed = StreamingClassify.runBoundedSmoke(spark, sf001, p)
+      .collect().map(r => r.getLong(0) -> (r.getInt(1), r.getDouble(2))).toMap
+    val e = spark.read.parquet(s"$sf001/embeddings.parquet")
+    def side(parity: Int, id: String, series: String) = e.filter(col("vec_id") % 2 === parity)
+      .select(col("vec_id").as(id), col("embedding").cast("array<double>").as(series), col("label"))
+    val batchDf = graft.operators.Knn.classify1NN(
+      side(0, "train_id", "train_series"), side(1, "test_id", "test_series").drop("label"), p)
+    assert(candidateBuildSides(batchDf) === Seq("train"))
+    val batch = batchDf.collect().map(r => r.getLong(0) -> (r.getInt(1), r.getDouble(2))).toMap
+    assert(streamed.nonEmpty && streamed === batch)
+  }
+
   test("windowed event stats: watermarked event-time aggregation plan builds") {
     // events ts is nanos-as-long in our sessions; synthesize timestamps
     import spark.implicits._
