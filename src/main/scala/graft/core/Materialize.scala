@@ -1,6 +1,8 @@
 package graft.core
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute}
+import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan, Project, Union}
 import org.apache.spark.sql.execution.LogicalRDD
 import org.apache.spark.storage.StorageLevel
 
@@ -170,18 +172,39 @@ object Materialize {
     * the measured size, or they will broadcast an arbitrarily large
     * train side at scale.
     */
-  def storageBytes(df: DataFrame): Option[BigInt] = {
-    val persisted = df.queryExecution.optimizedPlan.collectLeaves().collect {
+  def storageBytes(df: DataFrame): Option[BigInt] = storage(df).map(_._1)
+
+  /** [[storageBytes]], with whether the measurement is the frame's
+    * size: the plan only filters, unions and selects columns of
+    * persisted RDDs, each with all of its partitions in the block
+    * manager. A partial persist (partitions evicted or never computed)
+    * under-measures, and so does any operator that can emit more than
+    * it reads (a join, an explode, an expression that builds a column).
+    * One walk of the storage info answers both.
+    */
+  def storage(df: DataFrame): Option[(BigInt, Boolean)] = {
+    val plan = df.queryExecution.optimizedPlan
+    val persisted = plan.collectLeaves().collect {
       case lr: LogicalRDD if lr.rdd.getStorageLevel != StorageLevel.NONE => lr.rdd.id
     }
     if (persisted.isEmpty) None
     else {
       val infos = df.sparkSession.sparkContext.getRDDStorageInfo
-      Some(persisted.map { id =>
-        infos.find(_.id == id)
-          .map(i => BigInt(i.memSize) + BigInt(i.diskSize))
-          .getOrElse(BigInt(0))
-      }.sum)
+      val found = persisted.map(id => infos.find(_.id == id))
+      Some((found.map(_.fold(BigInt(0))(i => BigInt(i.memSize) + BigInt(i.diskSize))).sum,
+        narrows(plan) && found.forall(_.exists(i => i.numCachedPartitions == i.numPartitions))))
     }
+  }
+
+  private def narrows(plan: LogicalPlan): Boolean = plan match {
+    case Project(list, child) =>
+      list.forall {
+        case _: Attribute | Alias(_: Attribute, _) => true
+        case _ => false
+      } && narrows(child)
+    case Filter(_, child) => narrows(child)
+    case u: Union => u.children.forall(narrows)
+    case lr: LogicalRDD => lr.rdd.getStorageLevel != StorageLevel.NONE
+    case _ => false
   }
 }

@@ -125,7 +125,11 @@ private[ml] trait KnnClassifierParams extends Params {
   * `transform` runs [[Knn.classify]] against it, so every scale
   * property of the underlying operator (measured-size broadcast
   * decision, prune cascade, partitioned-cartesian degrade) carries
-  * over unchanged.
+  * over unchanged. A request built from a few local rows (a
+  * [[Knn.localRequest]]) runs without a shuffle: the prune
+  * cascade reads the fitted train side in one task instead of
+  * broadcasting it per request, k = 1 votes with one aggregate, and
+  * the predictions join back by broadcast.
   *
   * Why fit materializes: train rows need a unique id for the
   * deterministic vote tie-break, assigned via
@@ -203,7 +207,9 @@ object KnnClassifier extends DefaultParamsReadable[KnnClassifier] {
   * (a Param — it persists with a saved model) asserts the contract per
   * transform. The input is referenced twice (classification +
   * join-back) and recomputes per reference — `cache()` it when its
-  * upstream is expensive.
+  * upstream is expensive. The join-back is a left join on the id: a
+  * broadcast of the predictions when the input is a request-sized local
+  * table ([[Knn.localRequest]]), a sort-merge join otherwise.
   * Without `idCol`, transform assigns an internal row id, which
   * materializes the input once per call when its lineage is not
   * provably re-evaluation-stable; in a long-lived session, free that
@@ -260,8 +266,14 @@ class KnnClassifierModel private[ml] (
     // provides. (Provably re-evaluation-stable inputs — file-scan-rooted,
     // Exchange-free — skip the persist inside withRowId itself; both
     // references then recompute identically by construction.)
+    // A local request stays local: the optimizer folds its ids into the
+    // local table, the same ids in both references.
+    val local = Knn.localRequest(df)
     val (frame, idName) =
       if (userId) (df, $(idCol))
+      else if (local)
+        (df.select(col("*"), monotonically_increasing_id().as(KnnClassifierModel.RowId)),
+          KnnClassifierModel.RowId)
       else (graft.ingest.SeriesIngest.withRowId(df, KnnClassifierModel.RowId),
         KnnClassifierModel.RowId)
     if (userId && $(validateIdCol)) validateIds(frame)
@@ -270,19 +282,24 @@ class KnnClassifierModel private[ml] (
     val preds = Knn.classify(train, test, knnParams)
       .select(col("test_id").as(KnnClassifierModel.PredId),
         col("predicted_label").as($(predictionCol)))
-    // merge hint: both sides are O(|input|) frames whose stats estimates
-    // are untrustworthy (post-aggregate, LogicalRDD-rooted) — an
-    // unhinted join lets Catalyst build-broadcast an arbitrarily large
-    // side (the r12 build-side audit class). Sort-merge exchanges each
-    // side once and replicates nothing. Left join: a row that produced
-    // no prediction (e.g. all-null series, or a null user id — the
-    // equality is null-rejecting) keeps its place with a null
-    // prediction. An equality condition rather than a USING join keeps
-    // the input's column order without selecting its columns by name,
-    // which would fail on inputs with duplicate column names.
-    val out = frame.hint("merge")
-      .join(preds, col(idName) === col(KnnClassifierModel.PredId), "left")
-      .drop(KnnClassifierModel.PredId)
+    // A local request (Knn.localRequest) has a few predictions:
+    // broadcast them, and the join-back needs no exchange and one task.
+    // Any other input gets a merge hint: both sides are O(|input|)
+    // frames whose stats estimates are untrustworthy (post-aggregate,
+    // LogicalRDD-rooted) — an unhinted join lets Catalyst
+    // build-broadcast an arbitrarily large side (the r12 build-side
+    // audit class). Sort-merge exchanges each side once and replicates
+    // nothing. Left join: a row that produced no prediction (e.g.
+    // all-null series, or a null user id — the equality is
+    // null-rejecting) keeps its place with a null prediction. An
+    // equality condition rather than a USING join keeps the input's
+    // column order without selecting its columns by name, which would
+    // fail on inputs with duplicate column names.
+    val cond = col(idName) === col(KnnClassifierModel.PredId)
+    val out =
+      (if (local) frame.coalesce(1).join(broadcast(preds), cond, "left")
+      else frame.hint("merge").join(preds, cond, "left"))
+        .drop(KnnClassifierModel.PredId)
     if (userId) out else out.drop(idName)
   }
 

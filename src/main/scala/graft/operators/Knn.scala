@@ -20,8 +20,10 @@ import org.apache.spark.sql.{Column, DataFrame}
   *    `crossJoin(broadcast(train))` + `min_by` — same semantics, no driver
   *    materialization, map-side combine for free.
   *
-  * Scale: the plan is chosen from measured sizes ([[fitsBroadcast]]),
-  * never by the caller. The broadcast plan shuffles ONLY the
+  * Scale: the plan is chosen from measured sizes ([[fitsBroadcast]]) and
+  * from whether the test side is a [[localRequest]], never by the caller
+  * (the prune cascade's orientation rule is on [[prunedCandidates]]).
+  * The broadcast plan shuffles ONLY the
   * per-(test,label) partial vote counts (k rows per test point after the
   * group-limit), never the raw pair matrix. The partitioned cartesian is
   * the fallback when neither side fits the broadcast budget; for 100
@@ -103,25 +105,50 @@ object Knn {
     // internalCreateDataFrame — unlike localCheckpoint, which carries
     // the source plan's stats through) reports the defaultSizeInBytes
     // SENTINEL (Long.MaxValue unless overridden): that estimate carries
-    // no information, and max()-ing it in would veto every broadcast of
-    // a fully-measured persisted frame. Ignore the sentinel; any other
-    // estimate still raises the measured floor (a partially-evicted
-    // persist under-measures, and the estimate backstops it).
+    // no information. Ignore it.
     val sentinel = BigInt(
       try df.sparkSession.conf
         .get("spark.sql.defaultSizeInBytes", Long.MaxValue.toString).toLong
       catch { case scala.util.control.NonFatal(_) => Long.MaxValue })
     val informative = planBytes != sentinel
-    // measured size when persisted; the raw estimate only when its
-    // sources make it trustworthy — an untrusted estimate (generated
-    // payloads over Range, non-persisted RDD scans) means NOT
+    // A complete measurement (every partition cached, and nothing above
+    // the persists that can grow the frame: Materialize.storage) is the
+    // size: a checkpoint's estimate can inherit a join's size product (a
+    // classifier fitted on SeriesIngest.loadLabeledSeries output carries
+    // 6.8e37 bytes for 33 MB of rows). Any other measurement can
+    // under-measure, so an informative estimate backstops it. Unpersisted: the raw estimate
+    // only when its sources make it trustworthy — an untrusted estimate
+    // (generated payloads over Range, non-persisted RDD scans) means NOT
     // broadcastable, never "probably fine"
-    val bytes = graft.core.Materialize.storageBytes(df)
-      .map(m => if (informative) m.max(planBytes) else m)
-      .orElse(if (informative && graft.core.Materialize.estimateTrusted(df))
-        Some(planBytes) else None)
+    val bytes = graft.core.Materialize.storage(df) match {
+      case Some((m, complete)) => Some(if (complete || !informative) m else m.max(planBytes))
+      case None =>
+        if (informative && graft.core.Materialize.estimateTrusted(df)) Some(planBytes) else None
+    }
     bytes.exists(_ <= BigInt(cap))
   }
+
+  /** Whether `df` is a request-sized local table: a `LocalRelation`
+    * after optimization with at most [[LocalRequestRows]] rows, such as a
+    * classifier request frame. Its rows reach a task without a job.
+    */
+  private[graft] def localRequest(df: DataFrame): Boolean =
+    !df.isStreaming && (df.queryExecution.optimizedPlan match {
+      case l: org.apache.spark.sql.catalyst.plans.logical.LocalRelation =>
+        l.data.length <= LocalRequestRows
+      case _ => false
+    })
+
+  /** Local test rows that one candidate task ranks faster than the
+    * spread train-broadcast plan does. That plan pays a fixed cost (the
+    * train broadcast and the test side's shuffle), and one task pays the
+    * rank and exact work of each test alone. At the HAR shape (7352 x
+    * 561 train, k = 1, DTW band 56, 4 vCPUs) one task is faster up to
+    * 256 tests (0.46 against 0.61 s) and slower at 512 (0.97 against
+    * 0.71 s). The fixed cost is about 160 tests' work in one task, so
+    * one task wins below that however many cores the spread plan has.
+    */
+  private val LocalRequestRows = 128
 
   /** Size-driven all-pairs cross join of a (possibly projected) train
     * side against the spread test side, shared by every unpruned
@@ -232,11 +259,21 @@ object Knn {
     * neighbours, pinned per workload in KnnSpec and by the q25/q26/q33
     * oracles.
     *
-    * The broadcast side follows the same measured-size decisions as the
-    * unpruned path ([[fitsBroadcast]], [[crossPairs]]): the train side
-    * while it fits (a streaming test side always broadcasts it), else
-    * the test side, else neither — a partitioned cartesian of slim
-    * sketch scores into the graft_topk_ids heap aggregate.
+    * The orientation follows the same measured-size decisions as the
+    * unpruned path ([[fitsBroadcast]], [[crossPairs]]), in this order:
+    *  - the train side fits and the test side is a [[localRequest]] (a
+    *    classifier request): no exchange at all; the node reads every
+    *    train partition in ONE task and keeps each test's global top-fk.
+    *    This comes first: a small request would otherwise ship the whole
+    *    train side in a broadcast per request. A larger local test side
+    *    is spread, as below, so that every core ranks;
+    *  - the train side fits (a streaming test side always takes this
+    *    branch): the train side is broadcast and the spread test side
+    *    streams;
+    *  - the test side fits: it is broadcast, each train partition keeps
+    *    its local top-fk and one exchange on test_id merges them;
+    *  - neither: a partitioned cartesian of slim sketch scores into the
+    *    graft_topk_ids heap aggregate.
     */
   private def prunedCandidates(train: DataFrame, test: DataFrame, p: KnnParams): DataFrame = {
     val trainSel = train.select(col("train_id"), col("train_series"), col("label"))
@@ -252,10 +289,14 @@ object Knn {
       else SeriesFunctions.barrier(
         distanceColumn(p)(col("test_series"), col("train_series")))
 
+    val trainFits = test.isStreaming || fitsBroadcast(trainSel)
     val withDist =
-      if (test.isStreaming || fitsBroadcast(trainSel))
+      if (trainFits && localRequest(testSel))
+        KnnCandidates.frame(testSel, trainSel, p.coarsenFactor, fk, KnnCandidates.OneTask)
+          .withColumn("dist", distExpr)
+      else if (trainFits)
         KnnCandidates.frame(Partitioning.spread(testSel), trainSel, p.coarsenFactor, fk,
-          broadcastTrain = true).withColumn("dist", distExpr)
+          KnnCandidates.TrainBroadcast).withColumn("dist", distExpr)
       else if (fitsBroadcast(testSel)) {
         // each train partition's local top-fk per test, merged by one
         // exchange on test_id. Exact: a survivor in the global top-fk
@@ -263,7 +304,7 @@ object Knn {
         // so the bound it ran against is valid; any other survivor is
         // dropped here whatever its distance
         val w = Window.partitionBy(col("test_id")).orderBy(col("score"), col("train_id"))
-        KnnCandidates.frame(testSel, trainSel, p.coarsenFactor, fk, broadcastTrain = false)
+        KnnCandidates.frame(testSel, trainSel, p.coarsenFactor, fk, KnnCandidates.TestBroadcast)
           .withColumn("dist", distExpr)
           .withColumn("cand_rank", row_number().over(w))
           .filter(col("cand_rank") <= fk)
@@ -299,18 +340,25 @@ object Knn {
     filtered.select(col("test_id"), col("train_id"), col("label"), col("dist"))
   }
 
-  /** Majority-vote classification: (test_id, predicted_label). */
-  def classify(train: DataFrame, test: DataFrame, p: KnnParams): DataFrame = {
-    val votes = neighbors(train, test, p)
-      .groupBy(col("test_id"), col("label"))
-      .agg(count(lit(1)).as("votes"), min(col("rank")).as("best_rank"))
-    val w = Window.partitionBy(col("test_id"))
-      .orderBy(col("votes").desc, col("best_rank"), col("label"))
-    votes
-      .withColumn("vr", row_number().over(w))
-      .filter(col("vr") === 1)
-      .select(col("test_id"), col("label").as("predicted_label"))
-  }
+  /** Majority-vote classification: (test_id, predicted_label). At k = 1
+    * the vote is the nearest neighbour's label, so it plans
+    * [[classify1NN]]'s one aggregate instead of a rank window, a vote
+    * aggregate and a vote window; the winner is the same, the smallest
+    * (dist, train_id).
+    */
+  def classify(train: DataFrame, test: DataFrame, p: KnnParams): DataFrame =
+    if (p.k == 1) classify1NN(train, test, p).select(col("test_id"), col("predicted_label"))
+    else {
+      val votes = neighbors(train, test, p)
+        .groupBy(col("test_id"), col("label"))
+        .agg(count(lit(1)).as("votes"), min(col("rank")).as("best_rank"))
+      val w = Window.partitionBy(col("test_id"))
+        .orderBy(col("votes").desc, col("best_rank"), col("label"))
+      votes
+        .withColumn("vr", row_number().over(w))
+        .filter(col("vr") === 1)
+        .select(col("test_id"), col("label").as("predicted_label"))
+    }
 
   /** Hyper-parameter sweep over k in ONE pass over the pair matrix — the
     * reference ran the sweep as independent notebook cells, one full

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference, AttributeSet, GenericInternalRow, JoinedRow, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.{BinaryNode, LogicalPlan}
-import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, Partitioning, UnknownPartitioning, UnspecifiedDistribution}
+import org.apache.spark.sql.catalyst.plans.physical.{BroadcastDistribution, Distribution, IdentityBroadcastMode, Partitioning, SinglePartition, UnknownPartitioning, UnspecifiedDistribution}
 import org.apache.spark.sql.execution.{BinaryExecNode, LocalTableScanExec, SparkPlan, SparkStrategy}
 import org.apache.spark.sql.execution.metric.SQLMetrics
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
@@ -17,17 +17,24 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
   * [[TopKIdsBuffer]]. It emits `(test_id, test_series, train_id,
   * train_series, label[, score])` rows, a test's candidates together in
   * ascending (score, train_id) order. `left` is the test side, `right`
-  * the train side; one of them is broadcast once, as is:
+  * the train side. [[KnnCandidates.Mode]] orients it; at most one side
+  * is broadcast, once, as is:
   *
-  *  - **train broadcast** (`score` is None): the test side streams and
-  *    every test row gets its global top-fk;
-  *  - **test broadcast** (`score` is Some): the train side streams, never
-  *    shuffled or replicated; each train partition emits every test's
-  *    LOCAL top-fk with its score, so the caller merges the partitions
-  *    with one exchange on test_id that keeps `row_number() over (score,
-  *    train_id) <= fk`. The exact phase that runs before that merge does
-  *    about one full DTW per train partition per test, so its work grows
-  *    with the train side's partition count.
+  *  - **train broadcast**: the test side streams and every test row gets
+  *    its global top-fk;
+  *  - **one task** (a small local test side, such as a classifier
+  *    request): nothing is broadcast or shuffled; the test rows are
+  *    collected and ship in the closure of ONE task that reads every
+  *    train partition (a narrow coalesce) and emits each test's global
+  *    top-fk, as a single partition;
+  *  - **test broadcast** (the only mode with a `score` column): the
+  *    train side streams, never shuffled or replicated; each train
+  *    partition emits every test's LOCAL top-fk with its score, so the
+  *    caller merges the partitions with one exchange on test_id that
+  *    keeps `row_number() over (score, train_id) <= fk`. The exact phase
+  *    that runs before that merge does about one full DTW per train
+  *    partition per test, so its work grows with the train side's
+  *    partition count.
   *
   * A null series or train id never becomes a candidate. Planned by
   * [[KnnStrategy]].
@@ -35,7 +42,7 @@ import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
 case class KnnCandidates(
     testId: Attribute, testSeries: Attribute,
     trainId: Attribute, trainSeries: Attribute, label: Attribute,
-    score: Option[Attribute], coarsen: Int, fk: Int,
+    score: Option[Attribute], mode: KnnCandidates.Mode, coarsen: Int, fk: Int,
     left: LogicalPlan, right: LogicalPlan) extends BinaryNode {
   override def output: Seq[Attribute] =
     Seq(testId, testSeries, trainId, trainSeries, label) ++ score
@@ -45,19 +52,26 @@ case class KnnCandidates(
 }
 
 object KnnCandidates {
+  /** Which side the node broadcasts, if any; see [[KnnCandidates]]. */
+  sealed trait Mode
+  case object TrainBroadcast extends Mode
+  case object OneTask extends Mode
+  case object TestBroadcast extends Mode
+
   /** Candidates of `test` (test_id, test_series) among `train` (train_id,
-    * train_series, label), broadcasting the train side or, when
-    * `broadcastTrain` is false, the test side.
+    * train_series, label) in `mode`: each test's global top-fk, or, for
+    * [[TestBroadcast]], each train partition's local top-fk with its
+    * score.
     */
-  def frame(test: DataFrame, train: DataFrame, coarsen: Int, fk: Int,
-      broadcastTrain: Boolean): DataFrame = {
+  def frame(test: DataFrame, train: DataFrame, coarsen: Int, fk: Int, mode: Mode): DataFrame = {
     val spark = test.sparkSession
     KnnStrategy.install(spark)
     val (t, r) = (test.queryExecution.analyzed, train.queryExecution.analyzed)
     val score =
-      if (broadcastTrain) None else Some(AttributeReference("score", DoubleType, nullable = false)())
+      if (mode == TestBroadcast) Some(AttributeReference("score", DoubleType, nullable = false)())
+      else None
     org.apache.spark.sql.graft.DataFrameBridge.ofPlan(spark, KnnCandidates(
-      t.output(0), t.output(1), r.output(0), r.output(1), r.output(2), score, coarsen, fk, t, r))
+      t.output(0), t.output(1), r.output(0), r.output(1), r.output(2), score, mode, coarsen, fk, t, r))
   }
 
   private[operators] def sketch(row: InternalRow, ord: Int, coarsen: Int): Array[Double] =
@@ -67,16 +81,15 @@ object KnnCandidates {
 /** Physical [[KnnCandidates]]. `EnsureRequirements` puts the one
   * `BroadcastExchange` (IdentityBroadcastMode: the rows as they are)
   * under the broadcast side; a test side that is a local table is
-  * broadcast by the node itself, with no job. Each task decodes the ids
+  * collected by the node itself, with no job. Each task decodes the ids
   * and sketches it needs into its own arrays.
   */
 case class KnnCandidatesExec(
     testId: Attribute, testSeries: Attribute,
     trainId: Attribute, trainSeries: Attribute, label: Attribute,
-    score: Option[Attribute], coarsen: Int, fk: Int,
+    score: Option[Attribute], mode: KnnCandidates.Mode, coarsen: Int, fk: Int,
     left: SparkPlan, right: SparkPlan) extends BinaryExecNode {
-  private def broadcastTrain = score.isEmpty
-
+  import KnnCandidates.{OneTask, TestBroadcast, TrainBroadcast}
   override def output: Seq[Attribute] =
     Seq(testId, testSeries, trainId, trainSeries, label) ++ score
   override lazy val metrics = Map(
@@ -86,16 +99,20 @@ case class KnnCandidatesExec(
 
   // an in-memory test side (a request frame) is broadcast from the
   // driver as it is: a broadcast exchange would run a collect job
-  private def localTests = !broadcastTrain && left.isInstanceOf[LocalTableScanExec]
+  private def localTests = mode == TestBroadcast && left.isInstanceOf[LocalTableScanExec]
 
-  override def requiredChildDistribution: Seq[Distribution] =
-    if (broadcastTrain) Seq(UnspecifiedDistribution, BroadcastDistribution(IdentityBroadcastMode))
-    else if (localTests) Seq(UnspecifiedDistribution, UnspecifiedDistribution)
-    else Seq(BroadcastDistribution(IdentityBroadcastMode), UnspecifiedDistribution)
+  override def requiredChildDistribution: Seq[Distribution] = mode match {
+    case TrainBroadcast => Seq(UnspecifiedDistribution, BroadcastDistribution(IdentityBroadcastMode))
+    case TestBroadcast if !localTests =>
+      Seq(BroadcastDistribution(IdentityBroadcastMode), UnspecifiedDistribution)
+    case _ => Seq(UnspecifiedDistribution, UnspecifiedDistribution)
+  }
   // test-broadcast rows of one test come from every train partition
-  override def outputPartitioning: Partitioning =
-    if (broadcastTrain) left.outputPartitioning
-    else UnknownPartitioning(right.outputPartitioning.numPartitions)
+  override def outputPartitioning: Partitioning = mode match {
+    case TrainBroadcast => left.outputPartitioning
+    case OneTask => SinglePartition
+    case TestBroadcast => UnknownPartitioning(right.outputPartitioning.numPartitions)
+  }
 
   protected override def doExecute(): RDD[InternalRow] = {
     val numOut = longMetric("numOutputRows")
@@ -109,7 +126,7 @@ case class KnnCandidatesExec(
     val (f, k, out) = (coarsen, fk, output)
     val in = left.output ++ right.output ++ score
     import KnnCandidates.sketch
-    if (broadcastTrain) {
+    if (mode == TrainBroadcast) {
       val bc = right.executeBroadcast[Array[InternalRow]]()
       left.execute().mapPartitions { tests =>
         val train = bc.value
@@ -133,11 +150,16 @@ case class KnnCandidatesExec(
         }
       }
     } else {
-      val bc =
-        if (localTests) sparkContext.broadcast(left.executeCollect())
-        else left.executeBroadcast[Array[InternalRow]]()
-      right.execute().mapPartitions { train =>
-        val tests = bc.value
+      // one task: the test rows travel in its closure; test broadcast:
+      // one copy per executor
+      val testRows: () => Array[InternalRow] = mode match {
+        case OneTask => val rows = left.executeCollect(); () => rows
+        case _ if localTests => val b = sparkContext.broadcast(left.executeCollect()); () => b.value
+        case _ => val b = left.executeBroadcast[Array[InternalRow]](); () => b.value
+      }
+      val trainRows = if (mode == OneTask) right.execute().coalesce(1) else right.execute()
+      trainRows.mapPartitions { train =>
+        val tests = testRows()
         val qs = tests.map(sketch(_, tSer, f))
         val heaps = Array.fill(tests.length)(new TopKIdsBuffer(k))
         // a row is copied once, when some heap first keeps it
@@ -182,7 +204,7 @@ object KnnStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case n: KnnCandidates =>
       KnnCandidatesExec(n.testId, n.testSeries, n.trainId, n.trainSeries, n.label,
-        n.score, n.coarsen, n.fk, planLater(n.left), planLater(n.right)) :: Nil
+        n.score, n.mode, n.coarsen, n.fk, planLater(n.left), planLater(n.right)) :: Nil
     case _ => Nil
   }
 

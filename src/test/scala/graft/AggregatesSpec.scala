@@ -98,14 +98,19 @@ class AggregatesSpec extends SparkTestBase {
         .agg(SeriesFunctions.topkIds(col("score"), col("train_id"), k).as("ids"))
         .collect().map(r => r.getLong(0) -> r.getSeq[Long](1).toSeq)
         .filter(_._2.nonEmpty).toMap
-      // train broadcast: each test's global top-k, in (score, id) order
-      val trainSide = KnnCandidates.frame(test, train, 1, k, broadcastTrain = true)
-        .select("test_id", "train_id").collect()
-        .groupBy(_.getLong(0)).map { case (t, rs) => t -> rs.map(_.getLong(1)).toSeq }
-      assert(trainSide === viaAgg, s"train broadcast k=$k")
+      // train broadcast and one task (which collects a test side that
+      // is not a local table too): each test's global top-k, in (score,
+      // id) order
+      for ((tests, mode) <- Seq(test.repartition(2) -> KnnCandidates.TrainBroadcast,
+          test -> KnnCandidates.OneTask, test.repartition(2) -> KnnCandidates.OneTask)) {
+        val global = KnnCandidates.frame(tests, train, 1, k, mode)
+          .select("test_id", "train_id").collect()
+          .groupBy(_.getLong(0)).map { case (t, rs) => t -> rs.map(_.getLong(1)).toSeq }
+        assert(global === viaAgg, s"$mode k=$k")
+      }
       // test broadcast: per train partition local top-k with scores; the
       // merge keeps the k smallest (score, id)
-      val local = KnnCandidates.frame(test, train, 1, k, broadcastTrain = false)
+      val local = KnnCandidates.frame(test, train, 1, k, KnnCandidates.TestBroadcast)
         .select("test_id", "train_id", "score").collect()
       assert(local.forall(_.getLong(1) != 999L))
       val testSide = local.groupBy(_.getLong(0)).map { case (t, rs) =>

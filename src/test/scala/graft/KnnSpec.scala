@@ -161,8 +161,8 @@ class KnnSpec extends SparkTestBase {
     // broadcast: the candidate node over the broadcast train side;
     // cartesian: the slim pair pass over a partitioned cartesian
     for (shape <- Seq("fused", "cartesian")) {
-      val pruned = inShape(shape, trainDf) { tr =>
-        val df = Knn.classify(tr, testDf,
+      val pruned = inShape(shape, trainDf, testDf) { (tr, te) =>
+        val df = Knn.classify(tr, te,
           KnnParams(k = 5, distance = "dtw", band = 4, lbPruning = true, coarsenFactor = 4))
         assertShape(df, shape)
         df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
@@ -319,22 +319,36 @@ class KnnSpec extends SparkTestBase {
   private def uses(df: org.apache.spark.sql.DataFrame, fn: String): Boolean =
     df.queryExecution.sparkPlan.exists(_.expressions.exists(_.exists(_.prettyName == fn)))
 
-  /** Runs `body` on `train` in one cascade shape: "fused" (the candidate
-    * node over the broadcast train side, which a small train side
-    * takes), "oversize" (the node over the broadcast TEST side: the
-    * checkpointed train side measures one byte over the cap, the small
-    * test side fits under it) or "cartesian" (broadcasts disabled).
+  /** `df` as a driver-local table. */
+  private def localCopy(df: org.apache.spark.sql.DataFrame) =
+    spark.createDataFrame(java.util.Arrays.asList(df.collect(): _*), df.schema)
+
+  /** Runs `body` on `train` and `test` in one cascade shape: "fused" (the
+    * candidate node over the broadcast train side, which a small train
+    * side takes; a local test side is repartitioned first, or it would
+    * take the "local" shape), "local" (the checkpointed train side and
+    * the test side as a local table: one task reads every train
+    * partition, nothing is broadcast),
+    * "oversize" (the node over the broadcast TEST side: the checkpointed
+    * train side measures one byte over the cap, the small test side fits
+    * under it) or "cartesian" (broadcasts disabled).
     */
-  private def inShape[T](shape: String, train: org.apache.spark.sql.DataFrame)(
-      body: org.apache.spark.sql.DataFrame => T): T = shape match {
-    case "fused" => body(train)
-    case "cartesian" => withoutBroadcast(body(train))
+  private def inShape[T](shape: String, train: org.apache.spark.sql.DataFrame,
+      test: org.apache.spark.sql.DataFrame)(
+      body: (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame) => T): T = shape match {
+    case "fused" => body(train, if (Knn.localRequest(test)) test.repartition(2) else test)
+    case "local" =>
+      // checkpointed, as a fitted classifier's train side is: measured,
+      // it fits whatever its source
+      val ck = train.localCheckpoint()
+      try body(ck, localCopy(test)) finally graft.core.Materialize.releaseCheckpoint(ck)
+    case "cartesian" => withoutBroadcast(body(train, test))
     case "oversize" =>
       val ck = train.localCheckpoint()
       val cap = s"${graft.core.Materialize.storageBytes(ck).get - 1}b"
       spark.conf.set("spark.graft.knn.broadcastFloor", cap)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", cap)
-      try body(ck)
+      try body(ck, test)
       finally {
         spark.conf.unset("spark.graft.knn.broadcastFloor")
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
@@ -344,12 +358,22 @@ class KnnSpec extends SparkTestBase {
 
   /** Asserts the cascade shape `df` plans (see [[inShape]]): the
     * candidate node and the side it broadcasts, or the cartesian
-    * fallback's heap aggregate.
+    * fallback's heap aggregate. The "local" shape plans no exchange at
+    * all and runs its candidate node as one task.
     */
   private def assertShape(df: org.apache.spark.sql.DataFrame, shape: String): Unit = {
     val sides = candidateBuildSides(df)
     val ok = shape match {
       case "fused" => sides.nonEmpty && sides.forall(_ == "train")
+      case "local" =>
+        val plan = df.queryExecution.executedPlan match {
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+          case p => p
+        }
+        sides == Seq("none") &&
+          !plan.exists(_.isInstanceOf[org.apache.spark.sql.execution.exchange.Exchange]) &&
+          plan.collect { case n: graft.operators.KnnCandidatesExec =>
+            n.execute().getNumPartitions } == Seq(1)
       case "oversize" => sides.nonEmpty && sides.forall(_ == "test")
       case "cartesian" => sides.isEmpty && uses(df, "graft_topk_ids") &&
         df.queryExecution.sparkPlan.exists(
@@ -368,12 +392,12 @@ class KnnSpec extends SparkTestBase {
     val exactNb = nbRows(Knn.neighbors(train, test, p))
     val exactNn = nnRows(Knn.classify1NN(train, test, p))
     val q = p.copy(lbPruning = true, candidateFactor = 1024)
-    inShape(shape, train) { tr =>
-      val nb = Knn.neighbors(tr, test, q)
+    inShape(shape, train, test) { (tr, te) =>
+      val nb = Knn.neighbors(tr, te, q)
       assertShape(nb, shape)
       assert(uses(nb, "graft_dtw_bounded"))
       assert(nbRows(nb) === exactNb, s"$shape neighbors $p")
-      assert(nnRows(Knn.classify1NN(tr, test, q)) === exactNn, s"$shape classify1NN $p")
+      assert(nnRows(Knn.classify1NN(tr, te, q)) === exactNn, s"$shape classify1NN $p")
     }
   }
 
@@ -390,7 +414,7 @@ class KnnSpec extends SparkTestBase {
     (199L, testData(0)._2.updated(3, Double.NaN)))
     .toDF("test_id", "test_series"))
 
-  for (shape <- Seq("fused", "oversize", "cartesian")) {
+  for (shape <- Seq("fused", "local", "oversize", "cartesian")) {
     test(s"bounded exact phase ($shape): k in {1, 5} equal the unpruned path bit for bit") {
       for (k <- Seq(1, 5); exclude <- Seq(true, false))
         assertBoundedExact(shape, boundTrain, boundTest,
@@ -438,7 +462,7 @@ class KnnSpec extends SparkTestBase {
     spark.conf.set("spark.sql.codegen.wholeStage", "false")
     spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
     try {
-      for (shape <- Seq("fused", "oversize", "cartesian"); k <- Seq(1, 5))
+      for (shape <- Seq("fused", "local", "oversize", "cartesian"); k <- Seq(1, 5))
         assertBoundedExact(shape, boundTrain, boundTest,
           KnnParams(k = k, distance = "dtw", band = 4, coarsenFactor = 4))
     } finally {
@@ -447,7 +471,7 @@ class KnnSpec extends SparkTestBase {
     }
   }
 
-  for (shape <- Seq("fused", "oversize"))
+  for (shape <- Seq("fused", "local", "oversize"))
     test(s"$shape plan: the bounded dist is projected directly over the candidate node") {
       // the running bound tightens only while a test's candidates stream
       // together in rank order, and knnbench reads the exact phase's
@@ -462,8 +486,8 @@ class KnnSpec extends SparkTestBase {
       }
       val p = KnnParams(k = 1, distance = "dtw", band = 4, lbPruning = true, coarsenFactor = 4)
       val fk = p.candidateFactor * p.k
-      inShape(shape, trainDf.repartition(3)) { tr =>
-        val df = Knn.classify1NN(tr, testDf, p)
+      inShape(shape, trainDf.repartition(3), testDf) { (tr, te) =>
+        val df = Knn.classify1NN(tr, te, p)
         df.collect()
         val all = nodes(df.queryExecution.executedPlan)
         val top = all.find(_.expressions.exists(_.exists(_.prettyName == "graft_dtw")))
@@ -473,9 +497,9 @@ class KnnSpec extends SparkTestBase {
         assert(top.exists(_.isInstanceOf[ProjectExec]) && node.nonEmpty &&
           all.exists { case w: WholeStageCodegenExec => w.exists(_ eq top.get); case _ => false },
           s"expected Project(graft_dtw_bounded) <- candidate node in one stage:\n${all.head}")
-        // train broadcast: fk per test; test broadcast: fk per test from
-        // each of the 3 train partitions (13 or 14 rows each)
-        val perTest = if (shape == "fused") fk else 3 * fk
+        // train broadcast and one task: fk per test; test broadcast: fk
+        // per test from each of the 3 train partitions (13 or 14 rows each)
+        val perTest = if (shape == "oversize") 3 * fk else fk
         assert(node.get.metrics("numOutputRows").value === testData.size * perTest)
       }
     }
@@ -500,10 +524,10 @@ class KnnSpec extends SparkTestBase {
   /** Neighbors and 1-NN rows of the pruned cascade in `shape`. */
   private def cascade(shape: String, train: org.apache.spark.sql.DataFrame,
       test: org.apache.spark.sql.DataFrame, q: KnnParams) =
-    inShape(shape, train) { tr =>
-      val nb = Knn.neighbors(tr, test, q)
+    inShape(shape, train, test) { (tr, te) =>
+      val nb = Knn.neighbors(tr, te, q)
       assertShape(nb, shape)
-      (nbRows(nb), nnRows(Knn.classify1NN(tr, test, q)))
+      (nbRows(nb), nnRows(Knn.classify1NN(tr, te, q)))
     }
 
   test("test broadcast: 5 train partitions, k in {1, 5}, nulls and NaNs equal the cartesian fallback and the exact path") {
@@ -518,8 +542,8 @@ class KnnSpec extends SparkTestBase {
           nnRows(Knn.classify1NN(tr5, test, q.copy(lbPruning = false))))), s"k=$k exact")
     }
     val q = KnnParams(distance = "dtw", band = 4, lbPruning = true)
-    val testChildren = boundTestSides.map(t => inShape("oversize", tr5) { tr =>
-      val plan = Knn.neighbors(tr, t, q).queryExecution.executedPlan match {
+    val testChildren = boundTestSides.map(t => inShape("oversize", tr5, t) { (tr, te) =>
+      val plan = Knn.neighbors(tr, te, q).queryExecution.executedPlan match {
         case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
         case p => p
       }
@@ -545,6 +569,8 @@ class KnnSpec extends SparkTestBase {
     val cart = cascade("cartesian", train, probe, q)
     assert(cart._2.map(_._2) === Seq(4.0), "the tie at rank fk goes to train_id 3")
     assert(cascade("oversize", train, probe, q) === cart)
+    // one task reads the five partitions in turn into one global heap
+    assert(cascade("local", train, probe, q) === cart)
   }
 
   test("test broadcast: a partition's best-DTW survivor outside the global top-fk cannot bound the others") {
@@ -591,12 +617,12 @@ class KnnSpec extends SparkTestBase {
       .toDF("test_id", "test_series")
     val q = KnnParams(k = 3, distance = "dtw", band = 4, coarsenFactor = 4,
       lbPruning = true, candidateFactor = 2)
-    def run(shape: String) = inShape(shape, dup) { tr =>
-      val nb = Knn.neighbors(tr, probe, q)
+    def run(shape: String) = inShape(shape, dup, probe) { (tr, te) =>
+      val nb = Knn.neighbors(tr, te, q)
       assertShape(nb, shape)
       (nb.select("test_id", "train_id", "rank", "label").collect()
         .map(r => (r.getLong(0), r.getLong(1), r.getInt(2), r.getDouble(3))).toSeq.sorted,
-        nnRows(Knn.classify1NN(tr, probe, q.copy(k = 1))))
+        nnRows(Knn.classify1NN(tr, te, q.copy(k = 1))))
     }
     val exact = Knn.neighbors(dup, probe, q.copy(lbPruning = false))
       .select("test_id", "train_id", "rank", "label").collect()
@@ -605,11 +631,110 @@ class KnnSpec extends SparkTestBase {
     assert(fused._1 === exact)
     assert(fused._1.filter(_._1 == 101L).take(2) === Seq((101L, 7L, 1, 1.0), (101L, 7L, 2, 9.0)))
     assert(run("oversize") === fused)
+    assert(run("local") === fused)
     // the fallback explodes candidate ids and joins them back by id, so
     // each selected id 7 meets both rows
     val cart = run("cartesian")
     assert(cart._1.filter(_._1 == 101L) ===
       Seq((101L, 7L, 1, 1.0), (101L, 7L, 2, 1.0), (101L, 7L, 3, 9.0)))
     assert(cart._2 === fused._2)
+  }
+
+  // ---- a local test side of at most 128 rows: one task, no exchange
+
+  /** The candidate node's output rows of `df`, after running it. */
+  private def candidateRows(df: org.apache.spark.sql.DataFrame): Long = {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    def nodes(p: SparkPlan): Seq[SparkPlan] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => q +: nodes(q.plan)
+      case o => o +: o.children.flatMap(nodes)
+    }
+    df.collect()
+    nodes(df.queryExecution.executedPlan).collect {
+      case n: graft.operators.KnnCandidatesExec => n.metrics("numOutputRows").value
+    }.sum
+  }
+
+  test("local test side: k in {1, 5}, nulls, NaNs and duplicates equal the train broadcast and the unpruned path; tests x fk exact rows; an oversize train keeps the per-partition merge") {
+    val tr5 = boundTrain.repartition(5)
+    for (k <- Seq(1, 5); exclude <- Seq(true, false); cf <- Seq(2, 1024)) {
+      val q = KnnParams(k = k, distance = "dtw", band = 4, coarsenFactor = 4,
+        lbPruning = true, candidateFactor = cf, excludeZeroDistance = exclude)
+      val local = cascade("local", tr5, boundTest, q)
+      assert(local === cascade("fused", tr5, boundTest, q), s"k=$k cf=$cf exclude=$exclude")
+      if (cf == 1024) assert(local ===
+        ((nbRows(Knn.neighbors(tr5, boundTest, q.copy(lbPruning = false))),
+          nnRows(Knn.classify1NN(tr5, boundTest, q.copy(lbPruning = false))))),
+        s"k=$k exclude=$exclude exact")
+    }
+    // the exact phase reads fk rows per test with a series (13 of 14),
+    // not fk per train partition
+    val q = KnnParams(k = 1, distance = "dtw", band = 4, coarsenFactor = 4,
+      lbPruning = true, candidateFactor = 2)
+    val lt = localCopy(boundTest)
+    assert(candidateRows(Knn.classify1NN(tr5, lt, q)) === 13 * 2)
+    assert(candidateRows(Knn.neighbors(tr5, lt, q.copy(k = 5))) === 13 * 10)
+    // past the cap the train side streams in its partitions, and one
+    // exchange on test_id merges their local top-fk
+    inShape("oversize", tr5, lt) { (tr, te) =>
+      val nb = Knn.neighbors(tr, te, q)
+      assertShape(nb, "oversize")
+      assert(candidateBuildSides(nb) === Seq("test"))
+      assert(candidateRows(Knn.classify1NN(tr, te, q)) === 5 * 13 * 2)
+    }
+  }
+
+  test("a local test side past the request bound is spread under the train broadcast") {
+    val q = KnnParams(k = 1, distance = "dtw", band = 4, coarsenFactor = 4,
+      lbPruning = true, candidateFactor = 2)
+    def probes(n: Int) = localCopy((0 until n)
+      .map(i => (i.toLong, testData(i % testData.length)._2)).toDF("test_id", "test_series"))
+    inShape("local", boundTrain, probes(1)) { (ck, _) =>
+      val (atBound, past) = (probes(128), probes(129))
+      assert(candidateBuildSides(Knn.classify1NN(ck, atBound, q)) === Seq("none"))
+      assert(candidateBuildSides(Knn.classify1NN(ck, past, q)) === Seq("train"))
+      assert(nnRows(Knn.classify1NN(ck, past, q)).filter(_._1 < 128L) ===
+        nnRows(Knn.classify1NN(ck, atBound, q)))
+    }
+  }
+
+  test("classify at k = 1 plans one min_by aggregate and equals the rank window and vote path on ties and duplicates") {
+    // train 1 and 2 tie on distance from the probe with different labels
+    // (the smaller train_id wins); 4 and 5 are one series under two ids
+    // and labels, at distance 0 from probe 11 (excluded or not) and tied
+    // for probe 12
+    val train = Seq((2L, Array(-1.0, 0.0), 0.0), (1L, Array(1.0, 0.0), 1.0),
+      (5L, Array(3.0, 0.0), 2.0), (4L, Array(3.0, 0.0), 3.0), (6L, Array(3.5, 0.0), 4.0),
+      (7L, null.asInstanceOf[Array[Double]], 5.0))
+      .toDF("train_id", "train_series", "label")
+    val probes = Seq((10L, Array(0.0, 0.0)), (11L, Array(3.0, 0.0)), (12L, Array(3.0, 0.5)),
+      (13L, null.asInstanceOf[Array[Double]]), (14L, Array(Double.NaN, 0.0)))
+      .toDF("test_id", "test_series")
+    for (distance <- Seq("euclidean", "dtw"); exclude <- Seq(true, false); prune <- Seq(false, true)
+        if !(prune && distance == "euclidean")) {
+      val p = KnnParams(k = 1, distance = distance, band = 4, excludeZeroDistance = exclude,
+        lbPruning = prune, coarsenFactor = 1, candidateFactor = 1024)
+      val oneNN = Knn.classify(train, probes, p)
+      assert(oneNN.queryExecution.sparkPlan.collect {
+        case w: org.apache.spark.sql.execution.window.WindowExec => w }.isEmpty)
+      val voted = Knn.sweepClassify(train, probes, p, Seq(1))
+        .select("test_id", "predicted_label")
+      def rows(df: org.apache.spark.sql.DataFrame) =
+        df.collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      assert(rows(oneNN) === rows(voted), s"$distance exclude=$exclude prune=$prune")
+      assert(rows(oneNN)(10L) === 1.0)
+      assert(rows(oneNN)(11L) === (if (exclude) 4.0 else 3.0))
+      assert(rows(oneNN)(12L) === 3.0)
+    }
+    // and on the fixture's series with its duplicates, nulls and NaNs
+    for (k1 <- Seq(KnnParams(k = 1, distance = "dtw", band = 4),
+        KnnParams(k = 1, distance = "dtw", band = 4, excludeZeroDistance = false))) {
+      val a = Knn.classify(boundTrain, boundTest, k1).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+      val b = Knn.sweepClassify(boundTrain, boundTest, k1, Seq(1)).collect()
+        .map(r => r.getLong(0) -> r.getDouble(2)).toMap
+      assert(a === b)
+    }
   }
 }

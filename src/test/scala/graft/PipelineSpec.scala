@@ -491,4 +491,161 @@ class PipelineSpec extends SparkTestBase {
     assert(rows(2L).isEmpty, "null-series row must survive with null prediction")
     model.release()
   }
+
+  // ---- a driver-local request: measured size, one task, broadcast join-back
+
+  /** 40 labelled series as the raw text `SeriesIngest.loadLabeledSeries`
+    * reads, and local requests that are train rows plus a small offset.
+    */
+  private def labeledText(): DataFrame = {
+    val x = (0 until 40).map(i => (0 until 16)
+      .map(t => f"${math.sin(t * 0.3 + i % 3) + i * 0.001}%.6f").mkString(" "))
+    val y = (0 until 40).map(i => (i % 3 + 1).toString)
+    graft.ingest.SeriesIngest.loadLabeledSeries(x.toDF("value"), y.toDF("value"))
+  }
+
+  private def request(rows: Seq[(java.lang.Long, Array[Double])]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows.map { case (i, a) =>
+      org.apache.spark.sql.Row(i, Option(a).map(_.toSeq).orNull) }: _*),
+      org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("id", org.apache.spark.sql.types.LongType),
+        org.apache.spark.sql.types.StructField("series",
+          org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))))
+
+  private def initialPlan(df: DataFrame) = df.queryExecution.executedPlan match {
+    case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
+    case p => p
+  }
+
+  private def series(i: Int): Array[Double] =
+    Array.tabulate(16)(t => math.sin(t * 0.3 + i % 3) + i * 0.001 + 1e-4)
+
+  test("a model fitted from loadLabeledSeries output measures as fitting: " +
+      "a local request runs as one candidate task, with no exchange") {
+    val model = new KnnClassifier().setK(1).setDistance("dtw").setBand(4)
+      .setLbPruning(true).setFeaturesCol("series").setIdCol("id").fit(labeledText())
+    try {
+      // the checkpoint carries the position join's size product, far
+      // past any broadcast cap; its measured size is a few KB
+      assert(model.train.queryExecution.optimizedPlan.stats.sizeInBytes > (BigInt(1) << 40))
+      val out = model.transform(request((0 until 4).map(i => (Long.box(i * 10L), series(i * 10)))))
+      assert(candidateBuildSides(out) === Seq("none"), initialPlan(out).toString)
+      assert(!initialPlan(out).exists(_.isInstanceOf[
+        org.apache.spark.sql.execution.exchange.ShuffleExchangeLike]), initialPlan(out).toString)
+      assert(out.collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap ===
+        (0 until 4).map(i => (i * 10L) -> (i * 10 % 3 + 1).toDouble).toMap)
+    } finally model.release()
+  }
+
+  test("a partially evicted persist falls back to the size estimate") {
+    // the frame the classifier checkpoints, twice: the complete
+    // measurement fits and the local test side takes one task; with one
+    // of 4 partitions evicted the persist under-measures, so the
+    // estimate (the join's size product) rules and the train side
+    // streams past the broadcast test side
+    val train = labeledText().select(col("row_id").as("train_id"),
+      col("series").as("train_series"), col("label")).repartition(4)
+    val full = train.localCheckpoint()
+    val partial = train.localCheckpoint()
+    val rdd = partial.queryExecution.analyzed.collectLeaves().collectFirst {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
+    }.get
+    org.apache.spark.storage.GraftBlocks.evict(rdd.id, 0)
+    val test = request(Seq((Long.box(1L), series(1)))).select(
+      col("id").as("test_id"), col("series").as("test_series"))
+    val p = KnnParams(distance = "dtw", band = 4, lbPruning = true)
+    try {
+      val info = spark.sparkContext.getRDDStorageInfo.find(_.id == rdd.id).get
+      assert(info.numCachedPartitions === 3 && info.numPartitions === 4)
+      assert(graft.core.Materialize.storage(partial).exists(!_._2))
+      assert(graft.core.Materialize.storage(full).exists(_._2))
+      assert(candidateBuildSides(Knn.classify(full, test, p)) === Seq("none"))
+      assert(candidateBuildSides(Knn.classify(partial, test, p)) === Seq("test"))
+    } finally {
+      graft.core.Materialize.releaseCheckpoint(full)
+      graft.core.Materialize.releaseCheckpoint(partial)
+    }
+  }
+
+  test("a join or an explode over complete persists falls back to the size estimate") {
+    // two complete checkpoints: 40 series, and 3 labels. Their cross join
+    // is a 120-row train side that measures as the two persists' sum,
+    // and an explode has as many rows as the arrays have elements
+    val ck = labeledText().select(col("row_id").as("train_id"), col("series").as("train_series"))
+      .localCheckpoint()
+    val labels = Seq(1.0, 2.0, 3.0).toDF("label").localCheckpoint()
+    val crossed = ck.crossJoin(labels)
+    val exploded = ck.select(col("train_id"), explode(col("train_series")).as("x"))
+    val test = request(Seq((Long.box(1L), series(1)))).select(
+      col("id").as("test_id"), col("series").as("test_series"))
+    val p = KnnParams(distance = "dtw", band = 4, lbPruning = true)
+    try {
+      for (df <- Seq(ck, labels)) assert(graft.core.Materialize.storage(df).exists(_._2))
+      for (df <- Seq(crossed, exploded)) assert(graft.core.Materialize.storage(df).exists(!_._2))
+      // a cap the measured sum fits and the estimate does not: the train
+      // side is past it, and the local test side is broadcast
+      val measured = graft.core.Materialize.storage(crossed).get._1
+      assert(BigInt(crossed.queryExecution.optimizedPlan.stats.sizeInBytes.toString) > measured)
+      spark.conf.set("spark.graft.knn.broadcastFloor", s"${measured}b")
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", s"${measured}b")
+      try assert(candidateBuildSides(Knn.classify(crossed, test, p)) === Seq("test"))
+      finally {
+        spark.conf.unset("spark.graft.knn.broadcastFloor")
+        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
+      }
+    } finally {
+      graft.core.Materialize.releaseCheckpoint(ck)
+      graft.core.Materialize.releaseCheckpoint(labels)
+    }
+  }
+
+  test("a local input joins predictions back by broadcast: every row, null " +
+      "series and null ids, column order and duplicate names kept; a " +
+      "Parquet input and a local input past the request bound keep the merge join") {
+    val model = new KnnClassifier().setK(1).setDistance("dtw").setBand(4)
+      .setLbPruning(true).setFeaturesCol("series").fit(labeledText())
+    def joinBack(df: DataFrame) = {
+      df.collect()
+      def flat(p: org.apache.spark.sql.execution.SparkPlan): Seq[org.apache.spark.sql.execution.SparkPlan] =
+        p.collect { case n => n } ++ p.collect {
+          case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => q.plan
+          case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.executedPlan
+        }.flatMap(flat)
+      flat(df.queryExecution.executedPlan).collect {
+        case j: org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+          if j.joinType == org.apache.spark.sql.catalyst.plans.LeftOuter &&
+            j.buildSide == org.apache.spark.sql.catalyst.optimizer.BuildRight => "broadcast"
+        case _: org.apache.spark.sql.execution.joins.SortMergeJoinExec => "merge"
+      }
+    }
+    try {
+      val input = request(Seq((Long.box(3L), series(3)), (Long.box(4L), null),
+        (null, series(5)), (Long.box(6L), series(6))))
+        .select(col("id"), lit("a").as("tag"), col("series"), lit("b").as("tag"))
+      val want = Seq((Some(3L), Some(1.0)), (Some(4L), None), (None, Some(3.0)), (Some(6L), Some(1.0)))
+      def rows(df: DataFrame) = df.collect().map(r =>
+        (Option(r.get(0)).map(_.asInstanceOf[Long]), Option(r.get(4)).map(_.asInstanceOf[Double]))).toSeq
+      // the internal row id and the caller's idCol: a null id is never
+      // matched, so it keeps its row with a null prediction
+      for ((m, nullId) <- Seq(model -> Some(3.0), model.copy(
+          org.apache.spark.ml.param.ParamMap.empty).setIdCol("id") -> None)) {
+        val out = m.transform(input)
+        assert(out.columns.toSeq === Seq("id", "tag", "series", "tag", "prediction"))
+        assert(rows(out).sortBy(_._1.getOrElse(-1L)) ===
+          want.map { case (i, l) => (i, if (i.isEmpty) nullId else l) }.sortBy(_._1.getOrElse(-1L)))
+        assert(joinBack(out) === Seq("broadcast"))
+      }
+      // a local input past the request bound keeps the merge join
+      val wide = request((0 until 129).map(i => (Long.box(i.toLong), series(i))))
+      assert(model.transform(wide).count() === 129)
+      assert(joinBack(model.transform(wide)) === Seq("merge"))
+      val dir = java.nio.file.Files.createTempDirectory("graft_knnc_parquet").toString
+      try {
+        input.select(col("id"), col("series")).write.mode("overwrite").parquet(dir)
+        val out = model.transform(spark.read.parquet(dir))
+        assert(out.count() === 4)
+        assert(joinBack(out) === Seq("merge"))
+      } finally rmTree(dir)
+    } finally model.release()
+  }
 }

@@ -59,7 +59,9 @@ abstract class SparkTestBase extends AnyFunSuite {
   }
 
   /** The side each KNN candidate node of `df` broadcasts, "train" or
-    * "test", read from the plan with its exchanges in place.
+    * "test", or "none" for the one-task orientation (a local test side
+    * and no train broadcast), read from the plan with its exchanges in
+    * place.
     */
   def candidateBuildSides(df: DataFrame): Seq[String] = {
     import org.apache.spark.sql.execution.LocalTableScanExec
@@ -68,10 +70,12 @@ abstract class SparkTestBase extends AnyFunSuite {
       case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec => a.initialPlan
       case p => p
     }
+    import graft.operators.KnnCandidates.{OneTask, TestBroadcast, TrainBroadcast}
     plan.collect { case n: graft.operators.KnnCandidatesExec =>
-      (n.left, n.right) match {
-        case (_: BroadcastExchangeExec | _: LocalTableScanExec, _) if n.score.nonEmpty => "test"
-        case (_, _: BroadcastExchangeExec) if n.score.isEmpty => "train"
+      (n.mode, n.left, n.right) match {
+        case (TestBroadcast, _: BroadcastExchangeExec | _: LocalTableScanExec, _) => "test"
+        case (OneTask, _: LocalTableScanExec, r) if !r.isInstanceOf[BroadcastExchangeExec] => "none"
+        case (TrainBroadcast, _, _: BroadcastExchangeExec) => "train"
         case _ => s"unexpected children of $n"
       }
     }
